@@ -484,6 +484,20 @@ def _bench_stream_state_panel(spark, sf_dir: str) -> float:
     )
 
 
+def _line_round(v: float, prec: int) -> float:
+    """A timing as printed on the stdout line at precision rung
+    ``prec`` — 0: all 2 dp; 1: >= 1 s at 1 dp; 2: >= 0.1 s at 1 dp.
+    The ladder (VERDICT r15 item 8): a blanket 1-dp round made a 10%
+    regression threshold trigger on the ±0.05 s rounding step of every
+    sub-0.6 s entry, so precision sheds from the LARGE
+    entries first (>= 1 s timings lose <5% meaning at 1 dp). Entries
+    under 0.1 s keep 2 dp at every rung: at 1 dp a 0.026 s timing
+    prints as 0.0, which reads as a dropped query."""
+    if v < 0.1 or prec == 0 or (prec == 1 and v < 1.0):
+        return round(v, 2)
+    return round(v, 1)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -694,24 +708,14 @@ def main() -> None:
     # keys metric/value/unit/queries/sf.
     line_steady = dict(steady)
     line_cal: list | None = [cal_start, cal_end]
-    # precision ladder (VERDICT r15 item 8): a blanket 1-dp round made
-    # the driver's 10% regression threshold trigger on the ±0.05 s
-    # rounding step of every sub-0.6 s entry. Shed precision from the
-    # LARGE entries first — ≥1 s timings lose <5% meaning at 1 dp —
-    # and keep sub-1 s entries at 2 dp until nothing else is left.
-    prec = 0  # 0: all 2 dp; 1: ≥1 s at 1 dp, rest 2 dp; 2: all 1 dp
-
-    def _q(v: float) -> float:
-        if prec == 0 or (prec == 1 and v < 1.0):
-            return round(v, 2)
-        return round(v, 1)
+    prec = 0  # the _line_round rung
 
     while True:
         payload = {
             "metric": "headline_queries_total",
             "value": total,
             "unit": "sec",
-            "queries": {n: _q(v) for n, v in timings.items()},
+            "queries": {n: _line_round(v, prec) for n, v in timings.items()},
             "steady": line_steady,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         }

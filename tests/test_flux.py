@@ -7640,6 +7640,73 @@ def test_compile_flux_stream_smoothing_arrival_contract_on_merged_series(
     assert len(got_vals) == len(vals) - (n - 1) < batch_n
 
 
+def test_compile_flux_stream_late_row_across_micro_batches(spark, tmp_path):
+    """The late-row rule ACROSS micro-batches: after day 1 drains, one
+    append lands a row timestamped before day 1's last point plus day
+    2. On the same checkpoint the late row emits nothing, and the two
+    drains together emit exactly the batch compiler's rows over the
+    same data WITHOUT that row. One NaN-skipping kind (kaufmansAMA)
+    and one null-keeping kind (movingAverage)."""
+    import datetime
+
+    def _rows(day, vals):
+        t0 = datetime.datetime(2024, 1, day)
+        return [
+            (t0 + datetime.timedelta(minutes=17 * i), f, v)
+            for i, pair in enumerate(zip(vals, vals[::-1]))
+            for f, v in (("click", pair[0]), ("error", pair[1]))
+        ]
+
+    def _write(src, rows, mode):
+        df = spark.createDataFrame(
+            rows, "t timestamp, f string, v double"
+        ).select(
+            F.col("t").alias("_time"), F.lit("events").alias("_measurement"),
+            F.col("f").alias("_field"), F.col("v").alias("_value"),
+            F.create_map().cast("map<string,string>").alias("tags"),
+        )
+        bkt.write_bucket(df, src, mode=mode)
+
+    day1 = _rows(1, [0.125, 1.5, 5.5, 2.25])  # click's last point 00:51
+    late = (datetime.datetime(2024, 1, 1, 0, 40), "click", 99.0)
+    day2 = _rows(2, [3.0, 7.25, 4.0])
+    for idx, (text, cols) in enumerate([
+        ('from(bucket: "b") |> kaufmansAMA(n: 2)', ("_value",)),
+        ('from(bucket: "b") |> movingAverage(n: 2)', ("_value", "moving_avg")),
+    ]):
+        src = str(tmp_path / f"late_src_{idx}")
+        ref = str(tmp_path / f"late_ref_{idx}")
+        _write(src, day1, "overwrite")
+        _write(ref, day1 + day2, "overwrite")
+        live = flux.compile_flux_stream(spark, text, {"b": src})
+        ck = str(tmp_path / f"ck_late_{idx}")
+
+        def drain():
+            rows: list = []
+            q = (
+                live.writeStream.foreachBatch(
+                    lambda df, _eid: rows.extend(df.collect())
+                )
+                .outputMode("append")
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(180)
+            return [(r["_field"], r["_time"], *[r[c] for c in cols]) for r in rows]
+
+        rows1 = drain()
+        _write(src, [late] + day2, "append")
+        rows2 = drain()
+        assert rows1 and rows2, text
+        assert all(r[1] != late[0] for r in rows2), text  # late: no emission
+        expected = sorted(
+            (r["_field"], r["_time"], *[r[c] for c in cols])
+            for r in flux.compile_flux(spark, text, {"b": ref}).collect()
+        )
+        assert sorted(rows1 + rows2) == expected, text
+
+
 def test_compile_flux_stream_timed_moving_average(spark, tmp_path):
     """Round 13: the windowed-emission timedMovingAverage(every:,
     period:) streams — upstream defines it as window(every:, period:)

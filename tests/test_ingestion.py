@@ -1193,3 +1193,34 @@ def test_drained_stream_state_partitions_and_conf_restore(spark):
     # the drained frame is partitioned by the sized state-store count,
     # never the session default
     assert _stream_state_partitions() >= 1
+
+
+def test_touched_dates_fall_back_when_any_file_lacks_a_date_dir(
+    spark, csv_dir, tmp_path
+):
+    """Rollup maintenance takes a micro-batch's touched days from its
+    input file paths. When only SOME files sit under ``_date=``
+    directories, the paths name only some of the batch's days, so the
+    derivation must fall back to scanning ``_date`` — refreshing the
+    path-named days alone would silently skip the rest."""
+    path = str(tmp_path / "bucket")
+    wide = gas_csv.ingest_wide(spark, csv_dir)
+    bkt.write_bucket(
+        bkt.to_long(
+            wide, "gas",
+            value_cols=list(gas_csv.VALUE_COLS),
+            field_labels=gas_csv.FIELD_LABELS,
+        ),
+        path,
+    )
+    bucket = bkt.read_bucket(spark, path)
+    bucket_days = ["2016-10-07", "2016-10-08", "2016-10-10"]
+    assert st._touched_dates(bucket) == bucket_days  # paths alone
+
+    # one more day in a parquet file outside any _date= directory
+    loose = str(tmp_path / "loose")
+    bucket.limit(1).withColumn(
+        "_date", F.lit("2016-10-12").cast(bucket.schema["_date"].dataType)
+    ).write.parquet(loose)
+    mixed = bucket.unionByName(spark.read.parquet(loose).select(*bucket.columns))
+    assert st._touched_dates(mixed) == bucket_days + ["2016-10-12"]

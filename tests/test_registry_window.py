@@ -258,3 +258,15 @@ def test_window_slots_all_carry_oracles():
         )
     ]
     assert not missing, missing
+
+
+def test_bench_line_keeps_sub_tenth_timings():
+    """The stdout line's precision ladder may shed digits from large
+    entries, but a nonzero timing under 0.1 s keeps 2 dp at every rung
+    — at 1 dp 0.026 s printed as 0.0, which reads as a dropped query."""
+    from bench import _line_round
+
+    for prec in (0, 1, 2):
+        assert _line_round(0.026, prec) == 0.03
+    assert [_line_round(0.56, p) for p in (0, 1, 2)] == [0.56, 0.56, 0.6]
+    assert [_line_round(1.234, p) for p in (0, 1, 2)] == [1.23, 1.2, 1.2]

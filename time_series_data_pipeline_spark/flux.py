@@ -2292,6 +2292,8 @@ def _compile_stream_single(
     the struct itself as the join key (Spark's multiple-stateful-
     operator window join propagates the event-time watermark through
     it)."""
+    from .streaming import stateful as sf
+
     stages = _split_stages(body)
     fr = _args(stages[0], "from")
     if "bucket" not in fr:
@@ -2314,7 +2316,7 @@ def _compile_stream_single(
     # must see the rewritten value, exactly as in batch)
     row_ops: list[tuple[str, Any]] = []
     agg = None  # (every_s, fn)
-    vs = None  # ("derivative", unit_s, nn) | ("difference", nn) | ...
+    vs = None  # the terminal keyed-state stage: a stateful.SeriesFold
     key_cols = list(natural_key)  # group() re-keys (round 12)
     # post-aggregate tail stages, in user order: ("filter", toks,
     # stage) alert thresholds / ("map", arith_src, stage) unit rewrites
@@ -2552,8 +2554,8 @@ def _compile_stream_single(
             # bounded-list state principle as kaufmansAMA — the
             # trailing n (or n+1) values per series as exact decimal
             # cents (n a dashboard constant), O(1) in the stream
-            # length (streaming/stateful.value_series_moving_average /
-            # value_series_trailing_indicator); emissions replay the
+            # length (streaming/stateful.moving_average_fold /
+            # trailing_indicator_fold); emissions replay the
             # batch frames' exact-decimal expressions bit-for-bit
             # under the arrival contract
             if agg is not None:
@@ -2573,12 +2575,11 @@ def _compile_stream_single(
                     f"{head}: unsupported args {sorted(set(a) - {'n'})}"
                 )
             vs = (
-                {
-                    "movingAverage": "ma_list",
-                    "chandeMomentumOscillator": "cmo_list",
-                    "kaufmansER": "ker_list",
-                }[head],
-                n,
+                sf.moving_average_fold(n)
+                if head == "movingAverage"
+                else sf.trailing_indicator_fold(
+                    "cmo" if head == "chandeMomentumOscillator" else "ker", n
+                )
             )
         elif head in ("stateDuration", "stateCount"):
             # round 14: the live ALERT-duration panel — run tracking
@@ -2587,7 +2588,7 @@ def _compile_stream_single(
             # compiles to a Catalyst column applied as a stateless
             # projection BEFORE the keyed-state stage, so Python only
             # ever folds booleans
-            # (streaming/stateful.value_series_state_tracking)
+            # (streaming/stateful.state_tracking_fold)
             if agg is not None:
                 raise FluxError(
                     f"{head}() after aggregateWindow is outside the "
@@ -2617,8 +2618,8 @@ def _compile_stream_single(
             if not m:
                 raise FluxError(f"malformed {head} fn: {a['fn']!r}")
             pred = _parse_pred(_tokenize_pred(m.group(1).strip()), params)
-            vs = (
-                "state_dur" if head == "stateDuration" else "state_cnt",
+            vs = sf.state_tracking_fold(
+                "duration" if head == "stateDuration" else "count",
                 pred,
                 sd_unit_s,
             )
@@ -2627,7 +2628,7 @@ def _compile_stream_single(
             # last_v) lag tuple per series; each arriving point emits
             # its raw row plus the aligned marks inside the gap,
             # interpolated with the batch kernel's pinned expression
-            # (streaming/stateful.value_series_interpolate). Emitted
+            # (streaming/stateful.interpolate_fold). Emitted
             # volume is gap/every — output, not state.
             if agg is not None:
                 raise FluxError(
@@ -2651,7 +2652,7 @@ def _compile_stream_single(
                     "interpolate.linear: unsupported args "
                     f"{sorted(set(a) - {'every'})}"
                 )
-            vs = ("interp_lag", _duration_seconds(ev))
+            vs = sf.interpolate_fold(_duration_seconds(ev))
         elif head == "elapsed":
             # round 14: the smallest O(1)-state member — one long of
             # state per series (the previous event time); same batch
@@ -2673,7 +2674,7 @@ def _compile_stream_single(
                 raise FluxError(
                     f"elapsed: unsupported args {sorted(set(a) - {'unit'})}"
                 )
-            vs = ("elapsed_lag", unit_s)
+            vs = sf.elapsed_fold(unit_s)
         elif head == "timedMovingAverage":
             # round 13: the WINDOWED-EMISSION form streams — upstream
             # defines timedMovingAverage(every:, period:) as
@@ -2748,7 +2749,7 @@ def _compile_stream_single(
         elif head in ("derivative", "difference", "cumulativeSum", "increase"):
             # round 12: the live counter-rate / delta / running-total
             # panel — the value-series transforms as KEYED STATE
-            # (streaming/stateful.value_series_transform): per-series
+            # (streaming/stateful.transform_fold): per-series
             # state is one (last time, last value, two accumulators)
             # tuple; append mode. ARRIVAL CONTRACT: strictly-increasing
             # event time per series across micro-batches (the
@@ -2783,7 +2784,7 @@ def _compile_stream_single(
                     raise FluxError(
                         f"derivative: unsupported args {sorted(extra)}"
                     )
-                vs = ("derivative", unit_s, nn)
+                vs = sf.transform_fold("derivative", unit_s, nn)
             elif head == "difference":
                 nn = (
                     _resolve(a["nonNegative"], params)
@@ -2799,14 +2800,16 @@ def _compile_stream_single(
                     raise FluxError(
                         f"difference: unsupported args {sorted(extra)}"
                     )
-                vs = ("difference", nn)
+                vs = sf.transform_fold("difference", non_negative=nn)
             else:
                 if a:
                     raise FluxError(
                         f"streaming {head} ships the default form only "
                         f"(got args {sorted(a)})"
                     )
-                vs = ("cumsum",) if head == "cumulativeSum" else ("increase",)
+                vs = sf.transform_fold(
+                    "cumsum" if head == "cumulativeSum" else "increase"
+                )
         elif head in (
             "exponentialMovingAverage", "exponentialTimeMovingAverage",
             "doubleEMA", "tripleEMA", "relativeStrengthIndex",
@@ -2815,7 +2818,7 @@ def _compile_stream_single(
             # round 13 (VERDICT r12 item 2): the SMOOTHED live panel —
             # every O(1)-STATE member of the smoothing/indicator
             # family as keyed state
-            # (streaming/stateful.value_series_smoothing): a FIXED
+            # (streaming/stateful.smoothing_fold): a FIXED
             # per-series tuple (three chained fold slots + one lag
             # value), append mode, the same pinned arrival contract as
             # the round-12 value-series transforms (strictly-increasing
@@ -2826,7 +2829,7 @@ def _compile_stream_single(
             # r13 item 4): kaufmansAMA joins — its efficiency-ratio
             # window is BOUNDED (the trailing n+1 raw values, n a
             # dashboard constant), so a bounded-list state tuple
-            # streams it (streaming/stateful.value_series_kama). The
+            # streams it (streaming/stateful.kama_fold). The
             # boundary restates as: state O(1) in the STREAM LENGTH
             # streams; holtWinters (the fit consumes slot-normalized
             # windows over the WHOLE range per emission) and the rank
@@ -2850,18 +2853,21 @@ def _compile_stream_single(
                         f"{head}: unsupported args {sorted(extra)}"
                     )
                 vs = (
-                    {
-                        "exponentialMovingAverage": "ema_smooth",
-                        "doubleEMA": "dema_smooth",
-                        "tripleEMA": "tema_smooth",
-                        "relativeStrengthIndex": "rsi_smooth",
-                        "tripleExponentialDerivative": "trix_smooth",
-                        "kaufmansAMA": "kama_smooth",
-                    }[head],
-                    n,
+                    sf.kama_fold(n)
+                    if head == "kaufmansAMA"
+                    else sf.smoothing_fold(
+                        {
+                            "exponentialMovingAverage": "ema",
+                            "doubleEMA": "dema",
+                            "tripleEMA": "tema",
+                            "relativeStrengthIndex": "rsi",
+                            "tripleExponentialDerivative": "trix",
+                        }[head],
+                        n,
+                    )
                 )
             else:
-                vs = ("etma_smooth", _parse_etma_n(a, params))
+                vs = sf.smoothing_fold("etma", _parse_etma_n(a, params))
         elif head == "fill":
             # round 14: fill(value:) joins the streaming tail — a
             # stateless coalesce over the append-mode output (the
@@ -2995,8 +3001,6 @@ def _compile_stream_single(
                 ),
             )
     if vs is not None:
-        from .streaming.stateful import value_series_transform
-
         if not key_cols:
             # the batch compiler's own rule: a key-less per-point
             # transform funnels every row through one state partition
@@ -3005,115 +3009,11 @@ def _compile_stream_single(
                 "transform is outside the subset: the per-point "
                 "transform would run in one state partition"
             )
-        frame = out.select(*key_cols, "_time", "_value").filter(
-            F.col("_value").isNotNull()
-        )
-        if vs[0] == "kama_smooth":
-            from .streaming.stateful import value_series_kama
-
-            return (
-                value_series_kama(
-                    frame, key_cols, vs[1],
-                    out_name=yield_name or "_value",
-                ),
-                None,
-            )
-        if vs[0] == "ma_list":
-            from .streaming.stateful import value_series_moving_average
-
-            # NO null prefilter (review r14): the batch movingAverage
-            # kernel is the one value-series transform where a
-            # null-valued record keeps its ROWS-frame slot and emits
-            # its own row — the stateful op handles null positions
-            return (
-                value_series_moving_average(
-                    out.select(*key_cols, "_time", "_value"),
-                    key_cols, vs[1],
-                    out_name=yield_name or "moving_avg",
-                ),
-                None,
-            )
-        if vs[0] in ("cmo_list", "ker_list"):
-            from .streaming.stateful import value_series_trailing_indicator
-
-            return (
-                value_series_trailing_indicator(
-                    frame, key_cols, vs[0][:3], vs[1],
-                    out_name=yield_name or "_value",
-                ),
-                None,
-            )
-        if vs[0] == "interp_lag":
-            from .streaming.stateful import value_series_interpolate
-
-            return (
-                value_series_interpolate(
-                    frame, key_cols, vs[1],
-                    out_name=yield_name or "_value",
-                ),
-                None,
-            )
-        if vs[0] == "elapsed_lag":
-            from .streaming.stateful import value_series_elapsed
-
-            return (
-                value_series_elapsed(
-                    frame, key_cols, vs[1],
-                    out_name=yield_name or "elapsed",
-                ),
-                None,
-            )
-        if vs[0] in ("state_dur", "state_cnt"):
-            from .streaming.stateful import value_series_state_tracking
-
-            # predicate evaluated on the FULL raw frame (it may
-            # reference promoted tags outside the series key), then
-            # narrowed — a stateless projection ahead of the keyed
-            # state. NO null prefilter (review r14): _state_runs is
-            # record-based — a null-valued row keeps its slot, its
-            # null predicate is its own run state
-            st_frame = (
-                out.withColumn("__state", vs[1])
-                .select(*key_cols, "_time", "_value", "__state")
-            )
-            kind = "duration" if vs[0] == "state_dur" else "count"
-            return (
-                value_series_state_tracking(
-                    st_frame, key_cols, kind, vs[2],
-                    out_name=yield_name
-                    or ("stateDuration" if kind == "duration"
-                        else "stateCount"),
-                ),
-                None,
-            )
-        if vs[0].endswith("_smooth"):
-            from .streaming.stateful import value_series_smoothing
-
-            return (
-                value_series_smoothing(
-                    frame, key_cols,
-                    vs[0][: -len("_smooth")],
-                    vs[1], out_name=yield_name or "_value",
-                ),
-                None,
-            )
-        if vs[0] == "derivative":
-            return (
-                value_series_transform(
-                    frame, key_cols, "derivative",
-                    unit_s=vs[1], non_negative=vs[2],
-                    out_name=yield_name or "derivative",
-                ),
-                None,
-            )
-        nn = vs[1] if vs[0] == "difference" else False
-        return (
-            value_series_transform(
-                frame, key_cols, vs[0], non_negative=nn,
-                out_name=yield_name or "_value",
-            ),
-            None,
-        )
+        # the fold owns its input: the null prefilter (or, for the
+        # record-keeping kinds, none) and any predicate column, which
+        # is evaluated on the FULL raw frame (it may reference
+        # promoted tags outside the series key)
+        return sf._fold_series(out, key_cols, vs, yield_name), None
     if agg is None:
         # the raw live-table panel: the filtered record stream
         return out.select(*key_cols, "_time", "_value"), None

@@ -530,17 +530,6 @@ def asof_error_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: v3: field-clustered files + stats manifest (file-level skipping).
 _EVENT_BUCKET_VERSION = "layout-v3b"
 
-#: Per-session DataFrame handles for materialized bucket stores. A
-#: production deployment registers the bucket as a metastore TABLE once,
-#: and every query plans against its cached file index; re-calling
-#: ``spark.read.parquet`` per query instead re-lists every day-partition
-#: directory and re-reads footers — measured ~0.3 s/query of pure
-#: driver-side overhead at 30 partitions, and growing with partition
-#: count. NOTE: this caches the PLAN METADATA (pruned file list), not
-#: data — executors still read parquet on every run.
-_PRUNED_SCAN_DF: dict[tuple, DataFrame] = {}
-
-
 def _event_bucket_path(spark: SparkSession, sf_dir: str) -> str:
     """Events materialized ONCE per corpus version into the bucket
     layout (partitionBy(_measurement, _date) + field-clustered,
@@ -611,22 +600,20 @@ def window_5m_mean_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 6: served through ``scan_bucket`` — the stats manifest drops
     the other fields' files from the read entirely (field-clustered
     layout), so the plan's file list is ~1/|fields| of the store
-    before any footer is opened. The pruned frame is cached per
-    (session, store, predicate) like the bucket handle itself: the
-    prune decision is plan metadata, re-deriving it per run would be
-    pure driver overhead (same rationale as ``_BUCKET_DF``)."""
+    before any footer is opened. The prune verdict and the pruned
+    relation are reused per session by ``sources.manifest`` (keyed on
+    the manifest generation and the exact file list), so a repeat call
+    re-derives neither."""
     path = _event_bucket_path(spark, sf_dir)
-    key = (id(spark), path, "click", "2024-01-08", "2024-01-15")
-    if key not in _PRUNED_SCAN_DF:
-        _PRUNED_SCAN_DF[key] = bkt.scan_bucket(
-            spark,
-            path,
-            measurement="events",
-            field="click",
-            start="2024-01-08 00:00:00",
-            stop="2024-01-15 00:00:00",
-        )
-    return bkt.window_mean(_PRUNED_SCAN_DF[key], "5 minutes")
+    scanned = bkt.scan_bucket(
+        spark,
+        path,
+        measurement="events",
+        field="click",
+        start="2024-01-08 00:00:00",
+        stop="2024-01-15 00:00:00",
+    )
+    return bkt.window_mean(scanned, "5 minutes")
 
 
 @query(
@@ -6461,7 +6448,7 @@ def stream_moving_avg_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL live path end to end per invocation: ``compile_flux_stream``
     compiles the dashboard text onto a file-arrival stream over the
     bucket store, the applyInPandasWithState kernel
-    (streaming/stateful.value_series_moving_average — bounded
+    (streaming/stateful.moving_average_fold — bounded
     trailing-6 cents list per series, O(1) state in the stream
     length) folds every record, and a trigger(availableNow) drain to
     a memory sink captures the emitted frame, which is returned for

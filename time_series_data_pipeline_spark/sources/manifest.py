@@ -582,14 +582,16 @@ def _current_generation(manifest_path: str) -> str | None:
         return None
 
 
-#: (session id, manifest realpath, generation, constraints) →
+#: (session, manifest realpath, generation, constraints) →
 #: (known_rel, excluded). The manifest evaluation is a pure function of
 #: the committed generation + the constraints, so the atomic-publish
 #: nonce is a sound cache key (the Delta/Iceberg snapshot-cache
 #: pattern): a republish changes the nonce and misses. Bounded FIFO;
 #: the staleness union over the LIVE file listing is NOT cached — it
 #: is recomputed per call, so appends/compactions between manifest
-#: refreshes stay visible.
+#: refreshes stay visible. The session OBJECT anchors the key, as in
+#: ``_RELATION_CACHE`` below: an ``id(spark)`` of a stopped, collected
+#: session can be handed to a new one.
 _PRUNE_CACHE: dict[tuple, tuple[frozenset, frozenset]] = {}
 _PRUNE_CACHE_MAX = 64
 _PRUNE_CACHE_LOCK = threading.Lock()
@@ -642,7 +644,7 @@ def prune_files(
     cache_key = None
     if gen is not None:
         cache_key = (
-            id(spark),
+            spark,
             os.path.realpath(manifest_path),
             gen,
             tuple(sorted((c, repr(b)) for c, b in constraints.items())),

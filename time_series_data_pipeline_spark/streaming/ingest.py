@@ -25,6 +25,8 @@ once the watermark passes window end — independent of total history.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -186,6 +188,27 @@ def _recent_bucket_dates(bucket_path: str, n_days: int) -> list[str]:
     return sorted(d for d in dates if d >= cutoff)
 
 
+_DATE_DIR = re.compile(r"/_date=([^/]+)/")
+
+
+def _touched_dates(batch_df: DataFrame) -> list[str]:
+    """The ``_date`` values a micro-batch carries, from its FILE LIST:
+    every bucket file lives under a ``_date=<day>`` directory, so the
+    day set is pure metadata — a ``select("_date").distinct()`` runs a
+    full data pass over the batch's rows (millions on a backfill tick)
+    to recover a handful of values the source already knows. Falls
+    back to that scan when ANY input file sits outside a ``_date=``
+    directory, or the plan exposes no file paths (a non-file frame):
+    the paths would then name only some of the batch's days, and a
+    refresh of those alone silently skips the rest."""
+    matches = [_DATE_DIR.search(f) for f in batch_df.inputFiles()]
+    if matches and all(matches):
+        return sorted({m.group(1) for m in matches})
+    return sorted(
+        str(r["_date"]) for r in batch_df.select("_date").distinct().collect()
+    )
+
+
 def start_rollup_maintenance(
     spark,
     bucket_path: str,
@@ -249,29 +272,7 @@ def start_rollup_maintenance(
     )
 
     def _refresh(batch_df, epoch_id: int) -> None:
-        # Touched dates from the micro-batch's FILE LIST: every bucket
-        # file lives under a _date=<day> directory, so the day set is
-        # pure metadata — the previous select("_date").distinct() ran
-        # a full data pass over the batch's rows (millions on a
-        # backfill tick) to recover a handful of values the source
-        # already knows (guide §1.2: don't compute what you throw
-        # away). Falls back to the scan when the plan exposes no file
-        # paths (e.g. a non-file batch frame).
-        import re as _re
-
-        dates = sorted(
-            {
-                m.group(1)
-                for f in batch_df.inputFiles()
-                for m in [_re.search(r"/_date=([^/]+)/", f)]
-                if m
-            }
-        )
-        if not dates:
-            dates = [
-                str(r["_date"])
-                for r in batch_df.select("_date").distinct().collect()
-            ]
+        dates = _touched_dates(batch_df)
         if dates:
             bkt.refresh_hourly_rollup(
                 batch_df.sparkSession, bucket_path, rollup_path, dates

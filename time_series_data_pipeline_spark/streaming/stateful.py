@@ -1,28 +1,84 @@
-"""Custom stateful streaming operator (SURVEY.md §2.7 ST5).
+"""Keyed-state streaming operators (SURVEY.md §2.7 ST5).
 
 The reference's only state is its processed-file set (ETL.py:50); Spark
 gives arbitrary keyed state via ``applyInPandasWithState`` — Arrow
 batches in, explicit per-key state, exactly-once through the
-checkpoint. The operator here maintains running (count, sum, min, max)
-per key across micro-batches and emits the updated totals every batch —
-the "continuous aggregate" a dashboard reads without rescanning
-history.
+checkpoint. Two operators use it here.
 
-Scale: state is O(#distinct keys) × 32 bytes, partitioned by key across
-executors by the state store; each micro-batch shuffles only the new
-rows. This is the pattern for any custom accumulator Spark's built-in
-windows can't express (EWMA, per-entity CUSUM drift, dedup sets with
-TTL, ...).
+``running_stats`` keeps running (count, sum, min, max) per key and
+emits the updated totals every batch (update mode) — the "continuous
+aggregate" a dashboard reads without rescanning history. State is
+O(#distinct keys) × 32 bytes; each micro-batch shuffles only new rows.
+
+``_fold_series`` is the ONE operator behind every live per-series panel
+``flux.compile_flux_stream`` runs: derivative / difference /
+cumulativeSum / increase, the EMA family, kaufmansAMA, movingAverage,
+chandeMomentumOscillator / kaufmansER, stateDuration / stateCount,
+interpolate.linear and elapsed. Each kind is a small ``SeriesFold``
+spec; ``_fold_series`` owns everything else, with this contract:
+
+* ARRIVAL CONTRACT: event time is strictly increasing per series
+  ACROSS micro-batches — the reference's unit of arrival is a whole,
+  ordered day file, so its ingest satisfies this by construction.
+  Within a batch, rows fold in the engine's table order (_time,
+  _value), a stable sort.
+* LATE ROWS: a row at or before the series' last accepted timestamp
+  (``t_us <= last_t``) is dropped and emits nothing — a tie inside a
+  batch and a row older than an earlier batch alike. The batch
+  compiler on the store is the replay path for late or duplicate data.
+* NULL POLICIES: by default null ``_value`` rows are filtered before
+  the keyed state and a NaN row is skipped like a null (the shared
+  null policy). ``keep_nulls`` kinds (movingAverage, stateDuration /
+  stateCount) see every RECORD instead, a null one as ``v = NaN``:
+  their batch kernels have no null prefilter, so a null row holds a
+  frame slot or a run state and emits its own row.
+* STATE: the state schema's first field is always ``last_t long``,
+  which ``_fold_series`` restores and persists. The other fields reach the
+  spec as a dict ``acc`` keyed by their schema names (arrays as
+  lists); the optional ``load`` / ``save`` hooks turn them into a
+  richer working form (a deque, running sums) and back. State is O(1)
+  in the stream length — a fixed tuple, or a list bounded by a
+  dashboard constant n — and never times out.
+* STEP: ``step(acc, emit, t_us, v, prev_t, *extra)`` folds ONE
+  accepted row: ``t_us`` is its event time in epoch µs, ``v`` the
+  value as a float, ``prev_t`` the previous accepted row's µs (None
+  for the series' first row) and ``extra`` the row's values of the
+  spec's extra input columns. It updates ``acc`` in place and calls
+  ``emit((time_us, *fields))`` zero or more times, once per output
+  row.
+* OUTPUT: append mode, ``key_cols + [_time] + fields``; each field is
+  typed from its Spark type as a nullable pandas array, so a None is a
+  true NULL through Arrow. The last field takes the pipeline's yield
+  name.
+
+NUMERIC PARITY with the batch compiler is bit-for-bit (pinned by the
+streaming==batch tests): each kind replays its batch kernel's own
+expression tree, and exact decimal(18,2) arithmetic replays as integer
+cents (``_cents``). Each kind's notes say how.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections import deque
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass
+from itertools import pairwise
 from typing import Any
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 OUTPUT_SCHEMA = "key string, n long, total double, vmin double, vmax double"
 STATE_SCHEMA = "n long, total double, vmin double, vmax double"
@@ -70,36 +126,110 @@ def running_stats(stream: DataFrame, key_col: str, value_col: str) -> DataFrame:
     )
 
 
-# -- streaming value-series transforms (round 12) ----------------------
-#
-# The live counter-rate / delta / running-total panel: Flux's
-# value-series transforms (derivative / difference / cumulativeSum /
-# increase) over a record STREAM, as keyed state via
-# applyInPandasWithState — per-series state is one (last event time,
-# last value, two integer accumulators) tuple, O(#series) total.
-#
-# ARRIVAL CONTRACT (pinned; the compiler's docstring repeats it): event
-# time must be strictly increasing per series ACROSS micro-batches —
-# the reference's unit of arrival is a whole, ordered day file, so its
-# ingest satisfies this by construction. A row at or before the
-# series' last seen timestamp is LATE and is dropped (the batch
-# compiler on the store is the replay path for late/duplicate data).
-# Within a batch, rows fold in the engine's table order (_time,
-# _value).
-#
-# NUMERIC PARITY with the batch compiler (bit-for-bit, pinned by the
-# streaming==batch test):
-# * derivative is float64 end to end — exactly the batch expression
-#   tree (delta = v − prev or the nonNegative reset rule; denom =
-#   Δt_us / (unit_s · 1e6); one division).
-# * difference / cumulativeSum / increase run the batch path's EXACT
-#   decimal(18,2) arithmetic as integer cents: the value quantizes via
-#   shortest-repr + HALF_UP (the same rule as Spark's double→decimal
-#   cast), deltas/sums stay integers, and the one cents/100.0 division
-#   per emitted row is the decimal→double cast's correctly-rounded
-#   result.
+# -- the keyed fold ----------------------------------------------------
 
-_VS_STATE = "last_t long, last_v double, a long, b long"
+
+@dataclass(frozen=True)
+class SeriesFold:
+    """One per-series streaming kind for ``_fold_series``; the module
+    docstring states the contract ``step`` keeps."""
+
+    state: str  # stateStructType; the first field is ``last_t long``
+    init: tuple  # the state of a series with no rows yet
+    fields: tuple[tuple[str, DataType], ...]  # output after key + _time
+    step: Callable[..., None]
+    keep_nulls: bool = False
+    extra: tuple[tuple[str, Column], ...] = ()  # (name, expr) inputs
+    load: Callable[[dict], None] | None = None
+    save: Callable[[dict], None] | None = None
+
+
+# state fields as the Python types the state serializer takes
+_STATE_TYPES: dict[str, Callable[[Any], Any]] = {
+    "long": int,
+    "double": float,
+    "array<long>": lambda xs: [int(x) for x in xs],
+    "array<double>": lambda xs: [float(x) for x in xs],
+}
+_PANDAS_DTYPES = {DoubleType: "Float64", LongType: "Int64", BooleanType: "boolean"}
+
+
+def _fold_series(
+    stream: DataFrame,
+    key_cols: list[str],
+    spec: SeriesFold,
+    out_name: str | None = None,
+) -> DataFrame:
+    """Run ``spec`` per series (``key_cols``) over ``stream``, which
+    carries ``key_cols + [_time, _value]`` plus whatever the spec's
+    extra columns read. ``out_name`` renames the last output field."""
+    extra_cols = [c for c, _ in spec.extra]
+    for c, expr in spec.extra:
+        stream = stream.withColumn(c, expr)
+    narrowed = stream.select(*key_cols, "_time", "_value", *extra_cols)
+    if not spec.keep_nulls:
+        narrowed = narrowed.filter(F.col("_value").isNotNull())
+    fields = list(spec.fields)
+    if out_name:
+        fields[-1] = (out_name, fields[-1][1])
+    schema = narrowed.schema
+    out_schema = StructType(
+        [schema[k] for k in key_cols]
+        + [schema["_time"]]
+        + [StructField(name, dtype) for name, dtype in fields]
+    )
+    names = [f.name for f in out_schema.fields]
+    dtypes = [_PANDAS_DTYPES[type(dtype)] for _, dtype in fields]
+    slots = [
+        (f.split()[0], _STATE_TYPES[f.split()[1]])
+        for f in spec.state.split(", ")
+    ]
+    init, step, load, save = spec.init, spec.step, spec.load, spec.save
+    skip_nan = not spec.keep_nulls
+
+    def _fn(key, pdfs, state):
+        acc = {
+            name: conv(x)
+            for (name, conv), x in zip(
+                slots, state.get if state.exists else init
+            )
+        }
+        last_t, seen = acc["last_t"], state.exists
+        if load is not None:
+            load(acc)
+        pdf = pd.concat(list(pdfs))
+        if len(pdf):
+            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
+        rows: list[tuple] = []
+        emit = rows.append
+        t_us_arr = pdf["_time"].to_numpy().astype("datetime64[us]").astype("int64")
+        extras = [pdf[c].to_numpy(dtype=object) for c in extra_cols]
+        for t_us, v, *x in zip(t_us_arr, pdf["_value"].to_numpy(), *extras):
+            v, t_us = float(v), int(t_us)
+            if skip_nan and math.isnan(v):
+                continue  # NaN ≡ null under the shared policy
+            if seen and t_us <= last_t:
+                continue  # LATE — outside the arrival contract
+            step(acc, emit, t_us, v, last_t if seen else None, *x)
+            last_t, seen = t_us, True
+        acc["last_t"] = last_t
+        if save is not None:
+            save(acc)
+        state.update(tuple(conv(acc[name]) for name, conv in slots))
+        out = list(zip(*rows)) if rows else [()] * (1 + len(fields))
+        cols = {k: [key[i]] * len(rows) for i, k in enumerate(key_cols)}
+        cols["_time"] = np.array(out[0], dtype="int64").astype("datetime64[us]")
+        for (name, _), dtype, col in zip(fields, dtypes, out[1:]):
+            cols[name] = pd.array(list(col), dtype=dtype)
+        yield pd.DataFrame(cols, columns=names)
+
+    return narrowed.groupBy(*key_cols).applyInPandasWithState(
+        _fn,
+        outputStructType=out_schema,
+        stateStructType=spec.state,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def _cents(v: float) -> int:
@@ -117,139 +247,69 @@ def _cents(v: float) -> int:
     )
 
 
-def value_series_transform(
-    stream: DataFrame,
-    key_cols: list[str],
-    kind: str,
-    unit_s: int = 1,
-    non_negative: bool = False,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Per-series streaming form of the Flux value-series transforms.
+_DOUBLE = DoubleType()
+_VALUE = (("_value", _DOUBLE),)
 
-    ``stream`` carries ``key_cols + [_time, _value]`` (null ``_value``
-    rows must already be filtered — the shared null policy). Output:
-    ``key_cols + [_time, _value]`` with ``_value`` rewritten
-    (difference/cumulativeSum/increase), or ``key_cols + [_time,
-    _value, <out_name>]`` for derivative (the batch column shape).
-    Append output mode; state never times out (one tuple per series).
-    """
-    import math
+# -- value-series transforms (round 12) ----------------------------------
 
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField,
-        StructType,
-    )
 
-    if kind not in ("derivative", "difference", "cumsum", "increase"):
-        raise ValueError(f"unknown value-series transform {kind!r}")
-    name = out_name or ("derivative" if kind == "derivative" else "_value")
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    if kind == "derivative":
-        out_schema = StructType(
-            base
-            + time_f
-            + [
-                StructField("_value", DoubleType()),
-                StructField(name, DoubleType()),
-            ]
-        )
-    else:
-        out_schema = StructType(base + time_f + [StructField(name, DoubleType())])
+def transform_fold(
+    kind: str, unit_s: int = 1, non_negative: bool = False
+) -> SeriesFold:
+    """derivative / difference / cumulativeSum (``cumsum``) / increase:
+    one (last value, two integer accumulators) tuple per series.
+
+    NUMERIC PARITY: derivative is float64 end to end — exactly the
+    batch expression tree (delta = v − prev or the nonNegative reset
+    rule; denom = Δt_us / (unit_s · 1e6); one division); it keeps the
+    raw ``_value`` beside the named rate, the batch shape.
+    difference / cumulativeSum / increase run the batch path's EXACT
+    decimal(18,2) arithmetic as integer cents: the value quantizes via
+    ``_cents``, deltas/sums stay integers, and the one cents/100.0
+    division per emitted row is the decimal→double cast's
+    correctly-rounded result; ``_value`` is rewritten."""
     unit_us = unit_s * 1_000_000.0
 
-    def _fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.exists:
-            last_t, last_v, a, b = state.get
-            seen = True
-        else:
-            last_t, last_v, a, b = 0, 0.0, 0, 0
-            seen = False
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, v_out, x_out = [], [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        vals = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, vals):
-            v = float(v)
-            if math.isnan(v):
-                continue  # NaN ≡ null under the shared policy
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            if kind == "derivative":
-                if seen:
-                    delta = (
-                        (v - last_v if v >= last_v else v)
-                        if non_negative
-                        else v - last_v
-                    )
-                    denom = (t_us - last_t) / unit_us
-                    ts_out.append(t)
-                    v_out.append(v)
-                    x_out.append(delta / denom)
-            elif kind == "difference":
-                c = _cents(v)
-                if seen:
-                    d = (
-                        (c - a if c >= a else c)
-                        if non_negative
-                        else c - a
-                    )
-                    ts_out.append(t)
-                    v_out.append(d / 100.0)
-                a = c
-            elif kind == "cumsum":
-                b += _cents(v)
-                ts_out.append(t)
-                v_out.append(b / 100.0)
-            else:  # increase: reset-aware delta running sum, first row 0
-                c = _cents(v)
-                if seen:
-                    b += c - a if c >= a else c
-                a = c
-                ts_out.append(t)
-                v_out.append(b / 100.0)
-            last_t, last_v, seen = int(t_us), v, True
-        state.update((int(last_t), float(last_v), int(a), int(b)))
-        cols = {k: [key[i]] * len(ts_out) for i, k in enumerate(key_cols)}
-        cols["_time"] = ts_out
+    def step(acc, emit, t_us, v, prev_t):
         if kind == "derivative":
-            cols["_value"] = v_out
-            cols[name] = x_out
+            if prev_t is not None:
+                lv = acc["last_v"]
+                delta = (v - lv if v >= lv else v) if non_negative else v - lv
+                emit((t_us, v, delta / ((t_us - prev_t) / unit_us)))
+        elif kind == "cumsum":
+            acc["b"] += _cents(v)
+            emit((t_us, acc["b"] / 100.0))
         else:
-            cols[name] = v_out
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
+            c, a = _cents(v), acc["a"]
+            if kind == "difference":
+                if prev_t is not None:
+                    d = (c - a if c >= a else c) if non_negative else c - a
+                    emit((t_us, d / 100.0))
+            else:  # increase: reset-aware delta running sum, first row 0
+                if prev_t is not None:
+                    acc["b"] += c - a if c >= a else c
+                emit((t_us, acc["b"] / 100.0))
+            acc["a"] = c
+        acc["last_v"] = v
 
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_VS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fields = (
+        _VALUE + (("derivative", _DOUBLE),) if kind == "derivative" else _VALUE
     )
-# -- streaming EMA-class smoothing (round 13) --------------------------
+    return SeriesFold(
+        "last_t long, last_v double, a long, b long", (0, 0.0, 0, 0),
+        fields, step,
+    )
+
+
+# -- EMA-class smoothing (round 13) --------------------------------------
 #
-# The smoothed live panel (VERDICT r12 item 2): every O(1)-STATE
-# member of Flux's smoothing/indicator family over a record STREAM —
+# Every O(1)-STATE member of Flux's smoothing/indicator family —
 # exponentialMovingAverage, exponentialTimeMovingAverage, doubleEMA,
-# tripleEMA, relativeStrengthIndex, tripleExponentialDerivative — the
-# same keyed-state pattern as value_series_transform. The state is a
-# FIXED tuple per series (three (acc, warm, cnt) fold slots + a lag
-# value). Round 14 extends the boundary to any state O(1) in the
-# STREAM LENGTH: kaufmansAMA streams below on a bounded n+1-value
-# list (value_series_kama); holtWinters (whole-range slot-window fit
-# per emission) and the rank aggregates (full value multisets) stay
-# batch-only. Same pinned ARRIVAL CONTRACT (strictly-increasing
-# per-series event time across micro-batches; late rows drop; the
-# batch compiler on the store is the replay path), and the NUMERIC
-# PARITY discipline is the batch kernels' own expression trees
+# tripleEMA, relativeStrengthIndex, tripleExponentialDerivative — on a
+# FIXED tuple per series. kaufmansAMA streams on a bounded n+1-value
+# list (kama_fold); holtWinters (whole-range slot-window fit per
+# emission) and the rank aggregates (full value multisets) stay
+# batch-only. NUMERIC PARITY is the batch kernels' own expression trees
 # verbatim (operators/timeseries.py flux_ema / flux_etma /
 # flux_ema_chain / flux_rsi / flux_trix):
 # * every EMA fold: seed = left-to-right float64 sum of the first n
@@ -307,766 +367,123 @@ def _ema_fold_step(
     return out
 
 
-def value_series_smoothing(
-    stream: DataFrame,
-    key_cols: list[str],
-    kind: str,
-    n: int,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming EMA-class smoothing per series. ``kind`` is one of
-    ``ema`` / ``dema`` / ``tema`` / ``rsi`` / ``trix`` (``n`` = point
-    count >= 1) or ``etma`` (``n`` = decay duration in integer µs).
-    Input carries ``key_cols + [_time, _value]`` with null ``_value``
-    already filtered; output is ``key_cols + [_time, _value]`` with
-    ``_value`` rewritten to the smoothed/indicator series (the batch
-    kernels' column shape; trix emits NULL on a zero previous e3).
-    Append mode; one fixed-size state tuple per series, never timed
-    out."""
-    import math
+def _load_slots(acc: dict) -> None:
+    acc["slots"] = [[acc[f"a{i}"], acc[f"w{i}"], acc[f"c{i}"]] for i in (1, 2, 3)]
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    if kind not in ("ema", "etma", "dema", "tema", "rsi", "trix"):
-        raise ValueError(f"unknown smoothing kind {kind!r}")
-    name = out_name or "_value"
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(base + time_f + [StructField(name, DoubleType())])
+def _save_slots(acc: dict) -> None:
+    for i, (a, w, c) in enumerate(acc.pop("slots"), 1):
+        acc[f"a{i}"], acc[f"w{i}"], acc[f"c{i}"] = a, w, c
+
+
+def smoothing_fold(kind: str, n: int) -> SeriesFold:
+    """``ema`` / ``dema`` / ``tema`` / ``rsi`` / ``trix`` (``n`` = point
+    count >= 1) or ``etma`` (``n`` = decay duration in integer µs);
+    ``_value`` is rewritten to the smoothed/indicator series (trix
+    emits NULL on a zero previous e3)."""
     n = int(n)
-    # ema-fold constants (unused by etma/rsi, bound so the closure
-    # pickles)
     k = 2.0 / (n + 1.0)
     omk = 1.0 - k
-    levels = {"ema": 1, "etma": 1, "dema": 2, "tema": 3, "trix": 3}.get(
-        kind, 0
-    )
+    levels = {"ema": 1, "dema": 2, "tema": 3, "trix": 3}.get(kind, 0)
 
-    def _fn(key, pdfs, state):
-        if state.exists:
-            (last_t, a1, w1, c1, a2, w2, c2, a3, w3, c3,
-             prev, seen_prev) = state.get
-            seen = True
-        else:
-            last_t, prev, seen_prev = 0, 0.0, 0
-            a1 = w1 = a2 = w2 = a3 = w3 = 0.0
-            c1 = c2 = c3 = 0
-            seen = False
-        slots = [[a1, w1, c1], [a2, w2, c2], [a3, w3, c3]]
-
-        def _fold_step(i: int, x: float):
-            # the shared incremental batch-fold step (module level for
-            # the hypothesis parity pin)
-            return _ema_fold_step(slots[i], x, n, k, omk)
-
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, v_out = [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        vals = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, vals):
-            v = float(v)
-            t_us = int(t_us)
-            if math.isnan(v):
-                continue  # NaN = null under the shared policy
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            emit = None
-            if kind == "etma":
-                a, _w, c = slots[0]
-                if c == 0:
-                    a = v
-                else:
-                    w = n / (n + (t_us - last_t))
-                    a = w * a + (1.0 - w) * v
-                slots[0] = [a, _w, c + 1]
-                emit = a
-            elif kind == "rsi":
-                # Wilder: state rides (au, wau) in slot 1, (ad, wad)
-                # in slot 2, delta count in c1, previous raw in prev
-                if seen_prev:
-                    d = v - prev
-                    u = d if d > 0.0 else 0.0
-                    dn = -d if d < 0.0 else 0.0
-                    au, wau, c = slots[0]
-                    ad, wad, _c2 = slots[1]
-                    if c < n:
-                        # batch warm loop adds only non-zero moves —
-                        # same float sums (x + 0.0 is exact, but keep
-                        # the branch structure identical)
-                        if d > 0.0:
-                            wau = wau + d
-                        elif d < 0.0:
-                            wad = wad + (-d)
-                        c += 1
-                        if c == n:
-                            au = wau / n
-                            ad = wad / n
-                            emit = (
-                                100.0 if ad == 0.0
-                                else 100.0 - 100.0 / (1.0 + au / ad)
-                            )
-                    else:
-                        au = (au * (n - 1.0) + u) / n
-                        ad = (ad * (n - 1.0) + dn) / n
-                        emit = (
-                            100.0 if ad == 0.0
-                            else 100.0 - 100.0 / (1.0 + au / ad)
-                        )
-                    slots[0] = [au, wau, c]
-                    slots[1] = [ad, wad, _c2]
-                prev, seen_prev = v, 1
+    def step(acc, emit, t_us, v, prev_t):
+        slots = acc["slots"]
+        if kind == "etma":
+            a, w, c = slots[0]
+            if c == 0:
+                a = v
             else:
-                # chained EMA folds: each emitted level feeds the next
-                out = _fold_step(0, v)
-                lvl_vals = [out]
-                for i in range(1, levels):
-                    if out is None:
-                        break
-                    out = _fold_step(i, out)
-                    lvl_vals.append(out)
-                if out is not None:
-                    if kind == "ema":
-                        emit = out
-                    elif kind == "dema":
-                        emit = 2.0 * lvl_vals[0] - lvl_vals[1]
-                    elif kind == "tema":
-                        emit = (
-                            3.0 * lvl_vals[0] - 3.0 * lvl_vals[1]
-                            + lvl_vals[2]
-                        )
-                    else:  # trix: one-lag percent derivative of e3
-                        e3 = out
-                        if seen_prev:
-                            if prev == 0.0:
-                                # the NULL row still EMITS (the batch
-                                # kernel keeps it — pinned zero-
-                                # denominator rule)
-                                ts_out.append(t)
-                                v_out.append(None)
-                            else:
-                                emit = (e3 - prev) / prev * 100.0
-                        prev, seen_prev = e3, 1
-            if emit is not None:
-                ts_out.append(t)
-                v_out.append(emit)
-            last_t, seen = t_us, True
-        (a1, w1, c1), (a2, w2, c2), (a3, w3, c3) = slots
-        state.update((
-            int(last_t), float(a1), float(w1), int(c1),
-            float(a2), float(w2), int(c2),
-            float(a3), float(w3), int(c3),
-            float(prev), int(seen_prev),
-        ))
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = ts_out
-        # nullable Float64 keeps trix's None a true NULL through Arrow
-        cols[name] = pd.array(v_out, dtype="Float64")
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
+                wt = n / (n + (t_us - prev_t))
+                a = wt * a + (1.0 - wt) * v
+            slots[0] = [a, w, c + 1]
+            emit((t_us, a))
+        elif kind == "rsi":
+            # Wilder: (au, wau, delta count) in slot 1, (ad, wad) in
+            # slot 2, the previous raw value in prev
+            if acc["seen_prev"]:
+                d = v - acc["prev"]
+                (au, wau, c), (ad, wad, c2) = slots[0], slots[1]
+                if c < n:
+                    # the batch warm loop adds only non-zero moves —
+                    # same float sums, same branch structure
+                    if d > 0.0:
+                        wau = wau + d
+                    elif d < 0.0:
+                        wad = wad + (-d)
+                    c += 1
+                    if c == n:
+                        au, ad = wau / n, wad / n
+                else:
+                    au = (au * (n - 1.0) + (d if d > 0.0 else 0.0)) / n
+                    ad = (ad * (n - 1.0) + (-d if d < 0.0 else 0.0)) / n
+                slots[0], slots[1] = [au, wau, c], [ad, wad, c2]
+                if c == n:
+                    emit((t_us, 100.0 if ad == 0.0 else 100.0 - 100.0 / (1.0 + au / ad)))
+            acc["prev"], acc["seen_prev"] = v, 1
+        else:
+            # chained EMA folds: each emitted level feeds the next
+            out = _ema_fold_step(slots[0], v, n, k, omk)
+            lvl = [out]
+            for i in range(1, levels):
+                if out is None:
+                    break
+                out = _ema_fold_step(slots[i], out, n, k, omk)
+                lvl.append(out)
+            if out is None:
+                return
+            if kind == "ema":
+                emit((t_us, out))
+            elif kind == "dema":
+                emit((t_us, 2.0 * lvl[0] - lvl[1]))
+            elif kind == "tema":
+                emit((t_us, 3.0 * lvl[0] - 3.0 * lvl[1] + lvl[2]))
+            else:  # trix: one-lag percent derivative of e3
+                if acc["seen_prev"]:
+                    # a zero previous e3 still EMITS, as NULL (the
+                    # batch kernel's pinned zero-denominator rule)
+                    prev = acc["prev"]
+                    emit((t_us, None if prev == 0.0 else (out - prev) / prev * 100.0))
+                acc["prev"], acc["seen_prev"] = out, 1
 
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_SMOOTH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return SeriesFold(
+        _SMOOTH_STATE, (0, 0.0, 0.0, 0, 0.0, 0.0, 0, 0.0, 0.0, 0, 0.0, 0),
+        _VALUE, step, load=_load_slots, save=_save_slots,
     )
 
 
-# -- streaming kaufmansAMA (round 14) ----------------------------------
+# -- bounded-list indicators (round 14) ----------------------------------
 #
-# VERDICT r13 item 4: the r13 boundary said "fixed-tuple state
-# streams, window-of-values state raises" — but kaufmansAMA's
-# efficiency-ratio window is BOUNDED (exactly the trailing n+1 raw
-# values per series, n a dashboard constant), so a bounded-list state
-# tuple streams it under the same arrival contract. The boundary
-# restates as: state of size O(1) in the STREAM LENGTH streams —
-# fixed tuples and n-bounded lists alike; what stays batch-only is
-# state proportional to the stream (rank aggregates' full value
-# multisets) or windows whose SEMANTICS need the whole series per
-# trigger (holtWinters: the fit consumes slot-normalized windows over
-# the entire range — recomputing the whole forecast per point is a
-# batch query replay, not an incremental emission).
+# kaufmansAMA's efficiency-ratio window is BOUNDED (exactly the trailing
+# n+1 raw values per series, n a dashboard constant), so a bounded-list
+# state streams it under the same arrival contract; movingAverage and
+# cmo/ker buffer the trailing n (n+1) values as exact cents. The
+# boundary: state of size O(1) in the STREAM LENGTH streams — fixed
+# tuples and n-bounded lists alike; what stays batch-only is state
+# proportional to the stream (rank aggregates' full value multisets)
+# or windows whose SEMANTICS need the whole series per trigger
+# (holtWinters: the fit consumes slot-normalized windows over the
+# entire range — recomputing the whole forecast per point is a batch
+# query replay, not an incremental emission).
 
 # the trailing n+1 raw values (bounded by the dashboard constant n)
 # + the AMA accumulator; ~8(n+6) bytes per series
 _KAMA_STATE = "last_t long, vals array<double>, cnt long, ama double"
 
-# cmo/ker: the trailing n+1 values as decimal(18,2) integer cents
-# (the batch frames sum _dec("_value") deltas exactly)
+# movingAverage / cmo / ker: the trailing n (n+1) values as
+# decimal(18,2) integer cents (the batch frames sum _dec("_value")
+# exactly)
 _MA_STATE = "last_t long, cents array<long>, cnt long"
 
-# movingAverage(n:): same long-cents buffer, but null RECORDS keep
-# their frame slot (the batch kernel has no null prefilter) — marked
-# by an out-of-domain sentinel (decimal(18,2) bounds |cents| < 1e18
-# < 2^62, so the sentinel is unreachable and the longs stay exact,
-# unlike a NaN-in-double encoding which loses integers above 2^53)
+# movingAverage(n:): null RECORDS keep their frame slot — marked by an
+# out-of-domain sentinel (decimal(18,2) bounds |cents| < 1e18 < 2^62,
+# so the sentinel is unreachable and the longs stay exact, unlike a
+# NaN-in-double encoding which loses integers above 2^53)
 _MA_NULL_SLOT = 1 << 62
 
 
-def value_series_moving_average(
-    stream: DataFrame,
-    key_cols: list[str],
-    n: int,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming Flux ``movingAverage(n:)`` — the trailing ROW-frame
-    mean, bit-identical to the batch compiler under the pinned
-    arrival contract. Same bounded-list principle as
-    ``value_series_kama``: state is the trailing n values per series,
-    O(1) in the stream length.
-
-    NULL ROWS ARE FRAME POSITIONS (review r14): the batch kernel is
-    the ONE value-series transform with no isNotNull prefilter — a
-    null-valued record occupies a slot in the ROWS(−(n−1), 0) frame
-    and emits its own row (raw null ``_value``), while ``sum``/
-    ``count`` skip it. (This null-position contract is WHY this stays
-    a separate function instead of a third ``kind`` in
-    ``value_series_trailing_indicator``, whose batch kernels
-    null-prefilter.) The buffer therefore stores None for null
-    rows, the running sum/count track only the non-null members, and
-    an all-null frame emits a NULL average (the batch
-    ``sum(empty) = NULL`` rule). Input must NOT be null-filtered —
-    the compiler passes the raw narrowed frame.
-
-    NUMERIC PARITY: the batch expression is
-    ``sum(decimal(18,2)).cast(double) / count(_value).cast(double)``
-    over the n-row frame (emission starts at row n). Quantizing each
-    value to integer cents via the shared ``_cents`` rule makes the
-    sum EXACT (integer addition — order-free, so a RUNNING
-    add-on-append / subtract-on-evict total is bit-identical to the
-    batch frame fold at O(1) per row), and the two double divisions
-    replay the decimal→double cast and the frame division:
-    ``(sum_cents / 100.0) / float(nn)`` with ``nn`` the frame's
-    non-null count. Output keeps the raw ``_value`` beside the named
-    average column — the batch column shape."""
-    import math
-    from collections import deque
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    n = int(n)
-    if n < 1:
-        raise ValueError(f"movingAverage n: positive int required, got {n!r}")
-    name = out_name or "moving_avg"
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(
-        base
-        + time_f
-        + [StructField("_value", DoubleType()), StructField(name, DoubleType())]
-    )
-
-    def _fn(key, pdfs, state):
-        # state buffer marks null frame positions with the
-        # out-of-domain _MA_NULL_SLOT sentinel (exact long cents)
-        if state.exists:
-            last_t, cents, cnt = state.get
-            buf = deque(
-                (None if c == _MA_NULL_SLOT else int(c)) for c in cents
-            )
-            seen = True
-        else:
-            last_t, cnt = 0, 0
-            buf = deque()
-            seen = False
-        run_sum = sum(c for c in buf if c is not None)
-        run_cnt = sum(1 for c in buf if c is not None)
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, raw_out, v_out = [], [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        raw = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, raw):
-            v = float(v)
-            t_us = int(t_us)
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            cnt += 1
-            if math.isnan(v):
-                buf.append(None)  # a null RECORD keeps its frame slot
-            else:
-                c = _cents(v)
-                buf.append(c)
-                run_sum += c
-                run_cnt += 1
-            if len(buf) > n:
-                old = buf.popleft()
-                if old is not None:
-                    run_sum -= old
-                    run_cnt -= 1
-            if cnt >= n:
-                ts_out.append(t)
-                raw_out.append(None if math.isnan(v) else v)
-                v_out.append(
-                    None
-                    if run_cnt == 0
-                    else (run_sum / 100.0) / float(run_cnt)
-                )
-            last_t, seen = t_us, True
-        state.update((
-            int(last_t),
-            [_MA_NULL_SLOT if c is None else int(c) for c in buf],
-            int(cnt),
-        ))
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = ts_out
-        cols["_value"] = pd.array(raw_out, dtype="Float64")
-        cols[name] = pd.array(v_out, dtype="Float64")
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
-
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_MA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def value_series_trailing_indicator(
-    stream: DataFrame,
-    key_cols: list[str],
-    kind: str,
-    n: int,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming ``chandeMomentumOscillator(n:)`` / ``kaufmansER(n:)``
-    — the trailing-n-delta technical indicators, on the same bounded
-    cents-list state as ``value_series_moving_average`` (here n+1
-    values, deriving the n deltas). Both batch kernels work over
-    EXACT decimal(18,2) deltas with one double division per row, so
-    the integer-cents replay is bit-identical:
-
-    * cmo: up/dn = signed sums of the positive/negative delta cents;
-      0.0 on a flat window, else
-      ``float(up_c - dn_c) / ((up_c + dn_c) / 100.0)`` — the
-      ``((up-dn)*100).cast(double) / (up+dn).cast(double)`` tree.
-    * ker: ``num_c = |c_t - c_{t-n}|``, ``den_c = sum |delta|``; 0.0
-      on a flat window, else ``(num_c/100.0) / (den_c/100.0)``.
-
-    Emission starts at the (n+1)-th accepted point (n full deltas),
-    ``_value`` REWRITTEN to the indicator — the batch column shape.
-    """
-    import math
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    if kind not in ("cmo", "ker"):
-        raise ValueError(f"unknown trailing indicator {kind!r}")
-    n = int(n)
-    if n < 1:
-        raise ValueError(f"{kind} n: positive int required, got {n!r}")
-    name = out_name or "_value"
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(base + time_f + [StructField(name, DoubleType())])
-
-    def _fn(key, pdfs, state):
-        from collections import deque
-
-        if state.exists:
-            last_t, cents, cnt = state.get
-            buf = deque(int(c) for c in cents)
-            seen = True
-        else:
-            last_t, cnt = 0, 0
-            buf = deque()
-            seen = False
-        # RUNNING delta sums (review r14): integer cents sums are
-        # order-free, so add-on-append / subtract-on-evict is
-        # bit-identical to the batch frame's fresh fold at O(1) per
-        # row; rebuilt from the <= n+1 buffer once per micro-batch
-        up_c = dn_c = 0  # cmo: Σ positive deltas / Σ −negative deltas
-        prev_c = None
-        for c in buf:
-            if prev_c is not None:
-                d = c - prev_c
-                if d > 0:
-                    up_c += d
-                elif d < 0:
-                    dn_c += -d
-            prev_c = c
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, v_out = [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        raw = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, raw):
-            v = float(v)
-            t_us = int(t_us)
-            if math.isnan(v):
-                continue  # NaN = null under the shared policy
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            cnt += 1
-            c = _cents(v)
-            if buf:
-                d = c - buf[-1]
-                if d > 0:
-                    up_c += d
-                elif d < 0:
-                    dn_c += -d
-            buf.append(c)
-            if len(buf) > n + 1:
-                old = buf.popleft()
-                d = buf[0] - old
-                if d > 0:
-                    up_c -= d
-                elif d < 0:
-                    dn_c -= -d
-            if cnt >= n + 1:
-                if kind == "cmo":
-                    point = (
-                        0.0
-                        if up_c + dn_c == 0
-                        else float(up_c - dn_c) / ((up_c + dn_c) / 100.0)
-                    )
-                else:
-                    # ker: den = Σ|delta| = up_c + dn_c; num = |net|
-                    den_c = up_c + dn_c
-                    num_c = abs(buf[-1] - buf[0])
-                    point = (
-                        0.0
-                        if den_c == 0
-                        else (num_c / 100.0) / (den_c / 100.0)
-                    )
-                ts_out.append(t)
-                v_out.append(point)
-            last_t, seen = t_us, True
-        state.update((int(last_t), [int(c) for c in buf], int(cnt)))
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = ts_out
-        cols[name] = v_out
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
-
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_MA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def value_series_state_tracking(
-    stream: DataFrame,
-    key_cols: list[str],
-    kind: str,
-    unit_s: int = 1,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming Flux ``stateDuration(fn:)`` / ``stateCount(fn:)`` —
-    the live ALERT-duration panel ("how long has this series been
-    above threshold"). Run tracking is a FIXED state tuple per series
-    (previous predicate state, current run's start µs, 1-based run
-    position): change detection is the batch ``_state_runs``
-    null-safe compare (a null predicate is its own state value), and
-    the emitted values replay the batch expressions —
-
-    * stateDuration: ``(t_us − run_start_us) / unit_us`` double
-      division, long cast truncating toward zero (0 at a true run's
-      first point); −1 where the predicate is not true.
-    * stateCount: the 1-based position within the current run where
-      true; −1 otherwise.
-
-    ``stream`` must carry ``key_cols + [_time, _value, __state]``
-    with ``__state`` the pre-compiled predicate column (a stateless
-    projection — the Catalyst predicate never enters Python). Output
-    keeps ``_value`` and the boolean ``state`` beside the named long,
-    the batch column shape.
-
-    NULL ROWS ARE RECORDS (review r14): the batch ``_state_runs``
-    frame has no null prefilter — a null-valued record keeps its row,
-    its (typically null) predicate is ITS OWN run state under the
-    null-safe compare (true→null→true is three runs), and it emits
-    with −1. Input must NOT be null-filtered; the fold keeps NaN
-    rows (emitting a null ``_value``) so run splitting matches batch
-    exactly."""
-    import math
-
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    if kind not in ("duration", "count"):
-        raise ValueError(f"unknown state tracking kind {kind!r}")
-    unit_s = int(unit_s)
-    if unit_s <= 0:
-        raise ValueError(f"stateDuration unit must be > 0, got {unit_s!r}")
-    name = out_name or (
-        "stateDuration" if kind == "duration" else "stateCount"
-    )
-    narrowed = stream.select(*key_cols, "_time", "_value", "__state")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(
-        base
-        + time_f
-        + [
-            StructField("_value", DoubleType()),
-            StructField("state", BooleanType()),
-            StructField(name, LongType()),
-        ]
-    )
-    unit_us = unit_s * 1_000_000
-
-    def _fn(key, pdfs, state):
-        # prev_state: -1 = no rows yet, 0 = false, 1 = true, 2 = null
-        if state.exists:
-            last_t, prev_state, run_start, run_pos = state.get
-            seen = True
-        else:
-            last_t, prev_state, run_start, run_pos = 0, -1, 0, 0
-            seen = False
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, raw_out, st_out, v_out = [], [], [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        raw = pdf["_value"].to_numpy()
-        preds = pdf["__state"].to_numpy(dtype=object)
-        for t, t_us, v, p in zip(times, t_us_arr, raw, preds):
-            v = float(v)
-            t_us = int(t_us)
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            s3 = 2 if pd.isna(p) else (1 if bool(p) else 0)
-            if s3 != prev_state:
-                # new run — the batch null-safe change compare
-                prev_state, run_start, run_pos = s3, t_us, 1
-            else:
-                run_pos += 1
-            if s3 == 1:
-                out = (
-                    int((t_us - run_start) / float(unit_us))
-                    if kind == "duration"
-                    else run_pos
-                )
-            else:
-                out = -1
-            ts_out.append(t)
-            raw_out.append(None if math.isnan(v) else v)
-            st_out.append(None if s3 == 2 else bool(s3))
-            v_out.append(out)
-            last_t, seen = t_us, True
-        state.update(
-            (int(last_t), int(prev_state), int(run_start), int(run_pos))
-        )
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = ts_out
-        cols["_value"] = pd.array(raw_out, dtype="Float64")
-        cols["state"] = pd.array(st_out, dtype="boolean")
-        cols[name] = pd.array(v_out, dtype="Int64")
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
-
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType="last_t long, prev_state long, run_start long, "
-                        "run_pos long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def value_series_interpolate(
-    stream: DataFrame,
-    key_cols: list[str],
-    every_s: int,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming ``interpolate.linear(every:)`` — the gap-filled live
-    chart. ONE (last_t, last_v) lag tuple per series: each arriving
-    point emits its own raw row plus the epoch-aligned every-multiples
-    strictly inside the gap to the previous point, linearly
-    interpolated with the batch kernel's pinned expression order
-    (``pv + (nv − pv) · ((us − pt) / (nt − pt))`` — int64 µs deltas,
-    ONE double division). The emitted-row count per gap is
-    gap/every — output volume, not state: the state tuple never
-    grows, so an overnight gap emits the whole night's grid when
-    day-2's first point arrives (exactly the batch densification).
-
-    The batch kernel's per-timestamp MAX dedup has no streaming
-    counterpart: tied timestamps violate the arrival contract and
-    drop as late rows (the documented keep-first-tie divergence —
-    MIGRATION.md; distinct single-series ingest never ties)."""
-    import math
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    every_s = int(every_s)
-    if every_s <= 0:
-        raise ValueError(
-            f"interpolate.linear every must be > 0, got {every_s!r}"
-        )
-    name = out_name or "_value"
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(base + time_f + [StructField(name, DoubleType())])
-    ev_us = every_s * 1_000_000
-
-    def _fn(key, pdfs, state):
-        if state.exists:
-            last_t, last_v = state.get
-            seen = True
-        else:
-            last_t, last_v, seen = 0, 0.0, False
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, v_out = [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        raw = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, raw):
-            v = float(v)
-            t_us = int(t_us)
-            if math.isnan(v):
-                continue  # NaN = null under the shared policy
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            if seen:
-                # aligned marks strictly inside (last_t, t_us):
-                # Python's % IS pmod (non-negative for positive ev),
-                # so the floor alignment matches pre-epoch times too
-                lo = last_t - (last_t % ev_us) + ev_us
-                hi = (t_us - 1) - ((t_us - 1) % ev_us)
-                span = float(t_us - last_t)
-                us = lo
-                while us <= hi:
-                    ts_out.append(
-                        pd.Timestamp(us, unit="us").to_datetime64()
-                    )
-                    v_out.append(
-                        last_v
-                        + (v - last_v) * (float(us - last_t) / span)
-                    )
-                    us += ev_us
-            ts_out.append(t)
-            v_out.append(v)
-            last_t, last_v, seen = t_us, v, True
-        state.update((int(last_t), float(last_v)))
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = pd.Series(ts_out, dtype="datetime64[us]")
-        cols[name] = v_out
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
-
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType="last_t long, last_v double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def value_series_elapsed(
-    stream: DataFrame,
-    key_cols: list[str],
-    unit_s: int,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming Flux ``elapsed([unit:])`` — the gap to the previous
-    record in whole units, with ONE long of state per series (the
-    smallest member of the O(1)-state family). Replays the batch
-    expression exactly: integer-µs diff, double division by the unit,
-    long cast truncating toward zero; the per-series first row drops
-    (no predecessor). Output keeps the raw ``_value`` beside the
-    elapsed column — the batch shape."""
-    import math
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    unit_s = int(unit_s)
-    if unit_s <= 0:
-        raise ValueError(f"elapsed unit must be > 0, got {unit_s!r}")
-    name = out_name or "elapsed"
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(
-        base
-        + time_f
-        + [StructField("_value", DoubleType()), StructField(name, LongType())]
-    )
-    unit_us = unit_s * 1_000_000
-
-    def _fn(key, pdfs, state):
-        if state.exists:
-            (last_t,) = state.get
-            seen = True
-        else:
-            last_t, seen = 0, False
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, raw_out, v_out = [], [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        raw = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, raw):
-            v = float(v)
-            t_us = int(t_us)
-            if math.isnan(v):
-                continue  # NaN = null under the shared policy
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            if seen:
-                ts_out.append(t)
-                raw_out.append(v)
-                # double division then truncation toward zero — the
-                # batch (diff / lit).cast("long") tree
-                v_out.append(int((t_us - last_t) / float(unit_us)))
-            last_t, seen = t_us, True
-        state.update((int(last_t),))
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = ts_out
-        cols["_value"] = raw_out
-        # explicit int64 so an empty batch still Arrow-types as long
-        cols[name] = pd.array(v_out, dtype="Int64")
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
-
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType="last_t long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def value_series_kama(
-    stream: DataFrame,
-    key_cols: list[str],
-    n: int,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Streaming Kaufman's Adaptive Moving Average per series —
-    bit-identical to the batch kernel (``operators.timeseries
-    .flux_kama``) under the pinned arrival contract (strictly-
-    increasing per-series event time across micro-batches; late rows
-    drop; batch replay on the store for disordered data).
+def kama_fold(n: int) -> SeriesFold:
+    """Kaufman's Adaptive Moving Average (``operators.timeseries
+    .flux_kama``); ``_value`` is rewritten.
 
     NUMERIC PARITY: the batch kernel recomputes the efficiency-ratio
     denominator as a fresh left-to-right fold over the trailing n
@@ -1075,76 +492,255 @@ def value_series_kama(
     over consecutive buffer pairs reproduces that fold order — and
     the identity seed (``AMA_{n-1} = x_{n-1}``, first emission at row
     ``n``) lands when the ``n``-th accepted point arrives, whichever
-    micro-batch that is (warm-ups span drains, like the EMA family).
-    """
-    import math
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
+    micro-batch that is (warm-ups span drains, like the EMA family)."""
     n = int(n)
-    if n < 1:
-        raise ValueError(f"kama n: positive int required, got {n!r}")
-    name = out_name or "_value"
-    narrowed = stream.select(*key_cols, "_time", "_value")
-    base = [f for f in narrowed.schema.fields if f.name in key_cols]
-    time_f = [f for f in narrowed.schema.fields if f.name == "_time"]
-    out_schema = StructType(base + time_f + [StructField(name, DoubleType())])
     # the batch kernel's own constants, same expression order
     c_fast_slow = 2.0 / 3.0 - 2.0 / 31.0
     c_slow = 2.0 / 31.0
 
-    def _fn(key, pdfs, state):
-        if state.exists:
-            last_t, vals, cnt, ama = state.get
-            vals = list(vals)
-            seen = True
-        else:
-            last_t, vals, cnt, ama = 0, [], 0, 0.0
-            seen = False
-        pdf = pd.concat(list(pdfs))
-        if len(pdf):
-            pdf = pdf.sort_values(["_time", "_value"], kind="mergesort")
-        ts_out, v_out = [], []
-        times = pdf["_time"].to_numpy()
-        t_us_arr = times.astype("datetime64[us]").astype("int64")
-        raw = pdf["_value"].to_numpy()
-        for t, t_us, v in zip(times, t_us_arr, raw):
-            v = float(v)
-            t_us = int(t_us)
-            if math.isnan(v):
-                continue  # NaN = null under the shared policy
-            if seen and t_us <= last_t:
-                continue  # LATE — outside the arrival contract
-            cnt += 1
-            vals.append(v)
-            if len(vals) > n + 1:
-                vals.pop(0)
-            if cnt == n:
-                ama = v  # identity seed at row n-1 (0-based)
-            elif cnt > n:
-                # vals == [x_{t-n} .. x_t]: the batch kernel's fresh
-                # left-to-right delta fold, identical order
-                dsum = 0.0
-                for i in range(1, n + 1):
-                    dsum = dsum + abs(vals[i] - vals[i - 1])
-                num = abs(vals[n] - vals[0])
-                er = 0.0 if dsum == 0.0 else num / dsum
-                m = er * c_fast_slow + c_slow
-                ama = (v - ama) * (m * m) + ama
-                ts_out.append(t)
-                v_out.append(ama)
-            last_t, seen = t_us, True
-        state.update((int(last_t), [float(x) for x in vals], int(cnt),
-                      float(ama)))
-        cols = {kc: [key[i]] * len(ts_out) for i, kc in enumerate(key_cols)}
-        cols["_time"] = ts_out
-        cols[name] = pd.array(v_out, dtype="Float64")
-        yield pd.DataFrame(cols, columns=[f.name for f in out_schema.fields])
+    def step(acc, emit, t_us, v, prev_t):
+        vals = acc["vals"]
+        acc["cnt"] += 1
+        vals.append(v)
+        if len(vals) > n + 1:
+            vals.pop(0)
+        if acc["cnt"] == n:
+            acc["ama"] = v  # identity seed at row n-1 (0-based)
+        elif acc["cnt"] > n:
+            dsum = 0.0
+            for i in range(1, n + 1):
+                dsum = dsum + abs(vals[i] - vals[i - 1])
+            num = abs(vals[n] - vals[0])
+            er = 0.0 if dsum == 0.0 else num / dsum
+            m = er * c_fast_slow + c_slow
+            ama = acc["ama"]
+            acc["ama"] = ama = (v - ama) * (m * m) + ama
+            emit((t_us, ama))
 
-    return narrowed.groupBy(*key_cols).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_KAMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return SeriesFold(_KAMA_STATE, (0, [], 0, 0.0), _VALUE, step)
+
+
+def moving_average_fold(n: int) -> SeriesFold:
+    """Flux ``movingAverage(n:)`` — the trailing ROW-frame mean, kept
+    beside the raw ``_value`` (the batch column shape).
+
+    NULL ROWS ARE FRAME POSITIONS (review r14): the batch kernel is
+    the ONE value-series transform with no isNotNull prefilter — a
+    null-valued record occupies a slot in the ROWS(−(n−1), 0) frame
+    and emits its own row (raw null ``_value``), while ``sum``/
+    ``count`` skip it. The buffer therefore stores None for null
+    rows, the running sum/count track only the non-null members, and
+    an all-null frame emits a NULL average (the batch
+    ``sum(empty) = NULL`` rule).
+
+    NUMERIC PARITY: the batch expression is
+    ``sum(decimal(18,2)).cast(double) / count(_value).cast(double)``
+    over the n-row frame (emission starts at row n). Integer cents
+    make the sum EXACT (order-free, so a RUNNING add-on-append /
+    subtract-on-evict total is bit-identical to the batch frame fold
+    at O(1) per row), and the two double divisions replay the
+    decimal→double cast and the frame division:
+    ``(sum_cents / 100.0) / float(nn)`` with ``nn`` the frame's
+    non-null count."""
+    n = int(n)
+
+    def load(acc):
+        acc["cents"] = buf = deque(
+            None if c == _MA_NULL_SLOT else c for c in acc["cents"]
+        )
+        acc["sum"] = sum(c for c in buf if c is not None)
+        acc["nn"] = sum(1 for c in buf if c is not None)
+
+    def save(acc):
+        acc["cents"] = [_MA_NULL_SLOT if c is None else c for c in acc["cents"]]
+
+    def step(acc, emit, t_us, v, prev_t):
+        buf = acc["cents"]
+        acc["cnt"] += 1
+        null = math.isnan(v)
+        if null:
+            buf.append(None)  # a null RECORD keeps its frame slot
+        else:
+            c = _cents(v)
+            buf.append(c)
+            acc["sum"] += c
+            acc["nn"] += 1
+        if len(buf) > n:
+            old = buf.popleft()
+            if old is not None:
+                acc["sum"] -= old
+                acc["nn"] -= 1
+        if acc["cnt"] >= n:
+            nn = acc["nn"]
+            emit((
+                t_us,
+                None if null else v,
+                None if nn == 0 else (acc["sum"] / 100.0) / float(nn),
+            ))
+
+    return SeriesFold(
+        _MA_STATE, (0, [], 0), _VALUE + (("moving_avg", _DOUBLE),), step,
+        keep_nulls=True, load=load, save=save,
+    )
+
+
+def _add_move(acc: dict, d: int, sign: int) -> None:
+    # cmo/ker running delta sums: Σ positive deltas / Σ −negative deltas
+    if d > 0:
+        acc["up"] += sign * d
+    elif d < 0:
+        acc["dn"] -= sign * d
+
+
+def trailing_indicator_fold(kind: str, n: int) -> SeriesFold:
+    """``chandeMomentumOscillator(n:)`` (``cmo``) / ``kaufmansER(n:)``
+    (``ker``) over the trailing n+1 cents (n deltas). Both batch
+    kernels work over EXACT decimal(18,2) deltas with one double
+    division per row, so the integer-cents replay is bit-identical:
+
+    * cmo: up/dn = signed sums of the positive/negative delta cents;
+      0.0 on a flat window, else
+      ``float(up_c - dn_c) / ((up_c + dn_c) / 100.0)`` — the
+      ``((up-dn)*100).cast(double) / (up+dn).cast(double)`` tree.
+    * ker: ``num_c = |c_t - c_{t-n}|``, ``den_c = sum |delta|``; 0.0
+      on a flat window, else ``(num_c/100.0) / (den_c/100.0)``.
+
+    The delta sums RUN (review r14): integer sums are order-free, so
+    add-on-append / subtract-on-evict is bit-identical to the batch
+    frame's fresh fold at O(1) per row; ``load`` rebuilds them from
+    the <= n+1 buffer once per micro-batch. Emission starts at the
+    (n+1)-th accepted point; ``_value`` is rewritten."""
+    n = int(n)
+
+    def load(acc):
+        acc["cents"] = buf = deque(acc["cents"])
+        acc["up"] = acc["dn"] = 0
+        for a, b in pairwise(buf):
+            _add_move(acc, b - a, 1)
+
+    def step(acc, emit, t_us, v, prev_t):
+        buf = acc["cents"]
+        acc["cnt"] += 1
+        c = _cents(v)
+        if buf:
+            _add_move(acc, c - buf[-1], 1)
+        buf.append(c)
+        if len(buf) > n + 1:
+            old = buf.popleft()
+            _add_move(acc, buf[0] - old, -1)
+        if acc["cnt"] >= n + 1:
+            up, dn = acc["up"], acc["dn"]
+            if up + dn == 0:
+                point = 0.0
+            elif kind == "cmo":
+                point = float(up - dn) / ((up + dn) / 100.0)
+            else:  # ker: den = Σ|delta| = up + dn; num = |net|
+                point = (abs(buf[-1] - buf[0]) / 100.0) / ((up + dn) / 100.0)
+            emit((t_us, point))
+
+    return SeriesFold(_MA_STATE, (0, [], 0), _VALUE, step, load=load)
+
+
+# -- run tracking, gap fill and elapsed (round 14) -----------------------
+
+
+def state_tracking_fold(kind: str, pred: Column, unit_s: int = 1) -> SeriesFold:
+    """Flux ``stateDuration(fn:)`` (``duration``) / ``stateCount(fn:)``
+    (``count``) — the live ALERT-duration panel. ``pred`` is the
+    compiled predicate, evaluated as the extra ``__state`` column (a
+    stateless projection — the Catalyst predicate never enters
+    Python). Run tracking is a FIXED tuple per series (previous
+    predicate state, current run's start µs, 1-based run position):
+    change detection is the batch ``_state_runs`` null-safe compare (a
+    null predicate is its own state value), and the emitted values
+    replay the batch expressions —
+
+    * stateDuration: ``(t_us − run_start_us) / unit_us`` double
+      division, long cast truncating toward zero (0 at a true run's
+      first point); −1 where the predicate is not true.
+    * stateCount: the 1-based position within the current run where
+      true; −1 otherwise.
+
+    Output keeps ``_value`` and the boolean ``state`` beside the named
+    long, the batch column shape. NULL ROWS ARE RECORDS (review r14):
+    a null-valued record keeps its row, its (typically null) predicate
+    is ITS OWN run state (true→null→true is three runs), and it emits
+    with −1."""
+    unit_us = int(unit_s) * 1_000_000
+
+    def step(acc, emit, t_us, v, prev_t, p):
+        # prev_state: -1 = no rows yet, 0 = false, 1 = true, 2 = null
+        s3 = 2 if pd.isna(p) else (1 if bool(p) else 0)
+        if s3 != acc["prev_state"]:
+            # new run — the batch null-safe change compare
+            acc["prev_state"], acc["run_start"], acc["run_pos"] = s3, t_us, 1
+        else:
+            acc["run_pos"] += 1
+        if s3 != 1:
+            out = -1
+        elif kind == "duration":
+            out = int((t_us - acc["run_start"]) / float(unit_us))
+        else:
+            out = acc["run_pos"]
+        emit((t_us, None if math.isnan(v) else v, None if s3 == 2 else bool(s3), out))
+
+    name = "stateDuration" if kind == "duration" else "stateCount"
+    return SeriesFold(
+        "last_t long, prev_state long, run_start long, run_pos long",
+        (0, -1, 0, 0),
+        _VALUE + (("state", BooleanType()), (name, LongType())),
+        step, keep_nulls=True, extra=(("__state", pred),),
+    )
+
+
+def interpolate_fold(every_s: int) -> SeriesFold:
+    """``interpolate.linear(every:)`` — the gap-filled live chart. ONE
+    (last_t, last_v) lag tuple per series: each arriving point emits
+    its own raw row plus the epoch-aligned every-multiples strictly
+    inside the gap to the previous point, linearly interpolated with
+    the batch kernel's pinned expression order
+    (``pv + (nv − pv) · ((us − pt) / (nt − pt))`` — int64 µs deltas,
+    ONE double division). The emitted-row count per gap is gap/every —
+    output volume, not state: an overnight gap emits the whole night's
+    grid when day-2's first point arrives (exactly the batch
+    densification).
+
+    The batch kernel's per-timestamp MAX dedup has no streaming
+    counterpart: tied timestamps violate the arrival contract and
+    drop as late rows (the documented keep-first-tie divergence —
+    MIGRATION.md; distinct single-series ingest never ties)."""
+    ev_us = int(every_s) * 1_000_000
+
+    def step(acc, emit, t_us, v, prev_t):
+        if prev_t is not None:
+            pv = acc["last_v"]
+            # aligned marks strictly inside (prev_t, t_us): Python's %
+            # IS pmod (non-negative for positive ev), so the floor
+            # alignment matches pre-epoch times too
+            lo = prev_t - (prev_t % ev_us) + ev_us
+            hi = (t_us - 1) - ((t_us - 1) % ev_us)
+            span = float(t_us - prev_t)
+            for us in range(lo, hi + 1, ev_us):
+                emit((us, pv + (v - pv) * (float(us - prev_t) / span)))
+        emit((t_us, v))
+        acc["last_v"] = v
+
+    return SeriesFold("last_t long, last_v double", (0, 0.0), _VALUE, step)
+
+
+def elapsed_fold(unit_s: int) -> SeriesFold:
+    """Flux ``elapsed([unit:])`` — the gap to the previous record in
+    whole units, with no state beyond ``last_t``. Replays the batch
+    expression exactly: integer-µs diff, double division by the unit,
+    long cast truncating toward zero; the per-series first row drops
+    (no predecessor). Output keeps the raw ``_value`` beside the
+    elapsed column — the batch shape."""
+    unit_us = int(unit_s) * 1_000_000
+
+    def step(acc, emit, t_us, v, prev_t):
+        if prev_t is not None:
+            emit((t_us, v, int((t_us - prev_t) / float(unit_us))))
+
+    return SeriesFold(
+        "last_t long", (0,), _VALUE + (("elapsed", LongType()),), step
     )
