@@ -1075,3 +1075,219 @@ def test_pre_clustered_write_matches_day_clustered(spark, tmp_path):
         if "_date=" in d
     )
     assert dirs_a == dirs_b
+
+
+#: Hand-built manifest rows (file, column, arrow type, min, max): every
+#: type family, null stats, and — in the ``bad_`` files — stat strings
+#: that do not type, NaN, and a missing type. The timestamp rows sit
+#: next to the 2021 America/New_York DST gap (03-14 02:00 local) and
+#: overlap (11-07 01:00 local), so a bound resolved with the wrong
+#: offset changes a verdict.
+_HAND_MANIFEST = [
+    ("i1.parquet", "n", "int64", "10", "20"),
+    ("i2.parquet", "n", "int64", "-5", "3"),
+    ("u1.parquet", "n", "uint64", "18446744073709551600", "18446744073709551615"),
+    ("d1.parquet", "x", "double", "0.5", "1.5"),
+    ("d2.parquet", "x", "double", "-1e3", "-2.5"),
+    ("t1.parquet", "_time", "timestamp[us, tz=UTC]",
+     "2021-03-14 06:00:00+00:00", "2021-03-14 07:15:00+00:00"),
+    ("t2.parquet", "_time", "timestamp[us, tz=UTC]",
+     "2021-03-14 07:15:00+00:00", "2021-03-14 07:45:00+00:00"),
+    ("t3.parquet", "_time", "timestamp[us]", "2021-03-14 03:10:00", "2021-03-14 04:00:00"),
+    ("t4.parquet", "_time", "timestamp[us, tz=UTC]",
+     "2021-11-07 05:00:00+00:00", "2021-11-07 06:00:00+00:00"),
+    ("t5.parquet", "_time", "timestamp[us]", "2021-11-07 01:10:00", "2021-11-07 01:50:00"),
+    ("t6.parquet", "_time", "timestamp[us]",
+     "2024-01-01 00:00:00.250000", "2024-01-01 00:00:00.750000"),
+    ("dt1.parquet", "day", "date32[day]", "2021-03-13", "2021-03-15"),
+    ("s1.parquet", "_field", "string", "click", "click"),
+    ("s2.parquet", "_field", "string", "a", "m"),
+    ("m1.parquet", "_field", "string", "view", "view"),
+    ("m1.parquet", "_time", "timestamp[us]", "2021-03-14 00:00:00", "2021-03-14 23:59:59"),
+    ("null_min.parquet", "n", "int64", None, "5"),
+    ("null_both.parquet", "x", "double", None, None),
+    ("bad_int.parquet", "n", "int64", "abc", "5"),
+    ("bad_nan.parquet", "x", "double", "NaN", "NaN"),
+    ("bad_ts.parquet", "_time", "timestamp[us]", "not-a-time", "2021-03-14 05:00:00"),
+    ("bad_type.parquet", "n", None, "10", "20"),
+]
+
+#: Constraint sets whose bounds are inside the typed grammar: date-only,
+#: minute and fractional-second timestamps, DST-gap and -overlap wall
+#: times, integers up to 38 digits, decimal floats.
+_WELL_FORMED_BOUNDS = [
+    {"n": ("12", "15")},
+    {"n": ("-10", "0")},
+    {"n": ("21", None)},
+    {"n": (None, "9")},
+    {"n": ("18446744073709551610", None)},
+    {"x": ("1.6", None)},
+    {"x": ("-3", "0.4")},
+    {"x": ("1e-1", "5E2")},
+    {"_time": ("2021-03-14 02:30:00", "2021-03-14 02:45")},
+    {"_time": ("2021-11-07 01:30", None)},
+    {"_time": (None, "2021-11-07 01:05:00")},
+    {"_time": ("2024-01-01 00:00:00.8", None)},
+    {"_time": ("2024-01-01 00:00:00.123456", "2024-01-01 00:00:00.2")},
+    {"_time": ("2021-03-14", "2021-03-14")},
+    {"day": ("2021-03-16", None)},
+    {"day": (None, "2021-03-12 23:59:59.999999")},
+    {"_field": ("click", "click")},
+    {"_field": ("n", "z")},
+    {"_field": ("view", "view"), "_time": ("2021-03-15", None)},
+]
+
+#: Bounds outside the grammar: the new prune may only keep more.
+_MALFORMED_BOUNDS = [
+    {"n": ("1.5", "abc")},
+    {"n": (" 5", None)},
+    {"n": ("9" * 39, None)},
+    {"x": ("NaN", None)},
+    {"x": (None, "1.5d")},
+    {"_time": ("2021-03-14T05:00:00Z", None)},
+    {"_time": ("2021-3-14", None)},
+    {"_time": ("2021-03-14 05:00:00+01:00", None)},
+    {"_time": ("2024", None)},
+]
+
+
+def _hand_store(spark, tmp_path):
+    """A store of EMPTY data files named by ``_HAND_MANIFEST`` (pruning
+    only lists them) and its committed manifest."""
+    path = str(tmp_path / "hand")
+    os.makedirs(path)
+    for f in {r[0] for r in _HAND_MANIFEST}:
+        open(os.path.join(path, f), "w").close()
+    man = os.path.join(path, bkt.MANIFEST_SUBDIR)
+    rows = [(*r, 1) for r in _HAND_MANIFEST]
+    mf.write_manifest(spark.createDataFrame(rows, mf.MANIFEST_SCHEMA), man)
+    return path, man
+
+
+def _oracle_exclusion_sql(column, lo, hi):
+    """The former Spark-side exclusion predicate, written as SQL: the
+    row belongs to ``column``, carries both stats, and its try_cast
+    [min, max] misses the try_cast bounds, per recorded type family."""
+
+    def miss(t):
+        parts = ["false"]
+        if lo is not None:
+            parts.append(f"try_cast(max_value AS {t}) < try_cast('{lo}' AS {t})")
+        if hi is not None:
+            parts.append(f"try_cast(min_value AS {t}) > try_cast('{hi}' AS {t})")
+        return " OR ".join(parts)
+
+    return (
+        f"(`column` = '{column}' AND min_value IS NOT NULL AND max_value IS "
+        "NOT NULL AND coalesce(CASE "
+        f"WHEN `type` RLIKE '^u?int' THEN {miss('decimal(38,0)')} "
+        "WHEN `type` RLIKE '^(float|double|halffloat|decimal)' THEN "
+        f"{miss('double')} "
+        f"WHEN `type` RLIKE '^(timestamp|date)' THEN {miss('timestamp')} "
+        f"ELSE {miss('string')} END, false))"
+    )
+
+
+def test_driver_prune_matches_spark_predicate_oracle(spark, tmp_path):
+    """The driver-side index keeps a SUPERSET of the files the former
+    Spark-side predicate kept, for every constraint set, and exactly
+    the same files among well-formed rows under well-formed bounds —
+    in UTC and in a DST-observing session zone (the oracle evaluates
+    in the same zone, in one job for all constraint sets)."""
+    path, man = _hand_store(spark, tmp_path)
+    files = sorted({r[0] for r in _HAND_MANIFEST})
+    cases = _WELL_FORMED_BOUNDS + _MALFORMED_BOUNDS
+    excl = [
+        " OR ".join(_oracle_exclusion_sql(c, lo, hi) for c, (lo, hi) in cons.items())
+        for cons in cases
+    ]
+    with bkt._SESSION_CONF_LOCK:
+        prev_tz = spark.conf.get("spark.sql.session.timeZone")
+        try:
+            for tz in ("UTC", "America/New_York"):
+                spark.conf.set("spark.sql.session.timeZone", tz)
+                flags = (
+                    mf.read_manifest(spark, man)
+                    .groupBy("file")
+                    .agg(
+                        *[
+                            F.expr(f"max(CASE WHEN {e} THEN 1 ELSE 0 END)").alias(f"e{i}")
+                            for i, e in enumerate(excl)
+                        ]
+                    )
+                    .collect()
+                )
+                for i, cons in enumerate(cases):
+                    oracle = {
+                        os.path.join(path, f)
+                        for f in files
+                        if f not in {r["file"] for r in flags if r[f"e{i}"] == 1}
+                    }
+                    got = set(mf.prune_files(spark, path, man, constraints=cons))
+                    assert oracle <= got, (tz, cons, sorted(oracle - got))
+                    if i < len(_WELL_FORMED_BOUNDS):
+                        good = {f for f in got | oracle if "bad_" not in f}
+                        assert got & good == oracle & good, (
+                            tz, cons, sorted(got ^ oracle)
+                        )
+                    # the well-formed cases must actually prune
+                    assert i >= len(_WELL_FORMED_BOUNDS) or len(got) < len(files), (
+                        tz, cons
+                    )
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+def test_warm_prune_launches_no_spark_job(spark, tmp_path, monkeypatch):
+    """On a warm generation prune_files launches ZERO Spark jobs for any
+    constraint set (counted through the status tracker; a sentinel job
+    afterwards makes sure the listener has caught up), and a manifest
+    republish costs exactly one index load."""
+    import time
+
+    path, man = _hand_store(spark, tmp_path)
+    sc = spark.sparkContext
+    loads = []
+    real_load = mf._load_index
+    monkeypatch.setattr(
+        mf, "_load_index", lambda *a: loads.append(a) or real_load(*a)
+    )
+
+    def jobs(group, at_least=0):
+        deadline = time.time() + 30
+        while True:
+            ids = sc.statusTracker().getJobIdsForGroup(group)
+            if len(ids) >= at_least or time.time() > deadline:
+                return ids
+            time.sleep(0.05)
+
+    def settle(tag):
+        # listener events arrive in order: once this job is visible,
+        # every earlier job of the thread is too
+        sc.setJobGroup(f"sentinel-{tag}", "sentinel")
+        spark.range(1).count()
+        assert jobs(f"sentinel-{tag}", at_least=1)
+
+    mf._PRUNE_CACHE.clear()
+    try:
+        sc.setJobGroup(f"cold-{tmp_path.name}", "cold prune")
+        mf.prune_files(spark, path, man, constraints={"n": ("12", "15")})
+        assert jobs(f"cold-{tmp_path.name}", at_least=1)  # the counter works
+        assert len(loads) == 1
+
+        sc.setJobGroup(f"warm-{tmp_path.name}", "warm prune")
+        for cons in _WELL_FORMED_BOUNDS:
+            mf.prune_files(spark, path, man, constraints=cons)
+        settle(f"a-{tmp_path.name}")
+        assert jobs(f"warm-{tmp_path.name}") == []
+        assert len(loads) == 1
+
+        # republish -> one load, then warm again
+        rows = [(*r, 1) for r in _HAND_MANIFEST]
+        mf.write_manifest(spark.createDataFrame(rows, mf.MANIFEST_SCHEMA), man)
+        for cons in _WELL_FORMED_BOUNDS:
+            mf.prune_files(spark, path, man, constraints=cons)
+        assert len(loads) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -2303,7 +2303,7 @@ def _compile_stream_single(
         raise FluxError(f"unknown bucket {bucket_name!r}")
     path = bucket_paths[bucket_name]
 
-    store_tag_cols = _store_tag_cols(spark, path)
+    store_tag_cols = bkt._store_tag_cols(spark, path)
     natural_key = ["_measurement", "_field", *store_tag_cols]
     # the stream source needs an explicit schema — the store's own
     # (one batch-side footer read; the partition _date column rides in)
@@ -3292,35 +3292,6 @@ def start_flux_task(
     return writer.start()
 
 
-#: per-(session, store, generation) promoted-tag-column cache — see
-#: the discovery comment in _compile_pipeline. The session component
-#: is the Spark applicationId (stable for a session's lifetime; a
-#: recycled python object id would not be — review r11). The store
-#: generation is the root directory's mtime — BEST-EFFORT staleness
-#: protection: it changes whenever the root's direct children change
-#: (first build, a new measurement, a plain-overwrite rewrite), which
-#: covers how tag-set changes land in practice; a dynamic-partition
-#: overwrite that swaps a store's tag set IN PLACE inside one session
-#: stays outside the contract (a tag set is the store's schema
-#: identity — changing it is a new store version, like any
-#: table-format schema change).
-_TAG_COLS_CACHE: dict[tuple[str, str, float], list[str]] = {}
-
-
-def _store_tag_cols(spark: SparkSession, path: str) -> list[str]:
-    root = os.path.abspath(path)
-    try:
-        gen = os.path.getmtime(root)
-    except OSError:
-        gen = -1.0
-    key = (spark.sparkContext.applicationId, root, gen)
-    if key not in _TAG_COLS_CACHE:
-        _TAG_COLS_CACHE[key] = bkt.tag_columns(bkt.read_bucket(spark, path))
-        if len(_TAG_COLS_CACHE) > 256:
-            _TAG_COLS_CACHE.pop(next(iter(_TAG_COLS_CACHE)))
-    return _TAG_COLS_CACHE[key]
-
-
 def _strip_to(
     body: str, bucket_paths: dict[str, str], params: dict[str, Any]
 ) -> tuple[str, str | None, str | None]:
@@ -3454,7 +3425,7 @@ def _compile_pipeline(
     # is a new store version, like any table-format schema change); a
     # production deployment resolves this from the catalog. Untagged
     # stores yield the classic two-column key, byte-identical plans.
-    store_tag_cols = _store_tag_cols(spark, path)
+    store_tag_cols = bkt._store_tag_cols(spark, path)
     natural_key = ["_measurement", "_field", *store_tag_cols]
 
     start = stop = None

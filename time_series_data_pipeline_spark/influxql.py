@@ -1036,8 +1036,7 @@ def _scan(
             ).strftime("%Y-%m-%d %H:%M:%S")
         else:
             stop = ts
-    probe = bkt.read_bucket(spark, bucket_path)
-    tag_cols = bkt.tag_columns(probe)
+    tag_cols = bkt._store_tag_cols(spark, bucket_path)
     # single-value sets (plain equality, or a multi-select collapsed
     # by the AND-intersection merge) ride the strongest pushdown tier
     # (scan_bucket tags=); an EMPTY intersection ("host"='a' AND

@@ -15,6 +15,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g: the heap of a local
+    session shares the box with its Python workers and the OS cache."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "time_series_data_pipeline_spark",
     shuffle_partitions: int | None = None,
@@ -22,7 +29,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default: half of
+    physical memory, at most 24g).
     Shuffle partitions default to the core count — at 100 TB on a real
     cluster this would instead be sized so post-shuffle partitions land
     in the 128–256 MB range (AQE coalescing handles the long tail).
@@ -43,7 +52,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # managed-table home for bucketed-table tests; off the repo tree

@@ -37,6 +37,7 @@ keeps interactive queries reading a constant number of files.
 
 from __future__ import annotations
 
+import functools
 import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -245,6 +246,37 @@ def read_bucket(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+#: per-(session, store, generation) promoted-tag-column cache — see
+#: the discovery comment in flux._compile_pipeline. The session component
+#: is the Spark applicationId (stable for a session's lifetime; a
+#: recycled python object id would not be — review r11). The store
+#: generation is the root directory's mtime — BEST-EFFORT staleness
+#: protection: it changes whenever the root's direct children change
+#: (first build, a new measurement, a plain-overwrite rewrite), which
+#: covers how tag-set changes land in practice; a dynamic-partition
+#: overwrite that swaps a store's tag set IN PLACE inside one session
+#: stays outside the contract (a tag set is the store's schema
+#: identity — changing it is a new store version, like any
+#: table-format schema change).
+_TAG_COLS_CACHE: dict[tuple[str, str, float], list[str]] = {}
+
+
+def _store_tag_cols(spark: SparkSession, path: str) -> list[str]:
+    import os
+
+    root = os.path.abspath(path)
+    try:
+        gen = os.path.getmtime(root)
+    except OSError:
+        gen = -1.0
+    key = (spark.sparkContext.applicationId, root, gen)
+    if key not in _TAG_COLS_CACHE:
+        _TAG_COLS_CACHE[key] = tag_columns(read_bucket(spark, path))
+        if len(_TAG_COLS_CACHE) > 256:
+            _TAG_COLS_CACHE.pop(next(iter(_TAG_COLS_CACHE)))
+    return _TAG_COLS_CACHE[key]
+
+
 def compact_bucket(
     spark: SparkSession,
     path: str,
@@ -381,30 +413,36 @@ def scan(
     falls back to a ``tags`` map lookup — row-level only (maps carry
     no parquet stats), documented as the slow path.
     """
-    out = bucket
     has_date = "_date" in bucket.columns
     as_col = lambda x: F.lit(x) if isinstance(x, str) else x  # noqa: E731
+    # ONE filter call over the conjunction: each DataFrame.filter is a
+    # py4j round trip with eager analysis. The conjuncts keep the order
+    # CombineFilters gives one filter per predicate, so the optimized
+    # plan is the same either way
+    preds: list[Column] = []
     if measurement is not None:
-        out = out.filter(F.col("_measurement") == measurement)
+        preds.append(F.col("_measurement") == measurement)
     if start is not None:
-        out = out.filter(F.col("_time") >= start)
+        preds.append(F.col("_time") >= start)
         if has_date:
-            out = out.filter(F.col("_date") >= F.to_date(as_col(start)))
+            preds.append(F.col("_date") >= F.to_date(as_col(start)))
     if stop is not None:
-        out = out.filter(F.col("_time") < stop)
+        preds.append(F.col("_time") < stop)
         if has_date:
             # _date is day-truncated, so the half-open _time bound maps
             # to an INCLUSIVE date bound (stop's own day can still hold
             # rows with _time < stop)
-            out = out.filter(F.col("_date") <= F.to_date(as_col(stop)))
+            preds.append(F.col("_date") <= F.to_date(as_col(stop)))
     if field is not None:
-        out = out.filter(F.col("_field") == field)
+        preds.append(F.col("_field") == field)
     for k, v in (tags or {}).items():
         if k in bucket.columns:
-            out = out.filter(F.col(k) == v)
+            preds.append(F.col(k) == v)
         else:
-            out = out.filter(F.element_at(F.col("tags"), F.lit(k)) == v)
-    return out
+            preds.append(F.element_at(F.col("tags"), F.lit(k)) == v)
+    if not preds:
+        return bucket
+    return bucket.filter(functools.reduce(Column.__and__, preds))
 
 
 def expire_partitions(
