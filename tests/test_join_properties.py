@@ -28,6 +28,18 @@ ROWS = st.lists(
     max_size=12,
 )
 
+# as-of inputs: two keys on a 300 s grid of five points, so equal right
+# timestamps (the greatest-value tie) and equidistant neighbours
+# (nearest's tie to backward) turn up within the example budget
+ASOF_ROWS = st.lists(
+    st.tuples(
+        st.integers(0, 1),
+        st.integers(0, 4).map(lambda i: i * 300),
+        st.integers(-5, 5),
+    ),
+    max_size=12,
+)
+
 CFG = dict(
     max_examples=12,
     deadline=None,
@@ -47,11 +59,40 @@ def _df(spark, rows, ts_as_timestamp=True):
     return df.select("k", F.timestamp_seconds("sec").alias("ts"), "v")
 
 
-@given(left=ROWS, right=ROWS)
+def _asof_reference(left, right, direction):
+    """Brute-force as-of match per left row, as (ts, value) or None.
+
+    backward: greatest right ts <= left ts; forward: smallest right ts
+    >= left ts; either way the greatest value among equal timestamps.
+    nearest: the closer of the two, backward at equal distance."""
+    out = []
+    for k, s, v in left:
+        before = [(rs, rv) for rk, rs, rv in right if rk == k and rs <= s]
+        after = [(rs, rv) for rk, rs, rv in right if rk == k and rs >= s]
+        bwd = max(before) if before else None
+        fwd = min(after, key=lambda c: (c[0], -c[1])) if after else None
+        if direction == "backward":
+            best = bwd
+        elif direction == "forward":
+            best = fwd
+        elif bwd is None or fwd is None:
+            best = bwd or fwd
+        else:
+            best = fwd if fwd[0] - s < s - bwd[0] else bwd
+        out.append((k, s, v, best))
+    return out
+
+
+@given(
+    left=ASOF_ROWS,
+    right=ASOF_ROWS,
+    direction=st.sampled_from(["backward", "forward", "nearest"]),
+)
 @settings(**CFG)
-def test_asof_join_matches_bruteforce(spark, left, right):
+def test_asof_join_matches_bruteforce(spark, left, right, direction):
     out = asof_join(
-        _df(spark, left), _df(spark, right), by=["k"], ts_col="ts", value_cols=["v"]
+        _df(spark, left), _df(spark, right), by=["k"], ts_col="ts",
+        value_cols=["v"], direction=direction,
     ).collect()
     got = sorted(
         (r["k"], r["ts"].timestamp(), r["v"],
@@ -59,15 +100,12 @@ def test_asof_join_matches_bruteforce(spark, left, right):
          r["asof_v"])
         for r in out
     )
-    expect = []
-    for k, s, v in left:
-        cands = [(rs, rv) for rk, rs, rv in right if rk == k and rs <= s]
-        best = max(cands) if cands else None  # ties: greatest (ts, value)
-        expect.append(
-            (k, float(s), float(v),
-             float(best[0]) if best else None,
-             float(best[1]) if best else None)
-        )
+    expect = [
+        (k, float(s), float(v),
+         float(best[0]) if best else None,
+         float(best[1]) if best else None)
+        for k, s, v, best in _asof_reference(left, right, direction)
+    ]
     assert got == sorted(expect)
 
 

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import collections
 import threading
 
 from collections.abc import Callable
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -86,6 +88,20 @@ def cached_store(build: Callable[[str], None], prefix: str, key_material: str) -
     return path
 
 
+#: Pinned frames, oldest first, keyed by (application id, semantic hash
+#: of the plan) so pinning a plan that is already cached refreshes its
+#: entry instead of adding one. Nothing else unpersists a pin, so the
+#: FIFO bounds what a long-lived session keeps cached (a curation op pins
+#: 7 frames); evicting the oldest is safe because every pinned plan is
+#: deterministic, and a lazy plan that still reads an evicted frame
+#: recomputes it from lineage. Only JVM handles are held, never the
+#: Python session; entries of a stopped context (another application id)
+#: are dropped by the next pin.
+_PINNED: collections.OrderedDict[tuple[str, int], JavaObject] = collections.OrderedDict()
+_PINNED_MAX = 64
+_PINNED_LOCK = threading.Lock()
+
+
 def pin(df: DataFrame) -> DataFrame:
     """Persist an intermediate that multiple plan branches reuse.
 
@@ -96,5 +112,17 @@ def pin(df: DataFrame) -> DataFrame:
     (e.g. a normalized vector) into every downstream consumer.
     MEMORY_AND_DISK keeps the 100 TB stance honest: spills instead of
     OOM — the moral equivalent of materializing a temp table between
-    passes of a multi-pass MapReduce job."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    passes of a multi-pass MapReduce job. The frame must be
+    deterministic: after ``_PINNED_MAX`` newer pins it is unpersisted."""
+    app = df.sparkSession.sparkContext.applicationId
+    key = (app, df.semanticHash())
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    with _PINNED_LOCK:
+        for k in [k for k in _PINNED if k[0] != app]:
+            del _PINNED[k]
+        _PINNED[key] = df._jdf
+        _PINNED.move_to_end(key)
+        evicted = [_PINNED.popitem(last=False)[1] for _ in range(len(_PINNED) - _PINNED_MAX)]
+    for jdf in evicted:
+        jdf.unpersist(False)
+    return df

@@ -110,7 +110,7 @@ def to_long(
         lookup = F.create_map(
             *[F.lit(x) for kv in field_labels.items() for x in kv]
         )
-        field = F.coalesce(lookup.getItem(F.col("_field")), F.col("_field"))
+        field = F.coalesce(lookup[F.col("_field")], F.col("_field"))
     tag_exprs = [F.col(c).cast("string").alias(c) for c in tag_cols]
     tags_map = (
         F.create_map(
