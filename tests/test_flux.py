@@ -7917,7 +7917,7 @@ def test_start_flux_task_picks_up_new_data(spark, tmp_path):
 
 # -- compiler robustness fuzz (round 11) ---------------------------------
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 
@@ -8054,6 +8054,7 @@ _STAGE_POOL = [
     "fill(usePrevious: true)",
     'rename(columns: {_value: "reading"})',
     "timeShift(duration: 1d)",
+    "timeShift(duration: 1h)",
     'duplicate(column: "_value", as: "copy")',
     'set(key: "source", value: "fuzz")',
     "toFloat()",
@@ -8133,6 +8134,153 @@ def test_stream_compiler_total_over_stage_compositions(spark, store, stages):
     except flux.FluxError:
         return
     assert out is not None and out.isStreaming
+
+
+@settings(
+    max_examples=60,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(stages=st.lists(st.sampled_from(_STAGE_POOL), min_size=1, max_size=4))
+@example(
+    stages=[
+        "timeShift(duration: 1h)",
+        'range(start: "2024-01-03 00:00:00", stop: "2024-01-06 00:00:00")',
+    ]
+)
+def test_stream_accepted_compositions_compile_in_batch(spark, store, stages):
+    """A live panel is the batch text run incrementally, so the stream
+    subset sits inside the batch one: every composition that
+    compile_flux_stream compiles must compile under compile_flux too.
+    (The example is the drift the shared stage parsers closed: the
+    stream compiler used to accept range() after a row-level
+    timeShift and filter the stored, unshifted times.)"""
+    text = 'from(bucket: "b")\n  |> ' + "\n  |> ".join(stages)
+    try:
+        flux.compile_flux_stream(
+            spark, text, {"b": store}, now="2024-01-06T00:00:00Z"
+        )
+    except flux.FluxError:
+        return
+    out = flux.compile_flux(
+        spark, text, {"b": store}, now="2024-01-06T00:00:00Z"
+    )
+    assert out.columns
+
+
+def test_compile_flux_stream_refuses_range_after_time_shift(spark, store):
+    """range() after a row-level timeShift: the scan's pushed bounds
+    filter STORED timestamps, so the stream would emit shifted rows
+    outside the range the user wrote. Both compilers raise the same
+    FluxError."""
+    text = (
+        'from(bucket: "b") |> timeShift(duration: 3h) '
+        '|> range(start: "2024-01-01T04:00:00Z", '
+        'stop: "2024-01-01T06:00:00Z")'
+    )
+    with pytest.raises(flux.FluxError) as batch_err:
+        flux.compile_flux(spark, text, {"b": store})
+    with pytest.raises(flux.FluxError) as stream_err:
+        flux.compile_flux_stream(spark, text, {"b": store})
+    assert "after a time-rewriting stage" in str(stream_err.value)
+    assert str(stream_err.value) == str(batch_err.value)
+
+
+_AGG_1H = "aggregateWindow(every: 1h, fn: mean)"
+
+
+@pytest.mark.parametrize(
+    "stages, msg",
+    [
+        # accepted: the batch parser accepts them and the stream adds
+        # no rule of its own
+        (['timeShift(duration: 1h, columns: ["_time"])', _AGG_1H], None),
+        (['cumulativeSum(columns: ["_value"])'], None),
+        (['kaufmansAMA(n: 4, column: "_value")'], None),
+        (['aggregateWindow(every: 1h, fn: mean, createEmpty: "false")'], None),
+        (["aggregateWindow(every: 1mo, fn: sum, offset: 0s)"], None),
+        # the batch parser's own messages
+        (["aggregateWindow(every: 1h, fn: bogus)"],
+         "unsupported aggregateWindow fn 'bogus'"),
+        (["aggregateWindow(every: 1h, fn: mean, createEmpty: 5)"],
+         "createEmpty: expected a boolean"),
+        (["difference(initialZero: true)"], "set keepFirst: true"),
+        (["increase(x: 1)"], "takes no arguments"),
+        (['cumulativeSum(columns: ["x"])'], "ships only columns"),
+        (["timeShift(duration: 1h, x: 1)"], "timeShift: unsupported args"),
+        (["map(fn: (r) => ({ r with _value: r._value }), x: 1)"],
+         "map: unsupported args"),
+        ([_AGG_1H, "keep(columns: [])"], "keep: columns list is empty"),
+        ([_AGG_1H, 'rename(columns: {mean: "m"}, x: 1)'],
+         "rename: unsupported args"),
+        ([_AGG_1H, "filter(fn: (r) => r.nope > 1)"],
+         r"filter: unknown column\(s\) \['nope'\]"),
+        # the streaming rules, now stated once per rule
+        (["difference(keepFirst: true)"],
+         r"difference\(keepFirst: true\) is outside the STREAMING subset"),
+        ([_AGG_1H, 'range(start: "2024-01-03 00:00:00")'],
+         r"range\(\) after an aggregation/transform stage is outside the "
+         "STREAMING subset"),
+        ([_AGG_1H, _AGG_1H],
+         r"aggregateWindow\(\) after aggregateWindow is outside the "
+         "STREAMING subset"),
+        (["fill(value: 0.0)"],
+         r"fill\(\) before aggregateWindow is outside the STREAMING subset"),
+    ],
+)
+def test_compile_flux_stream_parses_stages_like_batch(spark, store, stages, msg):
+    """compile_flux_stream parses every stage with the batch compiler's
+    parser and adds only its streaming rules: an input the batch
+    accepts and no streaming rule refuses compiles live (and in batch),
+    and a malformed stage raises the batch parser's message."""
+    text = 'from(bucket: "b") |> ' + " |> ".join(stages)
+    if msg is None:
+        assert flux.compile_flux_stream(spark, text, {"b": store}).isStreaming
+        assert flux.compile_flux(spark, text, {"b": store}).columns
+        return
+    with pytest.raises(flux.FluxError, match=msg):
+        flux.compile_flux_stream(spark, text, {"b": store})
+
+
+_JOIN_AB = (
+    'a = from(bucket: "b") |> last()\n'
+    'b = from(bucket: "b") |> last()\n'
+    'join(tables: {a: a, b: b}, on: ["_field"])\n'
+)
+
+
+@pytest.mark.parametrize(
+    "compile_name, text, msg",
+    [
+        # a calendar window refuses period: before parsing its value
+        # (2mo is not a duration token), in both compilers
+        ("compile_flux", 'from(bucket: "b") |> aggregateWindow(every: 1mo, '
+         "fn: mean, period: 2mo)", "do not compose with calendar"),
+        ("compile_flux_stream", 'from(bucket: "b") |> aggregateWindow('
+         "every: 1mo, fn: mean, period: 2mo)", "do not compose with calendar"),
+        ("compile_flux", 'from(bucket: "b") |> timedMovingAverage()',
+         "timedMovingAverage period: bad duration None"),
+        # tail-stage errors name the offending stage
+        ("compile_flux", 'from(bucket: "b") |> keep(columns: ["nope"])',
+         r"keep: unknown column\(s\) \['nope'\]; frame has .*"
+         r": 'keep\(columns: \[\"nope\"\]\)'"),
+        ("compile_flux", 'from(bucket: "b") |> derivative() '
+         "|> map(fn: (r) => ({ r with _value: r._value * 2.0 }))",
+         "map on _value after derivative is ambiguous in this subset "
+         r"\(the frame keeps the original _value beside the named result "
+         "column — upstream rewrites _value\\)"),
+        # the combiner's map is the pipeline map's parser
+        ("compile_flux", _JOIN_AB + "  |> map(fn: (r) => ({ r with _value: "
+         "1.0 }), x: 1)", "map: unsupported args"),
+        ("compile_flux", _JOIN_AB + "  |> map(fn: (r) => ({ r with _time: "
+         "1.0 }))", "got '_time' \\(rewriting keys/time"),
+    ],
+)
+def test_shared_parser_messages(spark, store, compile_name, text, msg):
+    """Messages the shared stage parsers give where a compiler's own
+    copy used to say something else."""
+    with pytest.raises(flux.FluxError, match=msg):
+        getattr(flux, compile_name)(spark, text, {"b": store})
 
 
 @settings(

@@ -1,7 +1,8 @@
-"""Property-based tests (hypothesis) for the custom join operators:
-the Spark implementations must agree with a brute-force Python
-reference on arbitrary small inputs — keys missing from one side,
-duplicate timestamps, empty sides, boundary-exact matches.
+"""Property-based tests (hypothesis) for the custom join operators
+and the spine-join gap fill: the Spark implementations must agree with
+a brute-force Python reference on arbitrary small inputs — keys
+missing from one side, duplicate timestamps, empty sides,
+boundary-exact matches, edge gaps.
 """
 
 from __future__ import annotations
@@ -9,7 +10,7 @@ from __future__ import annotations
 import pytest
 
 try:
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 except ImportError:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
@@ -107,6 +108,97 @@ def test_asof_join_matches_bruteforce(spark, left, right, direction):
         for k, s, v, best in _asof_reference(left, right, direction)
     ]
     assert got == sorted(expect)
+
+
+# gap-fill inputs: two keys over eight 300 s buckets, several rows per
+# bucket and NULL values, so interior gaps, edge gaps (a series that
+# starts after or ends before the shared spine) and buckets holding
+# only NULLs turn up
+FILL_ROWS = st.lists(
+    st.tuples(
+        st.integers(0, 1),
+        st.integers(0, 8 * 300 - 1),
+        st.one_of(st.none(), st.integers(-5, 5)),
+    ),
+    max_size=12,
+)
+
+
+def _gap_fill_interp_reference(rows, step=300):
+    """Brute-force gap_fill_interpolated, as (bucket, key, n_events,
+    avg_value, interp_value) rows over the GLOBAL [first, last] bucket
+    spine, for every key. An observed bucket (any row, NULL values
+    included) keeps the sum of its non-null values over its row count
+    (NULL when every value is NULL); an empty bucket lies on the line
+    between the nearest observed buckets before and after it — NULL at
+    the edges, or when either neighbour's value is NULL."""
+    seen = {}
+    for k, s, v in rows:
+        n, tot, vals = seen.get((k, s - s % step), (0, 0, 0))
+        seen[(k, s - s % step)] = (n + 1, tot + (v or 0), vals + (v is not None))
+    if not seen:
+        return []
+    lo, hi = min(b for _k, b in seen), max(b for _k, b in seen)
+    out = []
+    for key in sorted({k for k, _b in seen}):
+        obs = {
+            b: (n, tot / n if vals else None)
+            for (k, b), (n, tot, vals) in seen.items()
+            if k == key
+        }
+        for b in range(lo, hi + 1, step):
+            if b in obs:
+                out.append((b, key, obs[b][0], obs[b][1], obs[b][1]))
+                continue
+            before = [p for p in obs if p < b]
+            after = [q for q in obs if q > b]
+            interp = None
+            if before and after:
+                p, q = max(before), min(after)
+                vp, vq = obs[p][1], obs[q][1]
+                if vp is not None and vq is not None:
+                    # the operator's own expression order, in µs
+                    interp = vp + (vq - vp) * ((b - p) * 10**6) / (
+                        (q - p) * 10**6
+                    )
+            out.append((b, key, 0, None, interp))
+    return out
+
+
+@given(rows=FILL_ROWS)
+@example(rows=[(0, 0, 1), (0, 1500, 4), (0, 1600, None), (0, 2100, 6),
+               (1, 900, 2), (1, 2100, None)])
+@example(rows=[(0, 0, 3), (0, 2100, 5), (1, 1200, 7)])
+@settings(**CFG)
+def test_gap_fill_interpolated_matches_bruteforce(spark, rows):
+    """Keyed series over a shared spine: interior gaps interpolate,
+    edge gaps stay NULL (the reversed running frame that carries the
+    NEXT observation must stop at the series' last one), a
+    single-observation series interpolates nothing, and a NULL-valued
+    observation nulls the gaps beside it."""
+    from pyspark.sql import functions as F
+
+    from time_series_data_pipeline_spark.operators.timeseries import (
+        gap_fill_interpolated,
+    )
+
+    df = spark.createDataFrame(rows or [(0, 0, None)], "k int, sec int, v int")
+    if not rows:
+        df = df.filter("1=0")
+    df = df.select(
+        "k",
+        F.timestamp_seconds("sec").alias("ts"),
+        F.col("v").cast("double").alias("v"),
+    )
+    out = gap_fill_interpolated(
+        df, "ts", "v", "5 minutes", 300, keys=["k"]
+    ).collect()
+    got = sorted(
+        (int(r["bucket"].timestamp()), r["k"], r["n_events"],
+         r["avg_value"], r["interp_value"])
+        for r in out
+    )
+    assert got == sorted(_gap_fill_interp_reference(rows))
 
 
 @given(left=ROWS, right=ROWS, span=st.sampled_from([60, 600, 1800, 7200]))

@@ -438,12 +438,7 @@ def _parse_etma_n(a: dict, params: dict) -> int:
         raise FluxError(
             f"exponentialTimeMovingAverage n must be > 0: {dur!r}"
         )
-    extra = set(a) - {"n"}
-    if extra:
-        raise FluxError(
-            f"exponentialTimeMovingAverage: unsupported args "
-            f"{sorted(extra)}"
-        )
+    _no_extra(a, {"n"}, "exponentialTimeMovingAverage")
     return n_s * 1_000_000
 
 
@@ -463,11 +458,7 @@ def _parse_tma_windowed(a: dict, params: dict, stage: str) -> tuple[int, int | N
             or _duration_seconds(v) <= 0
         ):
             raise FluxError(f"timedMovingAverage {nm}: bad duration {v!r}")
-    extra = set(a) - {"every", "period"}
-    if extra:
-        raise FluxError(
-            f"timedMovingAverage: unsupported args {sorted(extra)}"
-        )
+    _no_extra(a, {"every", "period"}, "timedMovingAverage")
     every_s = _duration_seconds(tma_every)
     period_s = _duration_seconds(tma_period)
     if period_s != every_s and period_s % every_s != 0:
@@ -1418,10 +1409,9 @@ def _post_value_map(
     # normalize bracketed reference layouts FIRST (r[ "_value" ] must
     # remap exactly like r["_value"] — the postfilter's formatting-
     # invariance rule), then remap the value reference onto valcol
-    norm = [re.sub(r'^r\[\s*"(.*)"\s*\]$', r'r["\1"]', t) for t in tokens]
     new_toks = [
         f'r["{valcol}"]' if t in ('r["_value"]', "r._value") else t
-        for t in norm
+        for t in map(_norm_ref, tokens)
     ]
     refs = [
         t[3:-2] if t.startswith('r["') else t[2:]
@@ -1478,9 +1468,7 @@ def _parse_bins(tok: str, params: dict[str, Any]) -> list[float]:
     for req in ("start", step_key, "count"):
         if req not in a:
             raise FluxError(f"{kind} requires {req}:")
-    extra = set(a) - {"start", step_key, "count", "infinity"}
-    if extra:
-        raise FluxError(f"{kind}: unsupported args {sorted(extra)}")
+    _no_extra(a, {"start", step_key, "count", "infinity"}, kind)
     start = _resolve(a["start"], params)
     step = _resolve(a[step_key], params)
     count = _resolve(a["count"], params)
@@ -1561,7 +1549,8 @@ def _str_map(tok: str, where: str) -> dict[str, str]:
     return out
 
 
-def _filter_extract(stage: str) -> str:
+def _filter_tokens(stage: str) -> list[str]:
+    """``filter(fn: (r) => <predicate>)`` → the predicate's tokens."""
     m = re.match(
         r"^filter\s*\(\s*fn\s*:\s*\(\s*r\s*\)\s*=>\s*(.*)\)\s*$",
         stage,
@@ -1569,7 +1558,7 @@ def _filter_extract(stage: str) -> str:
     )
     if not m:
         raise FluxError(f"malformed filter stage: {stage!r}")
-    return m.group(1).strip()
+    return _tokenize_pred(m.group(1).strip())
 
 
 def _resolve_bound(
@@ -1595,6 +1584,22 @@ def _resolve_bound(
     return str(v).replace("T", " ").replace("Z", "")
 
 
+def _norm_ref(tok: str) -> str:
+    """Collapse the bracketed reference layout ``r[ "col" ]`` to
+    ``r["col"]``, so every legal layout validates and remaps alike
+    (the formatting-invariance property)."""
+    return re.sub(r'^r\[\s*"(.*)"\s*\]$', r'r["\1"]', tok)
+
+
+def _ref_cols(toks: list[str]) -> list[str]:
+    """The column names a normalized token list references."""
+    return [
+        t[3:-2] if t.startswith('r["') else t[2:]
+        for t in toks
+        if t.startswith('r["') or t.startswith("r.")
+    ]
+
+
 def _validate_refs(
     toks: list[str], known: set[str], where: str
 ) -> None:
@@ -1602,19 +1607,806 @@ def _validate_refs(
     (formatting-invariance), extract every ``r[...]``/``r.col``
     reference, and raise a FluxError NAMING unknown columns instead of
     leaking a Spark analysis error downstream."""
-    refs = {
-        t[3:-2] if t.startswith('r["') else t[2:]
-        for t in (
-            re.sub(r'^r\[\s*"(.*)"\s*\]$', r'r["\1"]', t) for t in toks
-        )
-        if t.startswith('r["') or t.startswith("r.")
-    }
-    missing = sorted(refs - known)
+    missing = sorted(set(_ref_cols([_norm_ref(t) for t in toks])) - known)
     if missing:
         raise FluxError(
             f"{where}: unknown column(s) {missing}; the store's record "
             f"columns are {sorted(known)}"
         )
+
+
+# ---------------------------------------------------------------------
+# Stage parsers shared by the batch compiler (_compile_pipeline) and
+# the streaming compiler (_compile_stream_single). Each validates one
+# stage's arguments and returns what the batch compiler records for it;
+# the streaming compiler adds only its own placement and state rules.
+# ---------------------------------------------------------------------
+
+_MAP_FN_RE = re.compile(
+    r"^\(\s*r\s*\)\s*=>\s*\(\s*\{\s*r\s+with\s+"
+    r"(\w+|\"[^\"]+\")\s*:\s*(.*?)\s*\}\s*\)\s*$",
+    re.DOTALL,
+)
+
+#: stages that act on raw rows only: after a terminal (aggregation /
+#: transform) stage they would silently act on its output instead
+_ROW_ONLY_HEADS = (
+    "range", "group", "hourSelection", "truncateTimeColumn", "toFloat",
+    "toInt",
+)
+
+#: the ``n:``-parameterized per-point transforms → their transform kind
+_N_TRANSFORMS = {
+    "movingAverage": "ma",
+    "chandeMomentumOscillator": "cmo",
+    "kaufmansER": "ker",
+    "exponentialMovingAverage": "ema",
+    "doubleEMA": "ema2",
+    "tripleEMA": "ema3",
+    "relativeStrengthIndex": "rsi",
+    "tripleExponentialDerivative": "trix",
+    "kaufmansAMA": "kama",
+}
+
+#: the per-point transforms _parse_transform reads (both compilers)
+_SHARED_TRANSFORMS = (
+    *_N_TRANSFORMS, "exponentialTimeMovingAverage", "derivative",
+    "difference", "cumulativeSum", "increase", "elapsed", "stateDuration",
+    "stateCount", "interpolate.linear",
+)
+
+
+def _check_stage_order(
+    head: str,
+    stage: str,
+    terminal: bool,
+    time_rewritten: bool,
+    row_only: tuple[str, ...] = _ROW_ONLY_HEADS,
+    subset: str = "the shipped subset",
+) -> None:
+    """The stage-order rules both compilers enforce: a raw-row stage
+    (``row_only``) after a terminal stage, and ``range()`` after a
+    row-level ``_time`` rewrite — the scan's pushed bounds filter
+    STORED timestamps, so after timeShift/truncateTimeColumn they would
+    filter rewritten ones. Both raise rather than mis-compile."""
+    if terminal and head in row_only:
+        raise FluxError(
+            f"{head}() after an aggregation/transform stage is outside "
+            f"{subset} (it would act on raw rows): {stage!r}"
+        )
+    if head == "range" and time_rewritten:
+        raise FluxError(
+            "range() after a time-rewriting stage (timeShift/"
+            "truncateTimeColumn) is outside the shipped subset (the "
+            f"pushed bounds would filter shifted timestamps): {stage!r}"
+        )
+
+
+def _no_extra(a: dict[str, str], allowed: set[str], where: str) -> None:
+    extra = set(a) - allowed
+    if extra:
+        raise FluxError(f"{where}: unsupported args {sorted(extra)}")
+
+
+def _dur_arg(
+    a: dict[str, str],
+    key: str,
+    params: dict[str, Any],
+    where: str,
+    default: str | None = None,
+    positive: bool = True,
+) -> int:
+    """A fixed-duration argument in seconds (``default`` when absent)."""
+    v = _resolve(a[key], params) if key in a else default
+    if not (isinstance(v, str) and _DUR_RE.match(v)):
+        raise FluxError(f"{where} {key}: bad duration {v!r}")
+    secs = _duration_seconds(v)
+    if positive and secs <= 0:
+        raise FluxError(f"{where} {key} must be > 0: {v!r}")
+    return secs
+
+
+def _int_arg(
+    a: dict[str, str], key: str, params: dict[str, Any], where: str
+) -> int:
+    """A positive int argument (absent counts as invalid)."""
+    n = _resolve(a[key], params) if key in a else None
+    if not isinstance(n, int) or isinstance(n, bool) or n < 1:
+        raise FluxError(f"{where} {key}: positive int required, got {n!r}")
+    return n
+
+
+def _bool_arg(
+    a: dict[str, str], key: str, params: dict[str, Any], where: str
+) -> bool:
+    """A boolean argument, false when absent."""
+    v = _resolve(a[key], params) if key in a else False
+    if not isinstance(v, bool):
+        raise FluxError(f"{where} {key}: expected a boolean, got {v!r}")
+    return v
+
+
+def _shift_time(col: str, seconds: int) -> Column:
+    """A timestamp column moved by whole seconds, in integer µs."""
+    return F.timestamp_micros(
+        F.unix_micros(col) + F.lit(seconds * 1_000_000)
+    )
+
+
+def _parse_range(
+    stage: str,
+    params: dict[str, Any],
+    now: str | None,
+    start: str | None,
+    stop: str | None,
+) -> tuple[str | None, str | None]:
+    """``range(start:, stop:)`` → the scan bounds; a bound the stage
+    omits keeps its previous value."""
+    a = _args(stage, "range")
+    if "start" in a:
+        start = _resolve_bound(a["start"], params, now, "range")
+    if "stop" in a:
+        stop = _resolve_bound(a["stop"], params, now, "range")
+    return start, stop
+
+
+def _row_filter(
+    toks: list[str], natural_key: list[str], params: dict[str, Any]
+) -> Column:
+    """A pre-aggregate (raw-row) filter predicate. References validate
+    against the STORE's record columns first: a predicate on a column
+    the store does not carry raises a FluxError naming it, not a Spark
+    analysis error downstream."""
+    _validate_refs(
+        toks, {*natural_key, "_time", "_value", "tags", "_date"}, "filter"
+    )
+    return _parse_pred(toks, params)
+
+
+def _parse_map(stage: str) -> str:
+    """``map(fn: (r) => ({ r with _value: <arith> }))`` → the arith
+    source. The subset ships the _value-rewrite record-extension form
+    only (rewriting _time/_field would change table keys and window
+    semantics — raise rather than mis-compile)."""
+    a = _args(stage, "map")
+    if "fn" not in a:
+        raise FluxError("map requires fn: (r) => ({ r with ... })")
+    _no_extra(a, {"fn"}, "map")
+    m = _MAP_FN_RE.match(a["fn"].strip())
+    if not m:
+        raise FluxError(
+            "map ships only fn: (r) => ({ r with _value: <arith> })"
+            f"; got {a['fn']!r}"
+        )
+    target = m.group(1).strip('"')
+    if target != "_value":
+        raise FluxError(
+            f"map ships only the _value rewrite; got {target!r} "
+            "(rewriting keys/time would change table semantics)"
+        )
+    return m.group(2)
+
+
+def _row_map(src: str, params: dict[str, Any]) -> Column:
+    """The pre-aggregate ``_value`` rewrite, NULL-preserving:
+    arithmetic already propagates null, but greatest/least and
+    when/otherwise (math.mMax, if/then/else) would turn a NULL _value
+    into a non-null constant BEFORE the shared null policy filters it —
+    diverging from the oracles' WHERE value IS NOT NULL and
+    over-counting n. A null input stays null through map."""
+    mapped = _parse_arith(src, params)
+    return F.when(
+        F.col("_value").isNull(), F.lit(None).cast("double")
+    ).otherwise(mapped)
+
+
+def _parse_time_shift(stage: str, params: dict[str, Any]) -> int:
+    """``timeShift(duration:, [columns:])`` → the shift in seconds.
+    The shipped ``columns:`` shape is the default (or an explicit
+    ``["_time"]`` — this store materializes no ``_start``/``_stop``
+    columns to shift)."""
+    a = _args(stage, "timeShift")
+    if "duration" not in a:
+        raise FluxError("timeShift requires duration:")
+    shift_s = _dur_arg(a, "duration", params, "timeShift", positive=False)
+    if "columns" in a and _str_list(
+        a["columns"], "timeShift columns"
+    ) not in (["_time"], ["_start", "_stop", "_time"]):
+        raise FluxError(
+            "timeShift ships the default columns: — every of "
+            "_start/_stop/_time present in the frame shifts together; "
+            f"got {stage!r}"
+        )
+    _no_extra(a, {"duration", "columns"}, "timeShift")
+    return shift_s
+
+
+def _parse_quantile(stage: str, params: dict[str, Any], where: str) -> float:
+    """``quantile(q:, [method:])`` → q. Compiled as the EXACT selector
+    (Flux's exact_selector); the default estimate_tdigest asks for an
+    estimate, which an exact answer satisfies, so both compile;
+    exact_mean has DIFFERENT defined semantics and raises."""
+    a = _args(stage, "quantile")
+    if "q" not in a:
+        raise FluxError(f"{where} requires q:")
+    qv = _resolve(a["q"], params)
+    if isinstance(qv, bool) or not isinstance(qv, (int, float)) or not (
+        0 < float(qv) <= 1
+    ):
+        raise FluxError(f"quantile q: expected a number in (0, 1], got {qv!r}")
+    method = _resolve(a["method"], params) if "method" in a else "exact_selector"
+    if method not in ("exact_selector", "estimate_tdigest"):
+        raise FluxError(
+            "quantile ships the exact_selector method (also answering "
+            f"estimate_tdigest exactly); got method {method!r}"
+        )
+    _no_extra(a, {"q", "method"}, "quantile")
+    return float(qv)
+
+
+def _parse_aggregate_window(
+    stage: str, params: dict[str, Any]
+) -> tuple[tuple, str]:
+    """``aggregateWindow(...)`` → ``((every_s, fn, create_empty, q,
+    period_s, offset_s), time_src)``. ``every_s`` is "month"/"year"
+    for the calendar strides ``1mo``/``1y`` (date_trunc buckets — only
+    the 1-unit anchors ship); ``q`` is the quantile of the windowed
+    quantile lambda; ``period_s`` is None unless the window slides
+    (period a positive multiple of every — Spark's F.window slide
+    semantics 1:1); ``offset_s`` is normalized into [0, every).
+    createEmpty / fn: mode|quantile do not compose with the sliding,
+    offset or calendar forms (gap_fill is tumbling-only; mode's
+    epoch-floor grouping can't explode rows).
+
+    ``time_src`` is the window label source: "_start" is this engine's
+    pinned convention; "_stop" is UPSTREAM'S DEFAULT (the label becomes
+    the window end), so a pasted dashboard query with an explicit
+    timeSrc: "_stop" replays. Calendar windows raise on it (a month's
+    end is not a fixed shift); "_time" (the last raw timestamp) is not
+    a label this order-insensitive frame contract can produce."""
+    a = _args(stage, "aggregateWindow")
+    every = _resolve(a.get("every", ""), params)
+    calendar = None
+    if isinstance(every, str) and every in ("1mo", "1y"):
+        calendar = "month" if every == "1mo" else "year"
+    elif not (isinstance(every, str) and _DUR_RE.match(every)):
+        raise FluxError(f"aggregateWindow every: bad duration {every!r}")
+    fn = a.get("fn", "mean").strip()
+    q = None
+    lm = re.match(
+        r"^\(\s*column\s*,\s*tables\s*=\s*<-\s*\)\s*=>\s*tables\s*"
+        r"\|>\s*(quantile\s*\(.*\))\s*$",
+        fn,
+        re.DOTALL,
+    )
+    if lm:
+        # the WINDOWED QUANTILE lambda (round 11b) — upstream's
+        # documented idiom for parameterized aggregateWindow fns: the
+        # p99-per-window latency panel, same semantics and rank
+        # convention as the bare quantile() stage
+        q = _parse_quantile(
+            lm.group(1).strip(), params, "aggregateWindow quantile"
+        )
+        fn = "quantile"
+    elif fn not in _AGG_FNS:
+        raise FluxError(f"unsupported aggregateWindow fn {fn!r}")
+    ce_raw = _resolve(a.get("createEmpty", "false"), params)
+    # explicit boolean mapping: bool("false") is True, so a
+    # quoted/template-substituted "false" must not gap-fill
+    if isinstance(ce_raw, bool):
+        create_empty = ce_raw
+    elif isinstance(ce_raw, str) and ce_raw.lower() in ("true", "false"):
+        create_empty = ce_raw.lower() == "true"
+    else:
+        raise FluxError(f"createEmpty: expected a boolean, got {ce_raw!r}")
+    compose_err = (
+        "aggregateWindow: period:/offset: do not compose with calendar "
+        "every: (1mo/1y) in the subset"
+    )
+    if calendar is not None and "period" in a:
+        # refused before the value parses: a calendar period (2mo) is
+        # not even a duration token
+        raise FluxError(compose_err)
+    period_s = (
+        _dur_arg(a, "period", params, "aggregateWindow", positive=False)
+        if "period" in a
+        else None
+    )
+    offset_s = (
+        _dur_arg(a, "offset", params, "aggregateWindow", positive=False)
+        if "offset" in a
+        else 0
+    )
+    time_src = "_start"
+    if "timeSrc" in a:
+        time_src = _resolve(a["timeSrc"], params)
+        if time_src not in ("_start", "_stop"):
+            raise FluxError(
+                'aggregateWindow timeSrc: ships "_start" (the '
+                'engine convention) or "_stop" (upstream\'s '
+                f"default label); got {time_src!r}"
+            )
+    _no_extra(
+        a,
+        {"every", "fn", "createEmpty", "period", "offset", "timeSrc"},
+        "aggregateWindow",
+    )
+    if calendar is not None:
+        if offset_s:
+            raise FluxError(compose_err)
+        if time_src == "_stop":
+            raise FluxError(
+                'timeSrc: "_stop" with calendar every: (1mo/1y) '
+                "is outside the subset (a month's end is not a "
+                "fixed shift)"
+            )
+        if create_empty:
+            raise FluxError(
+                "createEmpty with calendar windows is outside "
+                "the shipped subset"
+            )
+        return (calendar, fn, False, q, None, 0), time_src
+    every_s = _duration_seconds(every)
+    if every_s <= 0:
+        raise FluxError(f"aggregateWindow every must be > 0: {every!r}")
+    if period_s is not None and period_s != every_s:
+        if period_s <= 0 or period_s % every_s != 0:
+            raise FluxError(
+                "aggregateWindow period: must be a positive "
+                f"multiple of every: in the subset; got {stage!r}"
+            )
+        if create_empty:
+            raise FluxError(
+                "createEmpty with sliding windows (period != "
+                "every) is outside the shipped subset"
+            )
+        if fn in ("mode", "quantile"):
+            raise FluxError(
+                f"aggregateWindow fn: {fn} with period != every "
+                "is outside the shipped subset"
+            )
+    else:
+        period_s = None
+    offset_s %= every_s
+    if offset_s and (create_empty or fn in ("mode", "quantile")):
+        raise FluxError(
+            "aggregateWindow offset: composes with the plain "
+            "aggregate fns only in the subset"
+        )
+    return (every_s, fn, create_empty, q, period_s, offset_s), time_src
+
+
+def _parse_timed_moving_average(
+    stage: str, params: dict[str, Any]
+) -> tuple[tuple | None, tuple | None]:
+    """``timedMovingAverage`` → ``(agg, None)`` for the
+    WINDOWED-EMISSION form (``every:``, ``period:`` — upstream defines
+    it as window(every:, period:) |> mean(), exactly the sliding
+    aggregateWindow(mean) machinery, start-labeled windows), or
+    ``(None, ("tma", period_s))`` for the bare trailing-frame form."""
+    a = _args(stage, "timedMovingAverage")
+    if "every" in a:
+        every_s, period_s = _parse_tma_windowed(a, params, stage)
+        return (every_s, "mean", False, None, period_s, 0), None
+    period_s = _dur_arg(a, "period", params, "timedMovingAverage")
+    _no_extra(a, {"period"}, "timedMovingAverage")
+    return None, ("tma", period_s)
+
+
+def _parse_state_pred(a: dict[str, str], head: str, params: dict[str, Any]) -> Column:
+    m = re.match(r"^\(\s*r\s*\)\s*=>\s*(.*)$", a["fn"].strip(), re.DOTALL)
+    if not m:
+        raise FluxError(f"malformed {head} fn: {a['fn']!r}")
+    return _parse_pred(_tokenize_pred(m.group(1).strip()), params)
+
+
+def _parse_transform(head: str, stage: str, params: dict[str, Any]) -> tuple:
+    """One of ``_SHARED_TRANSFORMS`` → the batch transform tuple:
+
+    * the ``n:`` family (``_N_TRANSFORMS``) → ``(kind, n)``;
+    * exponentialTimeMovingAverage → ``("etma", n_us)``;
+    * derivative([unit:], [nonNegative:]) → ``("derivative", unit_s,
+      non_negative)`` — per pair Δv ÷ (Δt/unit); nonNegative is the
+      counter form (a decrease assumes the previous value was 0);
+    * difference([nonNegative:], [keepFirst:], [initialZero:]) →
+      ``("difference", nn, keep_first, initial_zero)`` — per-table lag
+      delta, first row dropped unless kept (NULL, or 0 with
+      initialZero — what increase() does internally);
+    * cumulativeSum() → ``("cumsum",)``; increase() → ``("increase",)``;
+    * elapsed([unit:]) → ``("elapsed", unit_s)``;
+    * stateDuration(fn:, [unit:]) → ``("state_duration", pred,
+      unit_s)``; stateCount(fn:) → ``("state_count", pred)``;
+    * interpolate.linear(every:) → ``("interpolate", every_s)``."""
+    a = _args(stage, head)
+    if head in _N_TRANSFORMS:
+        n = _int_arg(a, "n", params, head)
+        if head == "kaufmansAMA":
+            if "column" in a and _resolve(a["column"], params) != "_value":
+                raise FluxError('kaufmansAMA ships column: "_value" only')
+            _no_extra(a, {"n", "column"}, head)
+        else:
+            _no_extra(a, {"n"}, head)
+        return (_N_TRANSFORMS[head], n)
+    if head == "exponentialTimeMovingAverage":
+        return ("etma", _parse_etma_n(a, params))
+    if head == "derivative":
+        unit_s = _dur_arg(a, "unit", params, head, default="1s")
+        nn = _bool_arg(a, "nonNegative", params, head)
+        _no_extra(a, {"unit", "nonNegative"}, head)
+        return ("derivative", unit_s, nn)
+    if head == "difference":
+        nn = _bool_arg(a, "nonNegative", params, head)
+        keep_first = _bool_arg(a, "keepFirst", params, head)
+        initial_zero = _bool_arg(a, "initialZero", params, head)
+        if initial_zero and not keep_first:
+            raise FluxError(
+                "difference initialZero: true applies to the KEPT "
+                "first row — set keepFirst: true (upstream drops "
+                "the first row otherwise and the zero never lands)"
+            )
+        _no_extra(a, {"nonNegative", "keepFirst", "initialZero"}, head)
+        return ("difference", nn, keep_first, initial_zero)
+    if head == "cumulativeSum":
+        cols = (
+            _str_list(a["columns"], "cumulativeSum columns")
+            if "columns" in a
+            else ["_value"]
+        )
+        if set(a) - {"columns"} or cols != ["_value"]:
+            raise FluxError(
+                "cumulativeSum ships only columns: [\"_value\"] "
+                f"(the default); got {stage!r}"
+            )
+        return ("cumsum",)
+    if head == "increase":
+        if a:
+            raise FluxError(
+                f"increase() takes no arguments in the subset: {stage!r}"
+            )
+        return ("increase",)
+    if head == "elapsed":
+        unit_s = _dur_arg(a, "unit", params, head, default="1s")
+        _no_extra(a, {"unit"}, head)
+        return ("elapsed", unit_s)
+    if head == "stateDuration":
+        if "fn" not in a:
+            raise FluxError("stateDuration requires fn: (r) => predicate")
+        unit_s = _dur_arg(a, "unit", params, head, default="1s")
+        _no_extra(a, {"fn", "unit"}, head)
+        return ("state_duration", _parse_state_pred(a, head, params), unit_s)
+    if head == "stateCount":
+        if "fn" not in a:
+            raise FluxError("stateCount requires fn: (r) => predicate")
+        _no_extra(a, {"fn"}, head)
+        return ("state_count", _parse_state_pred(a, head, params))
+    # interpolate.linear
+    if "every" not in a:
+        raise FluxError("interpolate.linear requires every:")
+    ev = _resolve(a["every"], params)
+    if (
+        not (isinstance(ev, str) and _DUR_RE.match(ev))
+        or _duration_seconds(ev) <= 0
+    ):
+        raise FluxError(f"interpolate.linear every: bad duration {ev!r}")
+    _no_extra(a, {"every"}, head)
+    return ("interpolate", _duration_seconds(ev))
+
+
+def _parse_fill(stage: str, params: dict[str, Any]) -> tuple[str, str, Any]:
+    """``fill(column:, value: X)`` / ``fill(column:, usePrevious:
+    true)`` → ``(column, "value" | "previous", value)`` — the Grafana
+    null-fill panel option; exactly one fill mode."""
+    a = _args(stage, "fill")
+    col = _resolve(a["column"], params) if "column" in a else "_value"
+    if not isinstance(col, str):
+        raise FluxError(f"fill column: expected a string, got {col!r}")
+    _no_extra(a, {"column", "value", "usePrevious"}, "fill")
+    up = _bool_arg(a, "usePrevious", params, "fill")
+    if ("value" in a) == up:
+        raise FluxError(
+            "fill needs exactly one of value: or usePrevious: true"
+        )
+    if up:
+        return col, "previous", None
+    return col, "value", _resolve(a["value"], params)
+
+
+def _parse_columns(head: str, stage: str) -> list[str]:
+    """``keep``/``drop(columns: [...])`` → the (non-empty) column list."""
+    a = _args(stage, head)
+    if "columns" not in a:
+        raise FluxError(f"{head} requires columns:")
+    cols = _str_list(a["columns"], f"{head} columns")
+    if not cols:
+        raise FluxError(f"{head}: columns list is empty")
+    _no_extra(a, {"columns"}, head)
+    return cols
+
+
+def _parse_rename(stage: str) -> dict[str, str]:
+    """``rename(columns: {old: "new"})`` → the (non-empty) mapping."""
+    a = _args(stage, "rename")
+    if "columns" not in a:
+        raise FluxError("rename requires columns: {old: \"new\"}")
+    _no_extra(a, {"columns"}, "rename")
+    mapping = _str_map(a["columns"], "rename columns")
+    if not mapping:
+        raise FluxError("rename: columns record is empty")
+    return mapping
+
+
+def _parse_group(
+    stage: str, params: dict[str, Any], natural_key: list[str]
+) -> list[str]:
+    """``group(columns: [...], [mode:])`` → the new table key, in the
+    store's canonical key order (deterministic output columns). The
+    subset ships any subset of the store's table-key columns
+    (_measurement, _field, promoted tags) — including the empty key
+    (``group()``: merge all series into one table) — in the ``by`` form
+    or its ``except`` complement, and raises on anything else."""
+    a = _args(stage, "group")
+    cols = _str_list(a.get("columns", "[]"), "group columns")
+    mode = _resolve(a["mode"], params) if "mode" in a else "by"
+    if (
+        set(a) - {"columns", "mode"}
+        or mode not in ("by", "except")
+        or [c for c in cols if c not in natural_key]
+        or len(cols) != len(set(cols))
+    ):
+        raise FluxError(
+            "group ships mode: \"by\"/\"except\" over a subset of "
+            f"the store's table key columns {natural_key} "
+            f"(incl. the empty list — merge all series); got {stage!r}"
+        )
+    if mode == "except":
+        return [c for c in natural_key if c not in cols]
+    return [c for c in natural_key if c in cols]
+
+
+def _parse_yield(stage: str, params: dict[str, Any], name: Any) -> Any:
+    """``yield([name:])`` → the result name (``name`` when unnamed)."""
+    a = _args(stage, "yield")
+    return _resolve(a["name"], params) if "name" in a else name
+
+
+def _apply_row_ops(df: DataFrame, row_ops: list[tuple[str, Any]]) -> DataFrame:
+    """Apply the residual row-level stages to the scanned frame in USER
+    ORDER — a _value filter after a map sees mapped values, and a
+    shifted or truncated ``_time`` feeds window bucketing exactly as
+    Flux's rewrite-then-aggregate order demands."""
+    for kind, c in row_ops:
+        if kind == "filter":
+            df = df.filter(c)
+        elif kind == "timeshift":
+            df = df.withColumn("_time", _shift_time("_time", c))
+        elif kind == "truncate":
+            df = df.withColumn(
+                "_time", F.timestamp_micros(_epoch_floor_us("_time", c))
+            )
+        elif kind == "map_time":
+            # calendar truncation: an in-plan _time rewrite
+            df = df.withColumn("_time", c)
+        else:
+            df = df.withColumn("_value", c)
+    return df
+
+
+def _tail_op(
+    out: DataFrame,
+    op: tuple[str, Any, str],
+    valcol: str | None,
+    params: dict[str, Any],
+    table_key: list[str],
+) -> DataFrame:
+    """Apply one tail stage ``(kind, arg, stage)`` — filter / map /
+    fill / keep / drop / rename / duplicate / set / timeshift — to an
+    output frame. ONE definition for the batch tail and the streaming
+    post-aggregate stages, so a pasted panel text shapes its frame (or
+    raises) identically on both paths. ``valcol`` is the column
+    ``r._value`` resolves onto in filter/map (aggregated frames name
+    it after the fn or the yield name); ``table_key`` holds the
+    columns fill(usePrevious:) partitions on where the frame still
+    carries them. Unknown columns raise naming the frame; a streaming
+    join input's window struct ``__w`` is never listed and always
+    kept."""
+    kind, arg, stage = op
+    visible = [c for c in out.columns if c != "__w"]
+    if kind == "filter":
+        # row-wise predicate over the OUTPUT frame (the Grafana
+        # alert/threshold shape): remap r._value onto the value column,
+        # validate every reference, then a plain row filter
+        toks = [
+            f'r["{valcol}"]' if t in ('r["_value"]', "r._value") else t
+            for t in map(_norm_ref, arg)
+        ]
+        missing = sorted({c for c in _ref_cols(toks) if c not in visible})
+        if missing:
+            raise FluxError(
+                f"filter: unknown column(s) {missing}; frame has "
+                f"{visible}: {stage!r}"
+            )
+        return out.filter(_parse_pred(toks, params))
+    if kind == "map":
+        return _post_value_map(out, valcol, arg, params, visible, stage)
+    if kind == "set":
+        return out.withColumn(arg[0], F.lit(arg[1]))
+    if kind == "timeshift":
+        # shift the frame's time column(s): aggregated frames carry
+        # window_start, raw/transform frames _time, and a window()
+        # frame _start/_stop bounds that MUST move with _time
+        # (upstream's default timeShift columns)
+        tcols = [
+            c
+            for c in ("_start", "_stop", "_time", "window_start")
+            if c in out.columns
+        ]
+        if not tcols:
+            raise FluxError(
+                "timeShift needs a _time/window_start column in "
+                f"the frame; frame has {out.columns}"
+            )
+        for c in tcols:
+            out = out.withColumn(c, _shift_time(c, arg))
+        return out
+    named = arg if kind in ("keep", "drop", "rename") else [arg[0]]
+    missing = [c for c in named if c not in visible]
+    if missing:
+        raise FluxError(
+            f"{kind}: unknown column(s) {missing}; frame has {visible}: "
+            f"{stage!r}"
+        )
+    if kind == "keep":
+        # user-listed column order
+        return out.select(*[c for c in out.columns if c == "__w"], *arg)
+    if kind == "drop":
+        return out.drop(*arg)
+    if kind == "duplicate":
+        # upstream overwrites an existing `as` target — so does
+        # withColumn
+        return out.withColumn(arg[1], F.col(arg[0]))
+    if kind == "rename":
+        vals = list(arg.values())
+        clash = sorted(
+            {new for new in vals if new in visible or vals.count(new) > 1}
+        )
+        if clash:
+            # chained withColumnRenamed on a swap/collision set would
+            # silently rename twice — raise instead
+            raise FluxError(
+                f"rename: target column(s) {clash} already exist or "
+                f"collide: {stage!r}"
+            )
+        for old, new in arg.items():
+            out = out.withColumnRenamed(old, new)
+        return out
+    # fill
+    col, mode, value = arg
+    if mode == "value":
+        return out.withColumn(col, F.coalesce(F.col(col), F.lit(value)))
+    # usePrevious: last non-null per table in table order. The frame
+    # is an aggregated/gap-filled one (or a raw scan), so the window
+    # runs over bucket-spine-sized (or pruned) rows per series —
+    # bounded by range/step, not raw volume.
+    from pyspark.sql import Window
+
+    ordc = next(
+        (c for c in ("_time", "window_start") if c in out.columns), None
+    )
+    if ordc is None:
+        raise FluxError(
+            "fill(usePrevious) needs a _time/window_start column to "
+            "define the table order"
+        )
+    w = (
+        Window.partitionBy(*[c for c in table_key if c in out.columns])
+        .orderBy(ordc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return out.withColumn(col, F.last(col, ignorenulls=True).over(w))
+
+
+def _parse_union(stage: str, known: Any) -> list[str]:
+    """``union(tables: [a, b, ...])`` → the referenced names (at least
+    two, each bound in ``known``)."""
+    a = _args(stage, "union")
+    if "tables" not in a:
+        raise FluxError("union requires tables: [a, b, ...]")
+    _no_extra(a, {"tables"}, "union")
+    toks = a["tables"].strip()
+    if not re.match(r"^\[\s*\w+(?:\s*,\s*\w+)*\s*\]$", toks):
+        raise FluxError(
+            f"union tables: expected [name, name, ...]; got {toks!r}"
+        )
+    refs = [t.strip() for t in toks[1:-1].split(",")]
+    if len(refs) < 2:
+        raise FluxError("union needs at least two tables")
+    for ref in refs:
+        if ref not in known:
+            raise FluxError(
+                f"union references unknown pipeline {ref!r} "
+                f"(defined: {sorted(known)})"
+            )
+    return refs
+
+
+def _union_frames(refs: list[str], frames: list[DataFrame]) -> DataFrame:
+    """Bag-concat identical frames, aligned by name (exchange-free)."""
+    cols0 = set(frames[0].columns)
+    for ref, fr_ in zip(refs[1:], frames[1:]):
+        if set(fr_.columns) != cols0:
+            raise FluxError(
+                f"union: pipeline {ref!r} columns "
+                f"{sorted(fr_.columns)} differ from {refs[0]!r} "
+                f"columns {sorted(cols0)} — the subset unions "
+                "identical frames only"
+            )
+    out = frames[0]
+    for fr_ in frames[1:]:
+        out = out.unionByName(fr_)
+    return out
+
+
+def _parse_join(
+    stage: str, params: dict[str, Any], known: Any
+) -> tuple[str, str, str, str, list[str], str]:
+    """``join(tables: {a: x, b: y}, on: [...], [method:])`` → ``(label
+    a, ref a, label b, ref b, on, method)``. method: — Flux's universe
+    join ships inner (the default); the `join` package adds
+    left/right/full (missing side → null columns), 1:1 onto Spark's
+    join types."""
+    a = _args(stage, "join")
+    if "tables" not in a or "on" not in a:
+        raise FluxError(
+            "join requires tables: {a: <pipeline>, b: <pipeline>} "
+            "and an explicit on: [columns]"
+        )
+    method = _resolve(a["method"], params) if "method" in a else "inner"
+    if method not in ("inner", "left", "right", "full"):
+        raise FluxError(
+            'join ships method: "inner" | "left" | "right" | '
+            f'"full"; got {method!r}'
+        )
+    _no_extra(a, {"tables", "on", "method"}, "join")
+    m = re.match(
+        r"^\{\s*(\w+)\s*:\s*(\w+)\s*,\s*(\w+)\s*:\s*(\w+)\s*\}$",
+        a["tables"].strip(),
+    )
+    if not m:
+        raise FluxError(
+            "join ships exactly two named tables "
+            f"{{a: <pipeline>, b: <pipeline>}}; got {a['tables']!r}"
+        )
+    la, ra, lb, rb = m.groups()
+    if la == lb:
+        raise FluxError(f"join table labels collide: {la!r}")
+    for ref in (ra, rb):
+        if ref not in known:
+            raise FluxError(
+                f"join references unknown pipeline {ref!r} "
+                f"(defined: {sorted(known)})"
+            )
+    on = _str_list(a["on"], "join on")
+    if not on:
+        raise FluxError("join on: column list is empty")
+    return la, ra, lb, rb, on, method
+
+
+def _join_frames(
+    dfa: DataFrame, dfb: DataFrame, la: str, lb: str, on: list[str], how: str
+) -> DataFrame:
+    """Join two frames on ``on``; conflicting non-key columns get the
+    ``_<label>`` suffix, exactly as upstream join does."""
+    for label, d in ((la, dfa), (lb, dfb)):
+        missing = [c for c in on if c not in d.columns]
+        if missing:
+            raise FluxError(
+                f"join on column(s) {missing} missing from table "
+                f"{label!r} (frame has {d.columns})"
+            )
+    for c in sorted((set(dfa.columns) & set(dfb.columns)) - set(on)):
+        dfa = dfa.withColumnRenamed(c, f"{c}_{la}")
+        dfb = dfb.withColumnRenamed(c, f"{c}_{lb}")
+    return dfa.join(dfb, on=on, how=how)
 
 
 def _compile_schema_query(
@@ -1686,9 +2478,7 @@ def _compile_schema_query(
             raise FluxError(f"schema.{fn} requires measurement:")
     if fn in ("tagValues", "measurementTagValues"):
         allowed.add("tag")
-    extra = set(a) - allowed
-    if extra:
-        raise FluxError(f"schema.{fn}: unsupported args {sorted(extra)}")
+    _no_extra(a, allowed, f"schema.{fn}")
     bucket_name = _resolve(a["bucket"], params)
     if bucket_name not in bucket_paths:
         raise FluxError(f"unknown bucket {bucket_name!r}")
@@ -1951,6 +2741,11 @@ def compile_flux_stream(
     day file, so the 1-day default finalizes yesterday's windows on
     today's arrival).
 
+    Every stage parses with the batch compiler's own parser, so a text
+    this entry point accepts also compiles under ``compile_flux``, and
+    a malformed stage raises the same FluxError on both paths; only the
+    streaming rules below refuse more.
+
     STREAMING subset — the dashboard pipeline shapes Structured
     Streaming can run incrementally: ``from |> range |> filter* |>
     aggregateWindow(every:, fn: mean/count/sum/min/max/first/last/
@@ -2057,219 +2852,126 @@ def compile_flux_stream(
         )
     fstages = _split_stages(final, require_from=False)
     fhead = fstages[0].split("(", 1)[0].strip()
-    if fhead == "union":
-        if len(fstages) > 1:
-            raise FluxError(
-                "stages after the streaming union() are outside the "
-                f"subset: {fstages[1]!r}"
-            )
-        a = _args(fstages[0], "union")
-        if "tables" not in a:
-            raise FluxError("union requires tables: [a, b, ...]")
-        extra = set(a) - {"tables"}
-        if extra:
-            raise FluxError(f"union: unsupported args {sorted(extra)}")
-        toks = a["tables"].strip()
-        if not re.match(r"^\[\s*\w+(?:\s*,\s*\w+)*\s*\]$", toks):
-            raise FluxError(
-                f"union tables: expected [a, b, ...]; got {toks!r}"
-            )
-        names = [t.strip() for t in toks[1:-1].split(",")]
-        missing = [n for n in names if n not in texts]
-        if missing:
-            raise FluxError(
-                f"union references unknown pipeline(s) {missing} "
-                f"(defined: {sorted(texts)})"
-            )
-        if len(names) < 2:
-            raise FluxError("union needs at least two tables")
-        frames = [
-            _compile_stream_single(
-                spark, texts[n], bucket_paths, params, now, watermark
-            )[0]
-            for n in names
-        ]
-        cols0 = frames[0].columns
-        for n, f in zip(names[1:], frames[1:]):
-            if set(f.columns) != set(cols0):
-                raise FluxError(
-                    f"union: table {n!r} columns {sorted(f.columns)} != "
-                    f"{sorted(cols0)} (identical column sets required)"
-                )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-    if fhead == "join":
-        # the LIVE OVERLAY (round 12): exactly two WINDOWED aggregate
-        # streams joined on the window spine — Spark joins the two
-        # append-mode window states on the window STRUCT (the
-        # multiple-stateful-operators path), so finalized windows pair
-        # exactly once. Scale shape: state per side is (window, key)
-        # partial aggregates — the same state the union form keeps —
-        # plus the join's window-keyed buffers, all pruned as the
-        # watermark passes; nothing buffers raw rows.
-        if len(fstages) > 1:
-            raise FluxError(
-                "stages after the streaming join() are outside the "
-                f"subset: {fstages[1]!r}"
-            )
-        a = _args(fstages[0], "join")
-        if "tables" not in a or "on" not in a:
-            raise FluxError(
-                "join requires tables: {a: <pipeline>, b: <pipeline>} "
-                "and an explicit on: [columns]"
-            )
-        if "method" in a and _resolve(a["method"], params) != "inner":
-            raise FluxError(
-                "streaming join ships method: \"inner\" only (outer "
-                "emission timing under two watermarked states is a "
-                "batch query's job)"
-            )
-        extra = set(a) - {"tables", "on", "method"}
-        if extra:
-            raise FluxError(f"join: unsupported args {sorted(extra)}")
-        m = re.match(
-            r"^\{\s*(\w+)\s*:\s*(\w+)\s*,\s*(\w+)\s*:\s*(\w+)\s*\}$",
-            a["tables"].strip(),
+    if fhead not in ("union", "join"):
+        raise FluxError(
+            f"{fhead}() is outside the STREAMING combiner subset "
+            "(union, or a windowed join on window_start — anything else "
+            "is a batch query's job: run compile_flux instead)"
         )
-        if not m:
-            raise FluxError(
-                "join ships exactly two named tables "
-                f"{{a: <pipeline>, b: <pipeline>}}; got {a['tables']!r}"
-            )
-        la, ra, lb, rb = m.groups()
-        if la == lb:
-            raise FluxError(f"join table labels collide: {la!r}")
-        for ref in (ra, rb):
-            if ref not in texts:
-                raise FluxError(
-                    f"join references unknown pipeline {ref!r} "
-                    f"(defined: {sorted(texts)})"
-                )
-        on = _str_list(a["on"], "join on")
-        if "window_start" not in on:
-            raise FluxError(
-                'streaming join on: must include "window_start" — the '
-                "live overlay joins finalized windows (a raw-frame "
-                "stream-stream join is a batch query's job: run "
-                "compile_flux instead)"
-            )
-        def _join_side(ref: str):
-            # round 12d: a join input may BE a union assignment (the
-            # streaming nested overlay — the batch nested combiner's
-            # live form: two windowed series unioned, the union joined
-            # against a third). The union is STATELESS, so Spark's
-            # multiple-stateful-operator path joins the concatenated
-            # append-mode window states exactly as it joins a single
-            # one; one nesting level only, and every member must be a
-            # windowed aggregate with the IDENTICAL window spec (the
-            # union's watermark is the min of its members' — equal
-            # specs keep finalization aligned).
-            text = texts[ref].lstrip()
-            if not text.startswith("union"):
-                return _compile_stream_single(
-                    spark, texts[ref], bucket_paths, params, now,
-                    watermark, keep_window=True,
-                )
-            ustages = _split_stages(text, require_from=False)
-            if len(ustages) > 1:
-                raise FluxError(
-                    f"stages after the nested union in {ref!r} are "
-                    f"outside the subset: {ustages[1]!r}"
-                )
-            ua = _args(ustages[0], "union")
-            if "tables" not in ua or set(ua) - {"tables"}:
-                raise FluxError("union requires exactly tables: [a, b, ...]")
-            utoks = ua["tables"].strip()
-            if not re.match(r"^\[\s*\w+(?:\s*,\s*\w+)*\s*\]$", utoks):
-                raise FluxError(
-                    f"union tables: expected [a, b, ...]; got {utoks!r}"
-                )
-            unames = [t.strip() for t in utoks[1:-1].split(",")]
-            if len(unames) < 2:
-                raise FluxError("union needs at least two tables")
-            for un in unames:
-                if un not in texts:
-                    raise FluxError(
-                        f"union references unknown pipeline {un!r} "
-                        f"(defined: {sorted(texts)})"
-                    )
-                if texts[un].lstrip().startswith("union"):
-                    raise FluxError(
-                        "nested unions nest ONE level in the streaming "
-                        f"subset ({un!r} is itself a union)"
-                    )
-            members = [
-                _compile_stream_single(
-                    spark, texts[un], bucket_paths, params, now,
-                    watermark, keep_window=True,
-                )
-                for un in unames
-            ]
-            specs = {sp for _f, sp in members}
-            if None in specs or len(specs) != 1:
-                raise FluxError(
-                    f"nested union {ref!r}: every member must be a "
-                    "windowed aggregate with the IDENTICAL (every, "
-                    f"period, offset) spec; got {sorted(map(str, specs))}"
-                )
-            cols0 = members[0][0].columns
-            for un, (f, _sp) in zip(unames[1:], members[1:]):
-                if set(f.columns) != set(cols0):
-                    raise FluxError(
-                        f"nested union {ref!r}: table {un!r} columns "
-                        f"{sorted(f.columns)} != {sorted(cols0)} "
-                        "(identical column sets required)"
-                    )
-            uout = members[0][0]
-            for f, _sp in members[1:]:
-                uout = uout.unionByName(f)
-            return uout, next(iter(specs))
+    if len(fstages) > 1:
+        raise FluxError(
+            f"stages after the streaming {fhead}() are outside the "
+            f"subset: {fstages[1]!r}"
+        )
 
-        dfa, ea = _join_side(ra)
-        dfb, eb = _join_side(rb)
-        for label, ref, ev in ((la, ra, ea), (lb, rb, eb)):
-            if ev is None:
-                raise FluxError(
-                    f"streaming join input {ref!r} ({label}) has no "
-                    "aggregateWindow — the live overlay joins WINDOWED "
-                    "aggregates only"
-                )
-        if ea != eb:
-            # the spec triple (every, period, offset) — mismatched
-            # sliding/offset forms produce window structs that never
-            # pair, so refuse up front rather than emit an empty join
-            raise FluxError(
-                f"streaming join window specs differ ({ea} vs {eb}; "
-                "(every, period, offset) seconds) — windows must align "
-                "to pair"
-            )
-        extra_on = [c for c in on if c != "window_start"]
-        for label, d in ((la, dfa), (lb, dfb)):
-            missing = [c for c in extra_on if c not in d.columns]
-            if missing:
-                raise FluxError(
-                    f"join on column(s) {missing} missing from table "
-                    f"{label!r} (frame has {d.columns})"
-                )
-        # upstream join suffixes CONFLICTING non-key columns _<label>
-        join_keys = ["__w", *extra_on]
-        for c in sorted(
-            (set(dfa.columns) & set(dfb.columns)) - set(join_keys)
-        ):
-            dfa = dfa.withColumnRenamed(c, f"{c}_{la}")
-            dfb = dfb.withColumnRenamed(c, f"{c}_{lb}")
-        joined = dfa.join(dfb, on=join_keys, how="inner")
-        rest = [c for c in joined.columns if c != "__w"]
-        return joined.select(
-            F.col("__w.start").alias("window_start"), *rest
+    def _single(ref: str, keep_window: bool = False):
+        return _compile_stream_single(
+            spark, texts[ref], bucket_paths, params, now, watermark,
+            keep_window=keep_window,
         )
-    raise FluxError(
-        f"{fhead}() is outside the STREAMING combiner subset "
-        "(union, or a windowed join on window_start — anything else "
-        "is a batch query's job: run compile_flux instead)"
+
+    if fhead == "union":
+        refs = _parse_union(fstages[0], texts)
+        return _union_frames(refs, [_single(r)[0] for r in refs])
+    # the LIVE OVERLAY (round 12): exactly two WINDOWED aggregate
+    # streams joined on the window spine — Spark joins the two
+    # append-mode window states on the window STRUCT (the
+    # multiple-stateful-operators path), so finalized windows pair
+    # exactly once. Scale shape: state per side is (window, key)
+    # partial aggregates — the same state the union form keeps — plus
+    # the join's window-keyed buffers, all pruned as the watermark
+    # passes; nothing buffers raw rows.
+    la, ra, lb, rb, on, method = _parse_join(fstages[0], params, texts)
+    if method != "inner":
+        raise FluxError(
+            "streaming join ships method: \"inner\" only (outer "
+            "emission timing under two watermarked states is a "
+            "batch query's job)"
+        )
+    if "window_start" not in on:
+        raise FluxError(
+            'streaming join on: must include "window_start" — the '
+            "live overlay joins finalized windows (a raw-frame "
+            "stream-stream join is a batch query's job: run "
+            "compile_flux instead)"
+        )
+
+    def _join_side(ref: str):
+        # round 12d: a join input may BE a union assignment (the
+        # streaming nested overlay — the batch nested combiner's live
+        # form: two windowed series unioned, the union joined against
+        # a third). The union is STATELESS, so Spark's
+        # multiple-stateful-operator path joins the concatenated
+        # append-mode window states exactly as it joins a single one;
+        # one nesting level only, and every member must be a windowed
+        # aggregate with the IDENTICAL window spec (the union's
+        # watermark is the min of its members' — equal specs keep
+        # finalization aligned).
+        text = texts[ref].lstrip()
+        if not text.startswith("union"):
+            return _single(ref, keep_window=True)
+        ustages = _split_stages(text, require_from=False)
+        if len(ustages) > 1:
+            raise FluxError(
+                f"stages after the nested union in {ref!r} are "
+                f"outside the subset: {ustages[1]!r}"
+            )
+        urefs = _parse_union(ustages[0], texts)
+        for un in urefs:
+            if texts[un].lstrip().startswith("union"):
+                raise FluxError(
+                    "nested unions nest ONE level in the streaming "
+                    f"subset ({un!r} is itself a union)"
+                )
+        members = [_single(un, keep_window=True) for un in urefs]
+        specs = {sp for _f, sp in members}
+        if None in specs or len(specs) != 1:
+            raise FluxError(
+                f"nested union {ref!r}: every member must be a "
+                "windowed aggregate with the IDENTICAL (every, "
+                f"period, offset) spec; got {sorted(map(str, specs))}"
+            )
+        return _union_frames(urefs, [f for f, _sp in members]), specs.pop()
+
+    dfa, ea = _join_side(ra)
+    dfb, eb = _join_side(rb)
+    for label, ref, ev in ((la, ra, ea), (lb, rb, eb)):
+        if ev is None:
+            raise FluxError(
+                f"streaming join input {ref!r} ({label}) has no "
+                "aggregateWindow — the live overlay joins WINDOWED "
+                "aggregates only"
+            )
+    if ea != eb:
+        # the spec triple (every, period, offset) — mismatched
+        # sliding/offset forms produce window structs that never
+        # pair, so refuse up front rather than emit an empty join
+        raise FluxError(
+            f"streaming join window specs differ ({ea} vs {eb}; "
+            "(every, period, offset) seconds) — windows must align "
+            "to pair"
+        )
+    # the join keys on the window STRUCT itself (the event-time
+    # watermark rides through it) plus the other on: columns
+    joined = _join_frames(
+        dfa, dfb, la, lb, ["__w", *[c for c in on if c != "window_start"]],
+        "inner",
     )
+    rest = [c for c in joined.columns if c != "__w"]
+    return joined.select(F.col("__w.start").alias("window_start"), *rest)
+
+
+#: the streaming aggregateWindow fns: incremental, map-side-combinable
+#: state (median/quantile/mode buffer every window value — rank
+#: aggregates have no bounded merge form)
+_STREAM_AGG_FNS = (
+    "mean", "count", "sum", "min", "max", "first", "last", "stddev",
+    "spread",
+)
+
+#: stages a live pipeline runs only BEFORE its aggregateWindow: a
+#: second window, or a keyed-state transform over finalized windows
+_STREAM_PRE_AGG = ("aggregateWindow", "timedMovingAverage", *_SHARED_TRANSFORMS)
 
 
 def _compile_stream_single(
@@ -2291,7 +2993,13 @@ def _compile_stream_single(
     instead of projecting ``window_start`` — the streaming join needs
     the struct itself as the join key (Spark's multiple-stateful-
     operator window join propagates the event-time watermark through
-    it)."""
+    it).
+
+    Every stage parses through the batch compiler's own parsers; what
+    stays here is streaming-only: the incremental fn set, no
+    createEmpty, no fill(usePrevious:), the pre-/post-aggregate
+    placement rules, the terminal keyed-state rule and calendar
+    watermarks."""
     from .streaming import stateful as sf
 
     stages = _split_stages(body)
@@ -2315,14 +3023,17 @@ def _compile_stream_single(
     # stateless row ops, so they stream trivially (a filter after map
     # must see the rewritten value, exactly as in batch)
     row_ops: list[tuple[str, Any]] = []
-    agg = None  # (every_s, fn)
+    agg = None  # the batch parser's aggregateWindow tuple
+    agg_timesrc = "_start"
     vs = None  # the terminal keyed-state stage: a stateful.SeriesFold
     key_cols = list(natural_key)  # group() re-keys (round 12)
-    # post-aggregate tail stages, in user order: ("filter", toks,
-    # stage) alert thresholds / ("map", arith_src, stage) unit rewrites
+    # post-aggregate tail stages, in user order: stateless row ops over
+    # the append-mode aggregate output (Spark allows projections and
+    # filters after a streaming aggregation) — the live alert
+    # threshold, the unit-converted panel, display shaping
     post_stages: list[tuple[str, Any, str]] = []
-    agg_timesrc = "_start"  # aggregateWindow timeSrc: (round 12d)
     yield_name = None
+    time_shifted = False
     for stage in stages[1:]:
         head = stage.split("(", 1)[0].strip()
         if vs is not None and head != "yield":
@@ -2335,366 +3046,76 @@ def _compile_stream_single(
                 "the STREAMING subset (the transform is the terminal "
                 "stage; compose further with compile_flux on the store)"
             )
+        _check_stage_order(
+            head, stage, agg is not None, time_shifted,
+            ("range", "group", "timeShift"), "the STREAMING subset",
+        )
+        if agg is not None and head in _STREAM_PRE_AGG:
+            raise FluxError(
+                f"{head}() after aggregateWindow is outside the "
+                "STREAMING subset (transforming or re-windowing "
+                "finalized windows is a batch query's job: run "
+                "compile_flux on the store)"
+            )
+        if agg is None and head in ("fill", "keep", "drop", "rename"):
+            raise FluxError(
+                f"{head}() before aggregateWindow is outside the "
+                "STREAMING subset (the raw live frame has a fixed "
+                "shape: re-keying is group()'s job, and gaps fill in "
+                "the aggregated panel)"
+            )
         if head == "range":
-            if agg is not None:
-                raise FluxError(
-                    "range() after aggregateWindow is outside the subset"
-                )
-            a = _args(stage, "range")
-            if "start" in a:
-                start = _resolve_bound(a["start"], params, now, "range")
-            if "stop" in a:
-                stop = _resolve_bound(a["stop"], params, now, "range")
+            start, stop = _parse_range(stage, params, now, start, stop)
         elif head == "filter":
-            toks = _tokenize_pred(_filter_extract(stage))
+            toks = _filter_tokens(stage)
             if agg is not None:
-                # round 12c: the LIVE ALERT — aggregateWindow |>
-                # filter(fn: (r) => r._value > X) is a STATELESS row
-                # filter over the append-mode aggregate output (Spark
-                # allows projections/filters after a streaming
-                # aggregation), so the Grafana alert-threshold panel
-                # streams. Same remap as the batch postfilter:
-                # r._value resolves to the aggregate's value column;
-                # references validate against the output frame.
+                # the LIVE ALERT (round 12c): the batch postfilter's
+                # r._value remap onto the aggregate's value column
                 post_stages.append(("filter", toks, stage))
-                continue
-            _validate_refs(
-                toks,
-                {*natural_key, "_time", "_value", "tags", "_date"},
-                "filter",
-            )
-            row_ops.append(("filter", _parse_pred(toks, params)))
-        elif head == "map":
-            # round 12: map's _value rewrite is a STATELESS row op —
-            # unit conversion on a live panel streams trivially (the
-            # same grammar + NULL-preserving wrap as the batch stage)
-            a = _args(stage, "map")
-            if "fn" not in a or set(a) - {"fn"}:
-                raise FluxError(
-                    "map requires exactly fn: (r) => ({ r with ... })"
-                )
-            m2 = _MAP_FN_RE.match(a["fn"].strip())
-            if not m2:
-                raise FluxError(
-                    "map ships only fn: (r) => ({ r with _value: "
-                    f"<arith> }}); got {a['fn']!r}"
-                )
-            if m2.group(1).strip('"') != "_value":
-                raise FluxError(
-                    "map ships only the _value rewrite; got "
-                    f"{m2.group(1)!r} (rewriting keys/time would change "
-                    "table semantics)"
-                )
-            if agg is not None:
-                # round 12d: the POST-AGGREGATE rewrite — the live
-                # unit-converted panel. A stateless projection over the
-                # append-mode aggregate output (Spark allows row ops
-                # after a streaming aggregation), remapped onto the
-                # aggregate's value column by the shared
-                # _post_value_map — the batch tail's own definition,
-                # so emitted windows replay bit-identically.
-                post_stages.append(("map", m2.group(2), stage))
-                continue
-            mapped = _parse_arith(m2.group(2), params)
-            row_ops.append(
-                (
-                    "map",
-                    F.when(
-                        F.col("_value").isNull(),
-                        F.lit(None).cast("double"),
-                    ).otherwise(mapped),
-                )
-            )
-        elif head == "timeShift":
-            # round 12: the period-comparison shift — pure timestamp
-            # arithmetic per row, stateless, so the live overlay can
-            # join today's windows against yesterday's shifted series
-            if agg is not None:
-                raise FluxError(
-                    "timeShift() after aggregateWindow is outside the "
-                    "STREAMING subset (shift before windowing — Flux "
-                    "shifts THEN windows)"
-                )
-            a = _args(stage, "timeShift")
-            if "duration" not in a:
-                raise FluxError("timeShift requires duration:")
-            dur = _resolve(a["duration"], params)
-            if not (isinstance(dur, str) and _DUR_RE.match(dur)):
-                raise FluxError(f"timeShift duration: bad duration {dur!r}")
-            if set(a) - {"duration"}:
-                raise FluxError(
-                    "streaming timeShift ships duration: only "
-                    f"(got {sorted(set(a) - {'duration'})})"
-                )
-            row_ops.append(("timeshift", _duration_seconds(dur)))
-        elif head == "aggregateWindow":
-            if agg is not None:
-                raise FluxError(
-                    "a second aggregateWindow is outside the subset"
-                )
-            a = _args(stage, "aggregateWindow")
-            every = _resolve(a.get("every", ""), params)
-            calendar = None
-            if every in ("1mo", "1y"):
-                # round 15 (VERDICT r14 item 4): calendar windows
-                # STREAM. A month/year is not a fixed stride, so
-                # F.window's state bucketing can't hold it — but the
-                # watermark can ride the date_trunc'd calendar key
-                # ITSELF (Spark accepts any event-time column as both
-                # watermark and group key), and append mode finalizes
-                # a calendar bucket once the watermark passes it: the
-                # month closes when the first record ≥ delay past the
-                # NEXT month's start arrives. Assembly below.
-                calendar = "month" if every == "1mo" else "year"
-            elif not (isinstance(every, str) and _DUR_RE.match(every)):
-                raise FluxError(
-                    f"aggregateWindow every: bad duration {every!r} "
-                    "(calendar strides stream for 1mo/1y only — other "
-                    "calendar forms run compile_flux on the store)"
-                )
-            every_s: int | str
-            if calendar is not None:
-                every_s = calendar
             else:
-                every_s = _duration_seconds(every)
-                if every_s <= 0:
-                    raise FluxError(
-                        f"aggregateWindow every must be > 0: {every!r}"
-                    )
-            fn = a.get("fn", "mean").strip()
-            if fn not in (
-                "mean", "count", "sum", "min", "max", "first", "last",
-                "stddev", "spread",
-            ):
-                # median/quantile/mode buffer every window value in
-                # state (rank aggregates have no bounded merge form) —
-                # a batch query's job
-                raise FluxError(
-                    f"aggregateWindow fn: {fn!r} is outside the STREAMING "
-                    "subset (mean/count/sum/min/max/first/last/stddev/"
-                    "spread — incremental, map-side-combinable state)"
+                row_ops.append(
+                    ("filter", _row_filter(toks, natural_key, params))
                 )
-            if "createEmpty" in a and _resolve(a["createEmpty"], params) is not False:
+        elif head == "map":
+            src = _parse_map(stage)
+            if agg is not None:
+                # the live unit-converted panel (round 12d)
+                post_stages.append(("map", src, stage))
+            else:
+                row_ops.append(("map", _row_map(src, params)))
+        elif head == "timeShift":
+            # the period-comparison shift: pure timestamp arithmetic
+            # per row, so the live overlay can join today's windows
+            # against yesterday's shifted series
+            row_ops.append(("timeshift", _parse_time_shift(stage, params)))
+            time_shifted = True
+        elif head == "aggregateWindow":
+            # period:/offset: (round 12d) — Spark's streaming
+            # aggregation takes the batch path's F.window(period,
+            # every, startTime) struct and append mode finalizes each
+            # window as the watermark passes its end; calendar strides
+            # (round 15) stream too, assembled below
+            agg, agg_timesrc = _parse_aggregate_window(stage, params)
+            if agg[1] not in _STREAM_AGG_FNS:
+                raise FluxError(
+                    f"aggregateWindow fn: {agg[1]!r} is outside the "
+                    "STREAMING subset (mean/count/sum/min/max/first/"
+                    "last/stddev/spread — incremental, "
+                    "map-side-combinable state)"
+                )
+            if agg[2]:
                 raise FluxError(
                     "createEmpty: true is outside the streaming subset "
                     "(append mode emits observed windows)"
                 )
-            # period:/offset: — the SLIDING / alignment-shifted live
-            # panel (round 12d): Spark's streaming aggregation takes
-            # the same F.window(period, every, startTime) struct the
-            # batch path compiles (_window_grouping), and append mode
-            # finalizes each overlapping window as the watermark
-            # passes its end — the same validation envelope as batch
-            # (period a positive multiple of every; offset normalized
-            # into [0, every)), so emitted windows replay
-            # bit-identically against the batch sliding form.
-            if calendar is not None and ("period" in a or "offset" in a):
-                # the batch compiler's own rule: sliding/shifted forms
-                # do not compose with calendar strides
-                raise FluxError(
-                    "aggregateWindow: period:/offset: do not compose "
-                    "with calendar every: (1mo/1y) in the subset"
-                )
-            period_s = None
-            if "period" in a:
-                period = _resolve(a["period"], params)
-                if not (isinstance(period, str) and _DUR_RE.match(period)):
-                    raise FluxError(
-                        f"aggregateWindow period: bad duration {period!r}"
-                    )
-                period_s = _duration_seconds(period)
-                if period_s != every_s:
-                    if period_s <= 0 or period_s % every_s != 0:
-                        raise FluxError(
-                            "aggregateWindow period: must be a positive "
-                            f"multiple of every: in the subset; got {stage!r}"
-                        )
-                else:
-                    period_s = None
-            offset_s = 0
-            if "offset" in a:
-                off_tok = _resolve(a["offset"], params)
-                if not (isinstance(off_tok, str) and _DUR_RE.match(off_tok)):
-                    raise FluxError(
-                        f"aggregateWindow offset: bad duration {off_tok!r}"
-                    )
-                offset_s = _duration_seconds(off_tok) % every_s
-            if "timeSrc" in a:
-                # round 12d: same label rule as batch — "_stop" shifts
-                # the emitted label to the window end (a stateless
-                # projection over the append-mode output)
-                ts_raw = _resolve(a["timeSrc"], params)
-                if ts_raw not in ("_start", "_stop"):
-                    raise FluxError(
-                        'aggregateWindow timeSrc: ships "_start" or '
-                        f'"_stop"; got {ts_raw!r}'
-                    )
-                agg_timesrc = ts_raw
-            extra = set(a) - {
-                "every", "fn", "createEmpty", "period", "offset", "timeSrc",
-            }
-            if extra:
-                raise FluxError(
-                    f"aggregateWindow: unsupported args {sorted(extra)} "
-                    "in the streaming subset"
-                )
-            if calendar is not None and agg_timesrc == "_stop":
-                # the batch compiler's own rule
-                raise FluxError(
-                    'timeSrc: "_stop" with calendar every: (1mo/1y) is '
-                    "outside the subset (a month's end is not a fixed "
-                    "shift)"
-                )
-            agg = (every_s, fn, period_s, offset_s)
-        elif head in (
-            "movingAverage", "chandeMomentumOscillator", "kaufmansER",
-        ):
-            # round 14: the trailing ROW-frame mean and the
-            # trailing-n-delta indicators stream on the same
-            # bounded-list state principle as kaufmansAMA — the
-            # trailing n (or n+1) values per series as exact decimal
-            # cents (n a dashboard constant), O(1) in the stream
-            # length (streaming/stateful.moving_average_fold /
-            # trailing_indicator_fold); emissions replay the
-            # batch frames' exact-decimal expressions bit-for-bit
-            # under the arrival contract
-            if agg is not None:
-                raise FluxError(
-                    f"{head}() after aggregateWindow is outside "
-                    "the STREAMING subset (smooth-the-downsample is a "
-                    "batch query's job)"
-                )
-            a = _args(stage, head)
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(
-                    f"{head} n: positive int required, got {n!r}"
-                )
-            if set(a) - {"n"}:
-                raise FluxError(
-                    f"{head}: unsupported args {sorted(set(a) - {'n'})}"
-                )
-            vs = (
-                sf.moving_average_fold(n)
-                if head == "movingAverage"
-                else sf.trailing_indicator_fold(
-                    "cmo" if head == "chandeMomentumOscillator" else "ker", n
-                )
-            )
-        elif head in ("stateDuration", "stateCount"):
-            # round 14: the live ALERT-duration panel — run tracking
-            # is a fixed per-series state tuple (previous predicate
-            # state, run start µs, run position); the predicate
-            # compiles to a Catalyst column applied as a stateless
-            # projection BEFORE the keyed-state stage, so Python only
-            # ever folds booleans
-            # (streaming/stateful.state_tracking_fold)
-            if agg is not None:
-                raise FluxError(
-                    f"{head}() after aggregateWindow is outside the "
-                    "STREAMING subset"
-                )
-            a = _args(stage, head)
-            if "fn" not in a:
-                raise FluxError(f"{head} requires fn: (r) => predicate")
-            allowed = {"fn", "unit"} if head == "stateDuration" else {"fn"}
-            if set(a) - allowed:
-                raise FluxError(
-                    f"{head}: unsupported args {sorted(set(a) - allowed)}"
-                )
-            sd_unit_s = 1
-            if head == "stateDuration":
-                unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-                if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                    raise FluxError(f"stateDuration unit: bad duration {unit!r}")
-                sd_unit_s = _duration_seconds(unit)
-                if sd_unit_s <= 0:
-                    raise FluxError(
-                        f"stateDuration unit must be > 0: {unit!r}"
-                    )
-            m = re.match(
-                r"^\(\s*r\s*\)\s*=>\s*(.*)$", a["fn"].strip(), re.DOTALL
-            )
-            if not m:
-                raise FluxError(f"malformed {head} fn: {a['fn']!r}")
-            pred = _parse_pred(_tokenize_pred(m.group(1).strip()), params)
-            vs = sf.state_tracking_fold(
-                "duration" if head == "stateDuration" else "count",
-                pred,
-                sd_unit_s,
-            )
-        elif head == "interpolate.linear":
-            # round 14: the gap-filled live chart — one (last_t,
-            # last_v) lag tuple per series; each arriving point emits
-            # its raw row plus the aligned marks inside the gap,
-            # interpolated with the batch kernel's pinned expression
-            # (streaming/stateful.interpolate_fold). Emitted
-            # volume is gap/every — output, not state.
-            if agg is not None:
-                raise FluxError(
-                    "interpolate.linear() after aggregateWindow is "
-                    "outside the STREAMING subset (densify BEFORE "
-                    "windowing, as the batch composition does)"
-                )
-            a = _args(stage, "interpolate.linear")
-            if "every" not in a:
-                raise FluxError("interpolate.linear requires every:")
-            ev = _resolve(a["every"], params)
-            if (
-                not (isinstance(ev, str) and _DUR_RE.match(ev))
-                or _duration_seconds(ev) <= 0
-            ):
-                raise FluxError(
-                    f"interpolate.linear every: bad duration {ev!r}"
-                )
-            if set(a) - {"every"}:
-                raise FluxError(
-                    "interpolate.linear: unsupported args "
-                    f"{sorted(set(a) - {'every'})}"
-                )
-            vs = sf.interpolate_fold(_duration_seconds(ev))
-        elif head == "elapsed":
-            # round 14: the smallest O(1)-state member — one long of
-            # state per series (the previous event time); same batch
-            # expression (integer-µs diff, double-divided by the unit,
-            # long cast truncating toward zero), first row drops
-            if agg is not None:
-                raise FluxError(
-                    "elapsed() after aggregateWindow is outside the "
-                    "STREAMING subset"
-                )
-            a = _args(stage, "elapsed")
-            unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-            if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                raise FluxError(f"elapsed unit: bad duration {unit!r}")
-            unit_s = _duration_seconds(unit)
-            if unit_s <= 0:
-                raise FluxError(f"elapsed unit must be > 0: {unit!r}")
-            if set(a) - {"unit"}:
-                raise FluxError(
-                    f"elapsed: unsupported args {sorted(set(a) - {'unit'})}"
-                )
-            vs = sf.elapsed_fold(unit_s)
         elif head == "timedMovingAverage":
-            # round 13: the WINDOWED-EMISSION form streams — upstream
-            # defines timedMovingAverage(every:, period:) as
-            # window(every:, period:) |> mean(), exactly the sliding
-            # aggregateWindow(mean) the streaming subset already runs
-            # (round 12d), so it rewrites to the same agg tuple and
-            # inherits that path's state shape and watermark
-            # finalization. The bare trailing-frame form
-            # (timedMovingAverage(period:) with no every:) buffers a
-            # TIME window of values whose size is data-rate-dependent
-            # — unbounded by any dashboard constant, unlike
-            # movingAverage(n:)/kaufmansAMA(n:)'s bounded lists —
-            # outside the O(1)-in-stream-length state contract.
-            if agg is not None:
-                raise FluxError(
-                    "timedMovingAverage() after aggregateWindow is "
-                    "outside the STREAMING subset"
-                )
-            a = _args(stage, "timedMovingAverage")
-            if "every" not in a:
+            # round 13: the WINDOWED-EMISSION form is the sliding
+            # aggregateWindow(mean) above. The bare trailing-frame form
+            # buffers a TIME window of values whose size is
+            # data-rate-dependent — outside the O(1)-in-stream-length
+            # state contract.
+            agg, tma = _parse_timed_moving_average(stage, params)
+            if tma is not None:
                 raise FluxError(
                     "bare timedMovingAverage(period:) is outside the "
                     "STREAMING subset (its trailing TIME window "
@@ -2703,212 +3124,15 @@ def _compile_stream_single(
                     "windowed-emission form timedMovingAverage(every:, "
                     "period:) or run compile_flux on the store"
                 )
-            tma_every_s, tma_period_s = _parse_tma_windowed(a, params, stage)
-            agg = (tma_every_s, "mean", tma_period_s, 0)
-        elif head == "yield":
-            a = _args(stage, "yield")
-            if "name" in a:
-                yield_name = _resolve(a["name"], params)
-        elif head == "to":
-            raise FluxError(
-                "to(bucket:) in a streaming pipeline is the TASK loop — "
-                "run it with start_flux_task (compile_flux_stream returns "
-                "the live frame for a panel sink)"
-            )
-        elif head == "group":
-            # round 12: the dashboard RE-KEY before a windowed
-            # aggregate ("per host" rollup) — the same validation as
-            # the batch stage; streaming groupBy keys become the
-            # listed columns (the empty key merges all series: a
-            # partial-aggregated global window, safe)
-            if agg is not None:
-                raise FluxError(
-                    "group() after aggregateWindow is outside the "
-                    "STREAMING subset (re-keying finalized windows is "
-                    "a batch query's job)"
-                )
-            a = _args(stage, "group")
-            cols = _str_list(a.get("columns", "[]"), "group columns")
-            extra = set(a) - {"columns", "mode"}
-            mode = _resolve(a["mode"], params) if "mode" in a else "by"
-            bad = [c for c in cols if c not in natural_key]
-            if (
-                extra
-                or mode not in ("by", "except")
-                or bad
-                or len(cols) != len(set(cols))
-            ):
-                raise FluxError(
-                    'group ships mode: "by"/"except" over a subset of '
-                    f"the store's table key columns {natural_key} "
-                    f"(incl. the empty list — merge all series); got {stage!r}"
-                )
-            if mode == "except":
-                cols = [c for c in natural_key if c not in cols]
-            key_cols = [c for c in natural_key if c in cols]
-        elif head in ("derivative", "difference", "cumulativeSum", "increase"):
-            # round 12: the live counter-rate / delta / running-total
-            # panel — the value-series transforms as KEYED STATE
-            # (streaming/stateful.transform_fold): per-series
-            # state is one (last time, last value, two accumulators)
-            # tuple; append mode. ARRIVAL CONTRACT: strictly-increasing
-            # event time per series across micro-batches (the
-            # reference's unit of arrival is a whole ordered day file);
-            # late/duplicate-time rows drop — the batch compiler on the
-            # store is the replay path for disordered data.
-            if agg is not None:
-                raise FluxError(
-                    f"{head}() after aggregateWindow is outside the "
-                    "STREAMING subset (the downsample-then-rate "
-                    "composition is a batch query's job)"
-                )
-            a = _args(stage, head)
-            if head == "derivative":
-                unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-                if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                    raise FluxError(f"derivative unit: bad duration {unit!r}")
-                unit_s = _duration_seconds(unit)
-                if unit_s <= 0:
-                    raise FluxError(f"derivative unit must be > 0: {unit!r}")
-                nn = (
-                    _resolve(a["nonNegative"], params)
-                    if "nonNegative" in a
-                    else False
-                )
-                if not isinstance(nn, bool):
-                    raise FluxError(
-                        f"derivative nonNegative: expected a boolean, got {nn!r}"
-                    )
-                extra = set(a) - {"unit", "nonNegative"}
-                if extra:
-                    raise FluxError(
-                        f"derivative: unsupported args {sorted(extra)}"
-                    )
-                vs = sf.transform_fold("derivative", unit_s, nn)
-            elif head == "difference":
-                nn = (
-                    _resolve(a["nonNegative"], params)
-                    if "nonNegative" in a
-                    else False
-                )
-                if not isinstance(nn, bool):
-                    raise FluxError(
-                        f"difference nonNegative: expected a boolean, got {nn!r}"
-                    )
-                extra = set(a) - {"nonNegative"}
-                if extra:
-                    raise FluxError(
-                        f"difference: unsupported args {sorted(extra)}"
-                    )
-                vs = sf.transform_fold("difference", non_negative=nn)
-            else:
-                if a:
-                    raise FluxError(
-                        f"streaming {head} ships the default form only "
-                        f"(got args {sorted(a)})"
-                    )
-                vs = sf.transform_fold(
-                    "cumsum" if head == "cumulativeSum" else "increase"
-                )
-        elif head in (
-            "exponentialMovingAverage", "exponentialTimeMovingAverage",
-            "doubleEMA", "tripleEMA", "relativeStrengthIndex",
-            "tripleExponentialDerivative", "kaufmansAMA",
-        ):
-            # round 13 (VERDICT r12 item 2): the SMOOTHED live panel —
-            # every O(1)-STATE member of the smoothing/indicator
-            # family as keyed state
-            # (streaming/stateful.smoothing_fold): a FIXED
-            # per-series tuple (three chained fold slots + one lag
-            # value), append mode, the same pinned arrival contract as
-            # the round-12 value-series transforms (strictly-increasing
-            # per-series event time; late rows drop; batch replay on
-            # the store for disordered data). Emitted values are the
-            # batch kernels' exact expression trees — bit-identical
-            # under the contract (pinned in tests). Round 14 (VERDICT
-            # r13 item 4): kaufmansAMA joins — its efficiency-ratio
-            # window is BOUNDED (the trailing n+1 raw values, n a
-            # dashboard constant), so a bounded-list state tuple
-            # streams it (streaming/stateful.kama_fold). The
-            # boundary restates as: state O(1) in the STREAM LENGTH
-            # streams; holtWinters (the fit consumes slot-normalized
-            # windows over the WHOLE range per emission) and the rank
-            # aggregates (full value multisets) still raise below.
-            if agg is not None:
-                raise FluxError(
-                    f"{head}() after aggregateWindow is outside the "
-                    "STREAMING subset (smooth-the-downsample is a "
-                    "batch query's job)"
-                )
-            a = _args(stage, head)
-            if head != "exponentialTimeMovingAverage":
-                n = _resolve(a["n"], params) if "n" in a else None
-                if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                    raise FluxError(
-                        f"{head} n: positive int required, got {n!r}"
-                    )
-                extra = set(a) - {"n"}
-                if extra:
-                    raise FluxError(
-                        f"{head}: unsupported args {sorted(extra)}"
-                    )
-                vs = (
-                    sf.kama_fold(n)
-                    if head == "kaufmansAMA"
-                    else sf.smoothing_fold(
-                        {
-                            "exponentialMovingAverage": "ema",
-                            "doubleEMA": "dema",
-                            "tripleEMA": "tema",
-                            "relativeStrengthIndex": "rsi",
-                            "tripleExponentialDerivative": "trix",
-                        }[head],
-                        n,
-                    )
-                )
-            else:
-                vs = sf.smoothing_fold("etma", _parse_etma_n(a, params))
+        elif head in _SHARED_TRANSFORMS:
+            vs = _series_fold(_parse_transform(head, stage, params))
         elif head == "fill":
-            # round 14: fill(value:) joins the streaming tail — a
-            # stateless coalesce over the append-mode output (the
-            # Grafana "null as zero" panel option; reachable nulls:
-            # single-point stddev windows — createEmpty gap rows
-            # already raise). fill(usePrevious: true) raises: carrying
-            # the previous emitted value needs keyed state OVER the
-            # aggregate output — a second arbitrary-stateful operator
-            # downstream of a streaming aggregation, a shape Spark's
-            # multiple-stateful-operator support does not include (and
-            # emission order across micro-batches is undefined for a
-            # stateless tail).
-            if agg is None:
-                raise FluxError(
-                    "fill() before aggregateWindow is outside the "
-                    "STREAMING subset (the raw live frame carries "
-                    "every record; fill gaps in the aggregated panel)"
-                )
-            a = _args(stage, "fill")
-            fcol = _resolve(a["column"], params) if "column" in a else "_value"
-            if not isinstance(fcol, str):
-                raise FluxError(
-                    f"fill column: expected a string, got {fcol!r}"
-                )
-            extra = set(a) - {"column", "value", "usePrevious"}
-            if extra:
-                raise FluxError(f"fill: unsupported args {sorted(extra)}")
-            up = (
-                _resolve(a["usePrevious"], params)
-                if "usePrevious" in a
-                else False
-            )
-            if not isinstance(up, bool):
-                raise FluxError(
-                    f"fill usePrevious: expected a boolean, got {up!r}"
-                )
-            if ("value" in a) == up:
-                raise FluxError(
-                    "fill needs exactly one of value: or usePrevious: true"
-                )
-            if up:
+            fill = _parse_fill(stage, params)
+            if fill[1] == "previous":
+                # carrying the previous emitted value needs keyed state
+                # OVER the aggregate output — a second arbitrary-
+                # stateful operator downstream of a streaming
+                # aggregation, which Spark does not support
                 raise FluxError(
                     "fill(usePrevious: true) is outside the STREAMING "
                     "subset: carrying the previous emitted value is "
@@ -2916,49 +3140,31 @@ def _compile_stream_single(
                     "stateless tail) — run compile_flux on the store "
                     "for the carried-forward panel"
                 )
-            post_stages.append(
-                ("fill", (fcol, _resolve(a["value"], params)), stage)
+            post_stages.append(("fill", fill, stage))
+        elif head in ("keep", "drop"):
+            post_stages.append((head, _parse_columns(head, stage), stage))
+        elif head == "rename":
+            post_stages.append(("rename", _parse_rename(stage), stage))
+        elif head == "group":
+            # round 12: the dashboard RE-KEY before a windowed
+            # aggregate; the empty key merges all series (a
+            # partial-aggregated global window, safe)
+            key_cols = _parse_group(stage, params, natural_key)
+        elif head == "yield":
+            yield_name = _parse_yield(stage, params, yield_name)
+        elif head == "to":
+            raise FluxError(
+                "to(bucket:) in a streaming pipeline is the TASK loop — "
+                "run it with start_flux_task (compile_flux_stream returns "
+                "the live frame for a panel sink)"
             )
-        elif head in ("keep", "drop", "rename"):
-            # round 12d: the display-shaping tail over the aggregate
-            # output — stateless projections, so the live panel keeps
-            # the batch tail's column tools. PRE-aggregate forms
-            # raise: keep/drop of key columns re-keys tables (that is
-            # group()'s job) and the raw frame's shape is fixed.
-            if agg is None:
-                raise FluxError(
-                    f"{head}() before aggregateWindow is outside the "
-                    "STREAMING subset (re-keying is group()'s job; the "
-                    "raw live frame has a fixed shape)"
-                )
-            a = _args(stage, head)
-            if head == "rename":
-                if "columns" not in a or set(a) - {"columns"}:
-                    raise FluxError(
-                        'rename requires exactly columns: {old: "new"}'
-                    )
-                mapping = _str_map(a["columns"], "rename columns")
-                if not mapping:
-                    raise FluxError("rename: columns record is empty")
-                post_stages.append(("rename", mapping, stage))
-            else:
-                cols = _str_list(a.get("columns", ""), f"{head} columns")
-                if not cols or set(a) - {"columns"}:
-                    raise FluxError(
-                        f"{head} requires exactly columns: [ ... ]"
-                    )
-                post_stages.append((head, cols, stage))
         elif head == "holtWinters":
-            # round 14 (VERDICT r13 item 4, the written rejection):
-            # unlike kaufmansAMA, the blocker is NOT state size — the
-            # Holt recurrence state is bounded too (level, trend, m
-            # seasonal slots + a first-cycle init buffer). The blocker
-            # is the OUTPUT: the n forecast rows hang off the stream's
-            # LAST slot, so every arriving point moves the forecast
-            # origin and RETRACTS every previously-emitted forecast
-            # row — append mode cannot retract, and update/complete
-            # would re-emit the whole forecast per micro-batch, which
-            # is exactly a batch replay. The task loop IS that replay.
+            # round 14 (the written rejection): the Holt recurrence
+            # state is bounded, but the n forecast rows hang off the
+            # stream's LAST slot, so every arriving point RETRACTS every
+            # previously-emitted forecast row — append mode cannot
+            # retract, and update/complete would re-emit the whole
+            # forecast per micro-batch, which is exactly a batch replay
             raise FluxError(
                 "holtWinters() is outside the STREAMING subset: the "
                 "forecast is anchored to the stream's LAST slot, so "
@@ -2969,11 +3175,9 @@ def _compile_stream_single(
                 "the per-tick re-forecast loop."
             )
         elif head in ("last", "first"):
-            # the live stat-panel gauge: a BARE selector is an
-            # unwindowed aggregate, which append mode cannot finalize
-            # (no watermark ever passes an unbounded group) — the
-            # streaming gauge is the WINDOWED selector, emitted once
-            # per panel-refresh window
+            # a BARE selector is an unwindowed aggregate, which append
+            # mode cannot finalize (no watermark ever passes an
+            # unbounded group)
             raise FluxError(
                 f"bare {head}() is outside the STREAMING subset — the "
                 f"live gauge is aggregateWindow(every:, fn: {head}) "
@@ -2987,19 +3191,7 @@ def _compile_stream_single(
                 "— run compile_flux on the store instead)"
             )
 
-    out = bkt.scan(stream, start=start, stop=stop)
-    for op, val in row_ops:
-        if op == "filter":
-            out = out.filter(val)
-        elif op == "map":
-            out = out.withColumn("_value", val)
-        else:  # timeshift
-            out = out.withColumn(
-                "_time",
-                F.timestamp_micros(
-                    F.unix_micros("_time") + F.lit(val * 1_000_000)
-                ),
-            )
+    out = _apply_row_ops(bkt.scan(stream, start=start, stop=stop), row_ops)
     if vs is not None:
         if not key_cols:
             # the batch compiler's own rule: a key-less per-point
@@ -3017,7 +3209,7 @@ def _compile_stream_single(
     if agg is None:
         # the raw live-table panel: the filtered record stream
         return out.select(*key_cols, "_time", "_value"), None
-    every_s, fn, period_s, offset_s = agg
+    every_s, fn, _create_empty, _q, period_s, offset_s = agg
     name = yield_name or fn
     # the value expression is the batch compiler's own (_plain_agg_expr
     # — ONE definition), so emitted windows replay bit-identically
@@ -3106,110 +3298,66 @@ def _compile_stream_single(
         # upstream's default labeling: the window end — a stateless
         # projection over the append-mode output, same as batch
         base = base.withColumn(
-            "window_start",
-            F.timestamp_micros(
-                F.unix_micros("window_start")
-                + F.lit((period_s or every_s) * 1_000_000)
-            ),
+            "window_start", _shift_time("window_start", period_s or every_s)
         )
+    # the batch tail's own per-op definition; r._value resolves onto
+    # the aggregate's value column
     for op in post_stages:
-        visible = [c for c in base.columns if c != "__w"]
-        if op[0] == "fill":
-            # the batch tail's own rule: the column is validated
-            # literally against the frame (no r._value remap — fill
-            # names a COLUMN, not a record field), so a pasted text
-            # works or raises identically on both paths
-            fcol, fval = op[1]
-            if fcol not in visible:
-                raise FluxError(
-                    f"fill: unknown column(s) [{fcol!r}]; frame has "
-                    f"{visible}: {op[2]!r}"
-                )
-            base = base.withColumn(
-                fcol, F.coalesce(F.col(fcol), F.lit(fval))
-            )
-            continue
-        if op[0] == "map":
-            # round 12d: the live unit-converted panel — the shared
-            # batch-tail rewrite over the aggregate's value column
-            base = _post_value_map(base, name, op[1], params, visible, op[2])
-            continue
-        if op[0] in ("keep", "drop", "rename"):
-            # round 12d: display-shaping projections over the
-            # append-mode output — the batch tail's own validation
-            # (unknown columns raise naming the frame; rename
-            # collisions raise); __w stays internal on join inputs
-            if op[0] == "rename":
-                mapping = op[1]
-                missing = [c for c in mapping if c not in visible]
-                if missing:
-                    raise FluxError(
-                        f"rename: unknown column(s) {missing}; frame "
-                        f"has {visible}: {op[2]!r}"
-                    )
-                vals = list(mapping.values())
-                clash = sorted(
-                    {
-                        new
-                        for new in vals
-                        if new in visible or vals.count(new) > 1
-                    }
-                )
-                if clash:
-                    raise FluxError(
-                        f"rename: target column(s) {clash} already "
-                        f"exist or collide: {op[2]!r}"
-                    )
-                for old, new in mapping.items():
-                    base = base.withColumnRenamed(old, new)
-            else:
-                cols = op[1]
-                missing = [c for c in cols if c not in visible]
-                if missing:
-                    raise FluxError(
-                        f"{op[0]}: unknown column(s) {missing}; frame "
-                        f"has {visible}: {op[2]!r}"
-                    )
-                if op[0] == "keep":
-                    # user-listed order, exactly like the batch tail's
-                    # out.select(*op[1]) (review 12d: frame order here
-                    # made the two paths emit differently-shaped frames)
-                    keep_cols = [
-                        c for c in base.columns if c == "__w"
-                    ] + list(cols)
-                    base = base.select(*keep_cols)
-                else:
-                    base = base.drop(*cols)
-            continue
-        toks, src_stage = op[1], op[2]
-        # the batch postfilter's own normalization + remap: bracketed
-        # layouts collapse, r._value resolves to the aggregate's value
-        # column, every reference must exist on the output frame
-        toks = [
-            re.sub(r'^r\[\s*"(.*)"\s*\]$', r'r["\1"]', t) for t in toks
-        ]
-        new_toks = [
-            f'r["{name}"]' if t in ('r["_value"]', "r._value") else t
-            for t in toks
-        ]
-        refs = [
-            t[3:-2] if t.startswith('r["') else t[2:]
-            for t in new_toks
-            if t.startswith('r["') or t.startswith("r.")
-        ]
-        missing = sorted({c for c in refs if c not in visible})
-        if missing:
-            raise FluxError(
-                f"filter after aggregateWindow: unknown column(s) "
-                f"{missing}; frame has {visible}: {src_stage!r}"
-            )
-        base = base.filter(_parse_pred(new_toks, params))
+        base = _tail_op(base, op, name, params, natural_key)
     if keep_window:
         # the streaming join keys on the window STRUCT itself — the
         # event-time watermark rides through it (Spark's multiple-
         # stateful-operator window join)
         return base.drop("window_start"), (every_s, period_s, offset_s)
     return base.drop("__w"), (every_s, period_s, offset_s)
+
+
+def _series_fold(transform: tuple):
+    """The keyed-state form (a ``stateful.SeriesFold``) of a parsed
+    per-point transform. Each streams under a pinned arrival contract
+    (strictly-increasing per-series event time across micro-batches;
+    late rows drop — the batch compiler on the store is the replay
+    path), with state O(1) in the stream length: one (last time, last
+    value, accumulators) tuple for derivative / difference /
+    cumulativeSum / increase (round 12); fixed chained-fold slots for
+    the EMA family (round 13); bounded trailing-value lists for
+    kaufmansAMA / movingAverage / chandeMomentumOscillator /
+    kaufmansER, one lag for elapsed and interpolate.linear, and a
+    fixed run tuple for stateDuration / stateCount, whose predicate is
+    a Catalyst projection applied before the fold (round 14). Emitted
+    values replay the batch expressions bit-for-bit."""
+    from .streaming import stateful as sf
+
+    kind = transform[0]
+    if kind == "derivative":
+        return sf.transform_fold("derivative", transform[1], transform[2])
+    if kind == "difference":
+        if transform[2]:
+            raise FluxError(
+                "difference(keepFirst: true) is outside the STREAMING "
+                "subset (run compile_flux on the store)"
+            )
+        return sf.transform_fold("difference", non_negative=transform[1])
+    if kind in ("cumsum", "increase"):
+        return sf.transform_fold(kind)
+    if kind == "ma":
+        return sf.moving_average_fold(transform[1])
+    if kind in ("cmo", "ker"):
+        return sf.trailing_indicator_fold(kind, transform[1])
+    if kind == "kama":
+        return sf.kama_fold(transform[1])
+    if kind == "state_duration":
+        return sf.state_tracking_fold("duration", transform[1], transform[2])
+    if kind == "state_count":
+        return sf.state_tracking_fold("count", transform[1])
+    if kind == "interpolate":
+        return sf.interpolate_fold(transform[1])
+    if kind == "elapsed":
+        return sf.elapsed_fold(transform[1])
+    # ema / ema2 / ema3 / rsi / trix / etma
+    return sf.smoothing_fold(
+        {"ema2": "dema", "ema3": "tema"}.get(kind, kind), transform[1]
+    )
 
 
 def start_flux_task(
@@ -3306,9 +3454,7 @@ def _strip_to(
     a = _args(stages[-1], "to")
     if "bucket" not in a:
         raise FluxError("to() requires bucket:")
-    extra = set(a) - {"bucket"}
-    if extra:
-        raise FluxError(f"to: unsupported args {sorted(extra)}")
+    _no_extra(a, {"bucket"}, "to")
     target = _resolve(a["bucket"], params)
     if target not in bucket_paths:
         raise FluxError(f"to(): unknown bucket {target!r}")
@@ -3438,7 +3584,7 @@ def _compile_pipeline(
     # mapped values. (_measurement/_field equality pushdown commutes
     # with _value maps, so extraction stays order-free.)
     row_ops: list[tuple[str, Column]] = []
-    agg = None  # (every_s, fn, create_empty)
+    agg = None  # _parse_aggregate_window's tuple
     agg_timesrc = "_start"  # aggregateWindow timeSrc: (round 12d)
     take_last = False
     # aggregateWindow |> <value-series transform> (the downsample-then-
@@ -3446,33 +3592,23 @@ def _compile_pipeline(
     # output series instead of the raw scan
     transform_post_agg = False
     transform = None  # ("derivative",) | ("tma", period_s) | ("increase",) | ("state_duration", Column)
-    post_ops: list[tuple] = []  # sort/limit/keep/drop, in user order
+    # tail stages in user order: sort/limit/tail run in _finish, the
+    # rest through the shared _tail_op
+    post_ops: list[tuple] = []
     yield_name = None
     # Flux table key: (_measurement, _field, promoted tags) — the
     # natural_key above. A group() stage re-keys; None = the natural
     # key (no regrouping requested).
     group_cols: list[str] | None = None
 
-    def _bound(tok: str) -> str:
-        return _resolve_bound(tok, params, now, "range")
-
     _TERMINAL_HEADS = (
-        "aggregateWindow", "last", "first", "mean", "count", "sum", "min",
-        "max", "median", "derivative", "timedMovingAverage",
-        "movingAverage", "increase", "stateDuration", "pivot",
-        "difference", "cumulativeSum", "spread", "stddev", "quantile",
-        "elapsed", "histogram", "unique", "distinct", "window",
-        "integral", "timeWeightedAvg", "exponentialMovingAverage",
-        "exponentialTimeMovingAverage",
-        # round 10c: the technical-indicator / selector batch
-        "mode", "skew", "stateCount", "chandeMomentumOscillator",
-        "kaufmansER", "doubleEMA", "tripleEMA", "relativeStrengthIndex",
-        "sample", "highestMax", "highestAverage", "highestCurrent",
+        *_SHARED_TRANSFORMS, "aggregateWindow", "timedMovingAverage",
+        "last", "first", "mean", "count", "sum", "min", "max", "median",
+        "pivot", "spread", "stddev", "quantile", "histogram", "unique",
+        "distinct", "window", "integral", "timeWeightedAvg", "mode",
+        "skew", "sample", "highestMax", "highestAverage", "highestCurrent",
         "lowestMin", "lowestAverage", "lowestCurrent", "histogramQuantile",
-        "columns", "keyValues", "holtWinters",
-        # round 11b: the contrib / interpolate / remaining-indicator batch
-        "tripleExponentialDerivative", "kaufmansAMA", "events.duration",
-        "interpolate.linear", "reduce",
+        "columns", "keyValues", "holtWinters", "events.duration", "reduce",
     )
     _TAIL_HEADS = ("sort", "limit", "keep", "drop", "fill", "rename",
                    "timeShift", "top", "bottom", "duplicate", "set",
@@ -3495,14 +3631,7 @@ def _compile_pipeline(
         # silently drop last() — the shipped subset supports row-level
         # stages strictly BEFORE one terminal aggregation/transform
         # stage, and raises on anything else rather than mis-compiling
-        if head in (
-            "range", "group", "hourSelection",
-            "truncateTimeColumn", "toFloat", "toInt",
-        ) and terminal_seen:
-            raise FluxError(
-                f"{head}() after an aggregation/transform stage is outside "
-                f"the shipped subset (it would act on raw rows): {stage!r}"
-            )
+        _check_stage_order(head, stage, terminal_seen, time_shifted)
         if head in _TERMINAL_HEADS and terminal_seen:
             if (
                 head == "histogramQuantile"
@@ -3552,14 +3681,10 @@ def _compile_pipeline(
                             f"histogramQuantile {fixed}: must match the "
                             f"fused histogram ({want!r}); got {stage!r}"
                         )
-                extra = set(a) - {
+                _no_extra(a, {
                     "quantile", "minValue", "onNonmonotonic",
                     "countColumn", "upperBoundColumn", "valueColumn",
-                }
-                if extra:
-                    raise FluxError(
-                        f"histogramQuantile: unsupported args {sorted(extra)}"
-                    )
+                }, "histogramQuantile")
                 transform = (
                     "histogram_quantile", transform[1], float(qv), float(minv)
                 )
@@ -3687,24 +3812,9 @@ def _compile_pipeline(
                     "the shipped subset (compose in DataFrame land instead)"
                 )
         if head == "range":
-            if time_shifted:
-                # the scan's pushed time bounds filter STORED
-                # timestamps; after a row-level timeShift or
-                # truncateTimeColumn they would filter REWRITTEN ones —
-                # refuse rather than mis-prune
-                raise FluxError(
-                    "range() after a time-rewriting stage (timeShift/"
-                    "truncateTimeColumn) is outside the shipped "
-                    "subset (the pushed bounds would filter shifted "
-                    f"timestamps): {stage!r}"
-                )
-            a = _args(stage, "range")
-            if "start" in a:
-                start = _bound(a["start"])
-            if "stop" in a:
-                stop = _bound(a["stop"])
+            start, stop = _parse_range(stage, params, now, start, stop)
         elif head == "filter":
-            toks = _tokenize_pred(_filter_extract(stage))
+            toks = _filter_tokens(stage)
             if terminal_seen or post_ops:
                 # POST-stage filter — the Grafana alert/threshold shape
                 # (aggregateWindow |> filter(fn: (r) => r._value > X)):
@@ -3713,7 +3823,7 @@ def _compile_pipeline(
                 # resolve against the output frame at build time, with
                 # r._value mapped onto the aggregate's value column
                 # (this subset's attested frames name it after the fn).
-                post_ops.append(("postfilter", toks, stage))
+                post_ops.append(("filter", toks, stage))
                 continue
 
             def _pure_eq(col: str):
@@ -3745,45 +3855,14 @@ def _compile_pipeline(
                 tag_eqs[tag_hit[0]] = str(tag_hit[1])
             else:
                 # residual row predicate (regex/range/compound tag or
-                # value conditions). Validate references against the
-                # STORE's record columns first: a predicate on a
-                # column the store does not carry raises a FluxError
-                # naming it, not a Spark analysis error downstream.
-                _validate_refs(
-                    toks,
-                    {*natural_key, "_time", "_value", "tags", "_date"},
-                    "filter",
+                # value conditions)
+                row_ops.append(
+                    ("filter", _row_filter(toks, natural_key, params))
                 )
-                row_ops.append(("filter", _parse_pred(toks, params)))
         elif head == "map":
             # map(fn: (r) => ({ r with _value: <arith> })) — the Data
-            # Explorer's unit-conversion / custom-function transform.
-            # The subset ships the _value-rewrite record-extension form
-            # only (rewriting _time/_field would change table keys and
-            # window semantics — raise rather than mis-compile).
-            a = _args(stage, "map")
-            if "fn" not in a:
-                raise FluxError("map requires fn: (r) => ({ r with ... })")
-            extra = set(a) - {"fn"}
-            if extra:
-                raise FluxError(f"map: unsupported args {sorted(extra)}")
-            m = re.match(
-                r"^\(\s*r\s*\)\s*=>\s*\(\s*\{\s*r\s+with\s+"
-                r"(\w+|\"[^\"]+\")\s*:\s*(.*?)\s*\}\s*\)\s*$",
-                a["fn"].strip(),
-                re.DOTALL,
-            )
-            if not m:
-                raise FluxError(
-                    "map ships only fn: (r) => ({ r with _value: <arith> })"
-                    f"; got {a['fn']!r}"
-                )
-            target = m.group(1).strip('"')
-            if target != "_value":
-                raise FluxError(
-                    f"map ships only the _value rewrite; got {target!r} "
-                    "(rewriting keys/time would change table semantics)"
-                )
+            # Explorer's unit-conversion / custom-function transform
+            src = _parse_map(stage)
             if terminal_seen or post_ops:
                 # round 12d: POST-AGGREGATE map — the tail rewrite of
                 # the output frame's value column (unit conversion on
@@ -3791,191 +3870,11 @@ def _compile_pipeline(
                 # in user order among the tail stages via the shared
                 # _post_value_map (the streaming live panel compiles
                 # the identical rewrite)
-                post_ops.append(("postmap", m.group(2), stage))
+                post_ops.append(("map", src, stage))
                 continue
-            # NULL-preserving rewrite: arithmetic already propagates
-            # null, but greatest/least and when/otherwise (math.mMax,
-            # if/then/else) would turn a NULL _value into a non-null
-            # constant BEFORE the shared null policy filters it —
-            # diverging from the oracles' WHERE value IS NOT NULL and
-            # over-counting n. A null input stays null through map.
-            mapped = _parse_arith(m.group(2), params)
-            row_ops.append(
-                (
-                    "map",
-                    F.when(
-                        F.col("_value").isNull(),
-                        F.lit(None).cast("double"),
-                    ).otherwise(mapped),
-                )
-            )
+            row_ops.append(("map", _row_map(src, params)))
         elif head == "aggregateWindow":
-            a = _args(stage, "aggregateWindow")
-            every = _resolve(a.get("every", ""), params)
-            calendar = None
-            if isinstance(every, str) and every in ("1mo", "1y"):
-                # calendar windows: month/year boundaries are not a
-                # fixed number of seconds — compiled to a date_trunc
-                # bucket instead of epoch-aligned tumbling windows.
-                # Only the 1-unit anchors ship (Nmo/Ny windows need
-                # upstream's anchor arithmetic — raise).
-                calendar = "month" if every == "1mo" else "year"
-            elif not (isinstance(every, str) and _DUR_RE.match(every)):
-                raise FluxError(f"aggregateWindow every: bad duration {every!r}")
-            fn = a.get("fn", "mean").strip()
-            agg_q = None
-            lm = re.match(
-                r"^\(\s*column\s*,\s*tables\s*=\s*<-\s*\)\s*=>\s*tables\s*"
-                r"\|>\s*(quantile\s*\(.*\))\s*$",
-                fn,
-                re.DOTALL,
-            )
-            if lm:
-                # the WINDOWED QUANTILE lambda (round 11b) — upstream's
-                # documented idiom for parameterized aggregateWindow
-                # fns: `fn: (column, tables=<-) => tables |> quantile(
-                # q: 0.99)` — the p99-per-window latency panel. Same
-                # exact_selector semantics and Flux rank convention as
-                # the bare quantile() stage; parsed with the same
-                # validation.
-                qa = _args(lm.group(1).strip(), "quantile")
-                if "q" not in qa:
-                    raise FluxError("aggregateWindow quantile requires q:")
-                qv = _resolve(qa["q"], params)
-                if (
-                    isinstance(qv, bool)
-                    or not isinstance(qv, (int, float))
-                    or not (0 < float(qv) <= 1)
-                ):
-                    raise FluxError(
-                        f"quantile q: expected a number in (0, 1], got {qv!r}"
-                    )
-                qmethod = (
-                    _resolve(qa["method"], params)
-                    if "method" in qa
-                    else "exact_selector"
-                )
-                if qmethod not in ("exact_selector", "estimate_tdigest"):
-                    raise FluxError(
-                        "quantile ships the exact_selector method (also "
-                        "answering estimate_tdigest exactly); got method "
-                        f"{qmethod!r}"
-                    )
-                qextra = set(qa) - {"q", "method"}
-                if qextra:
-                    raise FluxError(
-                        f"quantile: unsupported args {sorted(qextra)}"
-                    )
-                fn = "quantile"
-                agg_q = float(qv)
-            elif fn not in _AGG_FNS:
-                raise FluxError(f"unsupported aggregateWindow fn {fn!r}")
-            ce_raw = _resolve(a.get("createEmpty", "false"), params)
-            # explicit boolean mapping: bool("false") is True, so a
-            # quoted/template-substituted "false" must not gap-fill
-            if isinstance(ce_raw, bool):
-                create_empty = ce_raw
-            elif isinstance(ce_raw, str) and ce_raw.lower() in ("true", "false"):
-                create_empty = ce_raw.lower() == "true"
-            else:
-                raise FluxError(f"createEmpty: expected a boolean, got {ce_raw!r}")
-            # period:/offset: — SLIDING (each row in period/every
-            # windows) and alignment-shifted windows, Spark's
-            # F.window(period, every, startTime) 1:1. The shipped
-            # subset: period a positive multiple of every (upstream's
-            # dashboard smoothing shape); offset any duration,
-            # normalized into [0, every).
-            period_s = None
-            if "period" in a:
-                period = _resolve(a["period"], params)
-                if not (isinstance(period, str) and _DUR_RE.match(period)):
-                    raise FluxError(
-                        f"aggregateWindow period: bad duration {period!r}"
-                    )
-                period_s = _duration_seconds(period)
-            offset_s = 0
-            if "offset" in a:
-                off_tok = _resolve(a["offset"], params)
-                if not (isinstance(off_tok, str) and _DUR_RE.match(off_tok)):
-                    raise FluxError(
-                        f"aggregateWindow offset: bad duration {off_tok!r}"
-                    )
-                offset_s = _duration_seconds(off_tok)
-            # timeSrc: — the window-label source (round 12d).
-            # "_start" is this engine's pinned convention (no-op);
-            # "_stop" is UPSTREAM'S DEFAULT: the emitted label becomes
-            # the window end (start + every), applied once on the
-            # output frame before the tail stages, so a pasted
-            # dashboard query with explicit timeSrc: "_stop" replays.
-            # Calendar windows raise (a month's end is not a fixed
-            # shift); "_time" (the last raw timestamp) is not a label
-            # this order-insensitive frame contract can produce.
-            if "timeSrc" in a:
-                ts_raw = _resolve(a["timeSrc"], params)
-                if ts_raw not in ("_start", "_stop"):
-                    raise FluxError(
-                        'aggregateWindow timeSrc: ships "_start" (the '
-                        'engine convention) or "_stop" (upstream\'s '
-                        f"default label); got {ts_raw!r}"
-                    )
-                agg_timesrc = ts_raw
-            extra = set(a) - {
-                "every", "fn", "createEmpty", "period", "offset",
-                "timeSrc",
-            }
-            if extra:
-                raise FluxError(
-                    f"aggregateWindow: unsupported args {sorted(extra)}"
-                )
-            if calendar is not None:
-                if period_s is not None or offset_s:
-                    raise FluxError(
-                        "aggregateWindow: period:/offset: do not compose "
-                        "with calendar every: (1mo/1y) in the subset"
-                    )
-                if agg_timesrc == "_stop":
-                    raise FluxError(
-                        'timeSrc: "_stop" with calendar every: (1mo/1y) '
-                        "is outside the subset (a month's end is not a "
-                        "fixed shift)"
-                    )
-                if create_empty:
-                    raise FluxError(
-                        "createEmpty with calendar windows is outside "
-                        "the shipped subset"
-                    )
-                agg = (calendar, fn, False, agg_q, None, 0)
-            else:
-                every_s = _duration_seconds(every)
-                if every_s <= 0:
-                    raise FluxError(
-                        f"aggregateWindow every must be > 0: {every!r}"
-                    )
-                if period_s is not None and period_s != every_s:
-                    if period_s <= 0 or period_s % every_s != 0:
-                        raise FluxError(
-                            "aggregateWindow period: must be a positive "
-                            f"multiple of every: in the subset; got {stage!r}"
-                        )
-                    if create_empty:
-                        raise FluxError(
-                            "createEmpty with sliding windows (period != "
-                            "every) is outside the shipped subset"
-                        )
-                    if fn in ("mode", "quantile"):
-                        raise FluxError(
-                            f"aggregateWindow fn: {fn} with period != every "
-                            "is outside the shipped subset"
-                        )
-                else:
-                    period_s = None
-                offset_s %= every_s
-                if offset_s and (create_empty or fn in ("mode", "quantile")):
-                    raise FluxError(
-                        "aggregateWindow offset: composes with the plain "
-                        "aggregate fns only in the subset"
-                    )
-                agg = (every_s, fn, create_empty, agg_q, period_s, offset_s)
+            agg, agg_timesrc = _parse_aggregate_window(stage, params)
         elif head == "last":
             if _args(stage, "last"):
                 # last(column: "tags") would silently compile as last on
@@ -3984,134 +3883,19 @@ def _compile_pipeline(
                     f"last() takes no arguments in the subset: {stage!r}"
                 )
             take_last = True
-        elif head == "derivative":
-            # derivative([unit:], [nonNegative:]) — upstream: per pair,
-            # Δv ÷ (Δt/unit); nonNegative: true is the counter form (a
-            # decrease assumes the previous value should have been 0,
-            # i.e. delta = current value — the `rate` reset rule);
-            # nonNegative: false (the default) keeps signed rates.
-            a = _args(stage, "derivative")
-            unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-            if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                raise FluxError(f"derivative unit: bad duration {unit!r}")
-            unit_s = _duration_seconds(unit)
-            if unit_s <= 0:
-                raise FluxError(f"derivative unit must be > 0: {unit!r}")
-            nn = _resolve(a["nonNegative"], params) if "nonNegative" in a else False
-            if not isinstance(nn, bool):
-                raise FluxError(
-                    f"derivative nonNegative: expected a boolean, got {nn!r}"
-                )
-            extra = set(a) - {"unit", "nonNegative"}
-            if extra:
-                raise FluxError(f"derivative: unsupported args {sorted(extra)}")
-            transform = ("derivative", unit_s, nn)
+        elif head in _SHARED_TRANSFORMS:
+            transform = _parse_transform(head, stage, params)
         elif head == "timedMovingAverage":
-            a = _args(stage, "timedMovingAverage")
-            if "every" in a:
-                # the WINDOWED-EMISSION form (round 11b): upstream
-                # defines timedMovingAverage(every:, period:) as
-                # window(every:, period:) |> mean() — exactly the
-                # sliding aggregateWindow(mean) machinery (start-
-                # labeled windows, the engine-wide convention), so it
-                # compiles to the same agg tuple and inherits the
-                # sliding path's plan (each row lands in period/every
-                # windows, one exchange). period must be a positive
-                # multiple of every, the sliding subset's constraint —
-                # validation shared with the streaming compiler
-                # (_parse_tma_windowed, ONE definition).
-                tma_every_s, tma_period_s = _parse_tma_windowed(
-                    a, params, stage
-                )
-                agg = (tma_every_s, "mean", False, None, tma_period_s, 0)
-                continue
-            period = _resolve(a.get("period", ""), params)
-            if not (isinstance(period, str) and _DUR_RE.match(period)):
-                raise FluxError(
-                    f"timedMovingAverage period: bad duration {period!r}"
-                )
-            period_s = _duration_seconds(period)
-            if period_s <= 0:
-                raise FluxError(f"timedMovingAverage period must be > 0: {period!r}")
-            extra = set(a) - {"period"}
-            if extra:
-                raise FluxError(
-                    f"timedMovingAverage: unsupported args {sorted(extra)}"
-                )
-            transform = ("tma", period_s)
-        elif head == "movingAverage":
-            a = _args(stage, "movingAverage")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"movingAverage n: positive int required, got {n!r}")
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(f"movingAverage: unsupported args {sorted(extra)}")
-            transform = ("ma", n)
-        elif head == "increase":
-            if _args(stage, "increase"):
-                raise FluxError(f"increase() takes no arguments in the subset: {stage!r}")
-            transform = ("increase",)
-        elif head == "difference":
-            # Flux difference(): per-table lag delta rewriting _value,
-            # first row dropped (no predecessor). nonNegative: true is
-            # the counter form (reset ⇒ previous assumed zero ⇒ delta =
-            # current value) — the same rule increase() accumulates.
-            # keepFirst: true (round 12d) keeps each table's first row
-            # with a NULL delta — upstream's row-count-preserving form
-            # — and initialZero: true writes 0 there instead (exactly
-            # what increase() does internally; now reachable from the
-            # bare stage).
-            a = _args(stage, "difference")
-            nn = _resolve(a["nonNegative"], params) if "nonNegative" in a else False
-            if not isinstance(nn, bool):
-                raise FluxError(
-                    f"difference nonNegative: expected a boolean, got {nn!r}"
-                )
-            keep_first = (
-                _resolve(a["keepFirst"], params) if "keepFirst" in a else False
-            )
-            if not isinstance(keep_first, bool):
-                raise FluxError(
-                    f"difference keepFirst: expected a boolean, got "
-                    f"{keep_first!r}"
-                )
-            initial_zero = (
-                _resolve(a["initialZero"], params)
-                if "initialZero" in a
-                else False
-            )
-            if not isinstance(initial_zero, bool):
-                raise FluxError(
-                    f"difference initialZero: expected a boolean, got "
-                    f"{initial_zero!r}"
-                )
-            if initial_zero and not keep_first:
-                raise FluxError(
-                    "difference initialZero: true applies to the KEPT "
-                    "first row — set keepFirst: true (upstream drops "
-                    "the first row otherwise and the zero never lands)"
-                )
-            extra = set(a) - {"nonNegative", "keepFirst", "initialZero"}
-            if extra:
-                raise FluxError(f"difference: unsupported args {sorted(extra)}")
-            transform = ("difference", nn, keep_first, initial_zero)
-        elif head == "cumulativeSum":
-            # cumulativeSum(): per-table running sum rewriting _value.
-            # The default column list is the only shape shipped.
-            a = _args(stage, "cumulativeSum")
-            cols = (
-                _str_list(a["columns"], "cumulativeSum columns")
-                if "columns" in a
-                else ["_value"]
-            )
-            extra = set(a) - {"columns"}
-            if extra or cols != ["_value"]:
-                raise FluxError(
-                    "cumulativeSum ships only columns: [\"_value\"] "
-                    f"(the default); got {stage!r}"
-                )
-            transform = ("cumsum",)
+            # validation shared with the streaming compiler: the
+            # windowed-emission form compiles to the sliding
+            # aggregateWindow(mean) agg tuple and inherits the sliding
+            # path's plan (each row lands in period/every windows, one
+            # exchange); the bare form is the trailing RANGE-frame mean
+            tma_agg, tma = _parse_timed_moving_average(stage, params)
+            if tma_agg is not None:
+                agg = tma_agg
+            else:
+                transform = tma
         elif head == "pivot":
             a = _args(stage, "pivot")
             rk = _str_list(a.get("rowKey", ""), "pivot rowKey")
@@ -4134,28 +3918,8 @@ def _compile_pipeline(
                     f"tag column {store_tag_cols} (the Data-Explorer "
                     f"table views); got {stage!r}"
                 )
-            extra = set(a) - {"rowKey", "columnKey", "valueColumn"}
-            if extra:
-                raise FluxError(f"pivot: unsupported args {sorted(extra)}")
+            _no_extra(a, {"rowKey", "columnKey", "valueColumn"}, "pivot")
             transform = ("pivot", ck[0])
-        elif head == "stateDuration":
-            a = _args(stage, "stateDuration")
-            if "fn" not in a:
-                raise FluxError("stateDuration requires fn: (r) => predicate")
-            unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-            if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                raise FluxError(f"stateDuration unit: bad duration {unit!r}")
-            sd_unit_s = _duration_seconds(unit)
-            if sd_unit_s <= 0:
-                raise FluxError(f"stateDuration unit must be > 0: {unit!r}")
-            extra = set(a) - {"fn", "unit"}
-            if extra:
-                raise FluxError(f"stateDuration: unsupported args {sorted(extra)}")
-            m = re.match(r"^\(\s*r\s*\)\s*=>\s*(.*)$", a["fn"].strip(), re.DOTALL)
-            if not m:
-                raise FluxError(f"malformed stateDuration fn: {a['fn']!r}")
-            pred = _parse_pred(_tokenize_pred(m.group(1).strip()), params)
-            transform = ("state_duration", pred, sd_unit_s)
         elif head == "histogram":
             # histogram(bins: [...]) — Flux's CUMULATIVE histogram: one
             # row per upper bound `le` per table, _value = float count
@@ -4181,9 +3945,9 @@ def _compile_pipeline(
                     "histogram ships column: \"_value\" and a boolean "
                     f"normalize: only; got {stage!r}"
                 )
-            extra = set(a) - {"bins", "column", "upperBoundColumn", "normalize"}
-            if extra:
-                raise FluxError(f"histogram: unsupported args {sorted(extra)}")
+            _no_extra(
+                a, {"bins", "column", "upperBoundColumn", "normalize"}, "histogram"
+            )
             bounds = _parse_bins(a["bins"], params)
             transform = ("histogram", bounds, ub, norm)
         elif head in (
@@ -4198,76 +3962,21 @@ def _compile_pipeline(
                 raise FluxError(f"bare {head}() takes no arguments in the subset")
             agg = (None, head, False, None, None, 0)
         elif head == "quantile":
-            # quantile(q:, [method: "exact_selector"]) — compiled as the
-            # EXACT selector (the smallest data point with cumulative
-            # frequency ≥ q, i.e. percentile_disc — Flux's
-            # exact_selector method). The default estimate_tdigest asks
-            # for an estimate, which an exact answer satisfies, so both
-            # compile here; exact_mean has DIFFERENT defined semantics
-            # (mean of the straddling points) and raises.
-            a = _args(stage, "quantile")
-            if "q" not in a:
-                raise FluxError("quantile requires q:")
-            qv = _resolve(a["q"], params)
-            if isinstance(qv, bool) or not isinstance(qv, (int, float)) or not (
-                0 < float(qv) <= 1
-            ):
-                raise FluxError(f"quantile q: expected a number in (0, 1], got {qv!r}")
-            method = (
-                _resolve(a["method"], params) if "method" in a else "exact_selector"
-            )
-            if method not in ("exact_selector", "estimate_tdigest"):
-                raise FluxError(
-                    "quantile ships the exact_selector method (also answering "
-                    f"estimate_tdigest exactly); got method {method!r}"
-                )
-            extra = set(a) - {"q", "method"}
-            if extra:
-                raise FluxError(f"quantile: unsupported args {sorted(extra)}")
-            agg = (None, "quantile", False, float(qv), None, 0)
+            # quantile(q:, [method: "exact_selector"]) — the smallest
+            # data point with cumulative frequency ≥ q (SQL
+            # percentile_disc, Flux's exact_selector method)
+            agg = (None, "quantile", False, _parse_quantile(stage, params, "quantile"), None, 0)
         elif head == "timeShift":
             # Grafana's period-comparison overlay: add duration to the
             # time column. Row-level before the terminal stage (Flux
             # shifts THEN windows), tail stage after it (shift the
             # aggregated frame's window_start/_time).
-            a = _args(stage, "timeShift")
-            if "duration" not in a:
-                raise FluxError("timeShift requires duration:")
-            dur = _resolve(a["duration"], params)
-            if not (isinstance(dur, str) and _DUR_RE.match(dur)):
-                raise FluxError(f"timeShift duration: bad duration {dur!r}")
-            shift_s = _duration_seconds(dur)
-            if "columns" in a:
-                cols = _str_list(a["columns"], "timeShift columns")
-                if cols not in (["_time"], ["_start", "_stop", "_time"]):
-                    raise FluxError(
-                        "timeShift ships the default columns: — every "
-                        "of _start/_stop/_time present in the frame "
-                        f"shifts together; got {stage!r}"
-                    )
-            extra = set(a) - {"duration", "columns"}
-            if extra:
-                raise FluxError(f"timeShift: unsupported args {sorted(extra)}")
+            shift_s = _parse_time_shift(stage, params)
             if terminal_seen or post_ops:
-                post_ops.append(("timeshift", shift_s))
+                post_ops.append(("timeshift", shift_s, stage))
             else:
                 row_ops.append(("timeshift", shift_s))
                 time_shifted = True
-        elif head == "elapsed":
-            # elapsed([unit:]): duration between subsequent records per
-            # table, truncated to whole units (Flux duration division);
-            # the per-table first row is dropped (no predecessor)
-            a = _args(stage, "elapsed")
-            unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-            if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                raise FluxError(f"elapsed unit: bad duration {unit!r}")
-            unit_s = _duration_seconds(unit)
-            if unit_s <= 0:
-                raise FluxError(f"elapsed unit must be > 0: {unit!r}")
-            extra = set(a) - {"unit"}
-            if extra:
-                raise FluxError(f"elapsed: unsupported args {sorted(extra)}")
-            transform = ("elapsed", unit_s)
         elif head in ("toFloat", "toInt"):
             # type-conversion row stages. toInt() truncates toward zero
             # (Go's int64(float) conversion — Spark's double→long cast
@@ -4306,9 +4015,7 @@ def _compile_pipeline(
                     "sample ships a deterministic pos: in [0, n) only "
                     f"(upstream's default pos: -1 samples randomly); got {stage!r}"
                 )
-            extra = set(a) - {"n", "pos"}
-            if extra:
-                raise FluxError(f"sample: unsupported args {sorted(extra)}")
+            _no_extra(a, {"n", "pos"}, "sample")
             transform = ("sample", n, pos)
         elif head == "holtWinters":
             # holtWinters(n:, interval:, [seasonality: m]) — the
@@ -4329,21 +4036,8 @@ def _compile_pipeline(
             # emits the pinned one-step-ahead fit convention before
             # the forecasts (see the execution branch).
             a = _args(stage, "holtWinters")
-            hw_n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(hw_n, int) or isinstance(hw_n, bool) or hw_n < 1:
-                raise FluxError(
-                    f"holtWinters n: positive int required, got {hw_n!r}"
-                )
-            interval = _resolve(a["interval"], params) if "interval" in a else None
-            if not (isinstance(interval, str) and _DUR_RE.match(interval)):
-                raise FluxError(
-                    f"holtWinters interval: bad duration {interval!r}"
-                )
-            hw_int_s = _duration_seconds(interval)
-            if hw_int_s <= 0:
-                raise FluxError(
-                    f"holtWinters interval must be > 0: {interval!r}"
-                )
+            hw_n = _int_arg(a, "n", params, "holtWinters")
+            hw_int_s = _dur_arg(a, "interval", params, "holtWinters")
             hw_m = (
                 _resolve(a["seasonality"], params) if "seasonality" in a else 0
             )
@@ -4357,124 +4051,16 @@ def _compile_pipeline(
                     "holtWinters seasonality: 1 is degenerate (every point "
                     "its own season) — use 0 for the non-seasonal form"
                 )
-            hw_fit = False
-            if "withFit" in a:
-                flag = _resolve(a["withFit"], params)
-                if not isinstance(flag, bool):
-                    raise FluxError(
-                        f"holtWinters withFit: expected a boolean, got {flag!r}"
-                    )
-                hw_fit = flag
+            hw_fit = _bool_arg(a, "withFit", params, "holtWinters")
             if "column" in a and _resolve(a["column"], params) != "_value":
                 raise FluxError('holtWinters ships column: "_value" only')
             if "timeColumn" in a and _resolve(a["timeColumn"], params) != "_time":
                 raise FluxError('holtWinters ships timeColumn: "_time" only')
-            extra = set(a) - {
+            _no_extra(a, {
                 "n", "interval", "seasonality", "withFit", "column",
                 "timeColumn",
-            }
-            if extra:
-                raise FluxError(f"holtWinters: unsupported args {sorted(extra)}")
+            }, "holtWinters")
             transform = ("holt_winters", hw_n, hw_int_s, hw_m, hw_fit)
-        elif head == "stateCount":
-            # stateCount(fn: (r) => pred) — sibling of stateDuration:
-            # the 1-based position within the current TRUE run, −1
-            # where the predicate is false (upstream's convention)
-            a = _args(stage, "stateCount")
-            if "fn" not in a:
-                raise FluxError("stateCount requires fn: (r) => predicate")
-            extra = set(a) - {"fn"}
-            if extra:
-                raise FluxError(f"stateCount: unsupported args {sorted(extra)}")
-            m = re.match(r"^\(\s*r\s*\)\s*=>\s*(.*)$", a["fn"].strip(), re.DOTALL)
-            if not m:
-                raise FluxError(f"malformed stateCount fn: {a['fn']!r}")
-            pred = _parse_pred(_tokenize_pred(m.group(1).strip()), params)
-            transform = ("state_count", pred)
-        elif head == "chandeMomentumOscillator":
-            a = _args(stage, "chandeMomentumOscillator")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(
-                    f"chandeMomentumOscillator n: positive int required, "
-                    f"got {n!r}"
-                )
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(
-                    f"chandeMomentumOscillator: unsupported args {sorted(extra)}"
-                )
-            transform = ("cmo", n)
-        elif head == "kaufmansER":
-            a = _args(stage, "kaufmansER")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"kaufmansER n: positive int required, got {n!r}")
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(f"kaufmansER: unsupported args {sorted(extra)}")
-            transform = ("ker", n)
-        elif head in ("doubleEMA", "tripleEMA"):
-            # DEMA = 2·EMA_n(x) − EMA_n(EMA_n(x)) (first 2(n−1) rows
-            # dropped); TEMA = 3·e1 − 3·e2 + e3 (first 3(n−1) dropped) —
-            # exactly the chained-EMA composition upstream Flux builds
-            # them from, so the emission offsets follow from EMA's own
-            # drop-the-first-(n−1) rule.
-            a = _args(stage, head)
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"{head} n: positive int required, got {n!r}")
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(f"{head}: unsupported args {sorted(extra)}")
-            transform = ("ema2" if head == "doubleEMA" else "ema3", n)
-        elif head == "relativeStrengthIndex":
-            a = _args(stage, "relativeStrengthIndex")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(
-                    f"relativeStrengthIndex n: positive int required, got {n!r}"
-                )
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(
-                    f"relativeStrengthIndex: unsupported args {sorted(extra)}"
-                )
-            transform = ("rsi", n)
-        elif head == "tripleExponentialDerivative":
-            # TRIX — the one-lag percent derivative of the thrice-
-            # smoothed EMA chain (operators/timeseries.py flux_trix)
-            a = _args(stage, "tripleExponentialDerivative")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(
-                    f"tripleExponentialDerivative n: positive int "
-                    f"required, got {n!r}"
-                )
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(
-                    f"tripleExponentialDerivative: unsupported args "
-                    f"{sorted(extra)}"
-                )
-            transform = ("trix", n)
-        elif head == "kaufmansAMA":
-            # Kaufman's Adaptive Moving Average with the pinned
-            # identity-seed convention (operators/timeseries.py
-            # flux_kama documents the pin — the holtWinters-constants
-            # precedent)
-            a = _args(stage, "kaufmansAMA")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(
-                    f"kaufmansAMA n: positive int required, got {n!r}"
-                )
-            if "column" in a and _resolve(a["column"], params) != "_value":
-                raise FluxError('kaufmansAMA ships column: "_value" only')
-            extra = set(a) - {"n", "column"}
-            if extra:
-                raise FluxError(f"kaufmansAMA: unsupported args {sorted(extra)}")
-            transform = ("kama", n)
         elif head == "reduce":
             # reduce(fn: (r, accumulator) => ({ f: <expr>, ... }),
             # identity: {f: <num>, ...}) — TWO compiled fragments,
@@ -4510,9 +4096,7 @@ def _compile_pipeline(
             for req in ("fn", "identity"):
                 if req not in a:
                     raise FluxError(f"reduce requires {req}:")
-            extra = set(a) - {"fn", "identity"}
-            if extra:
-                raise FluxError(f"reduce: unsupported args {sorted(extra)}")
+            _no_extra(a, {"fn", "identity"}, "reduce")
             m = re.match(
                 r"^\(\s*r\s*,\s*accumulator\s*\)\s*=>\s*"
                 r"\(\s*\{\s*(.*?)\s*\}\s*\)\s*$",
@@ -4670,33 +4254,10 @@ def _compile_pipeline(
                     "no _stop column — pass stop: explicitly (or set "
                     "range(stop:))"
                 )
-            extra = set(a) - {"unit", "columnName", "stop", "timeColumn"}
-            if extra:
-                raise FluxError(
-                    f"events.duration: unsupported args {sorted(extra)}"
-                )
+            _no_extra(
+                a, {"unit", "columnName", "stop", "timeColumn"}, "events.duration"
+            )
             transform = ("events_duration", ev_unit_s, ev_stop, ev_col)
-        elif head == "interpolate.linear":
-            # interpolate.linear(every:) — fill gaps with rows at
-            # epoch-aligned every-multiples, linearly interpolated
-            # between the bracketing raw points
-            a = _args(stage, "interpolate.linear")
-            if "every" not in a:
-                raise FluxError("interpolate.linear requires every:")
-            ev = _resolve(a["every"], params)
-            if (
-                not (isinstance(ev, str) and _DUR_RE.match(ev))
-                or _duration_seconds(ev) <= 0
-            ):
-                raise FluxError(
-                    f"interpolate.linear every: bad duration {ev!r}"
-                )
-            extra = set(a) - {"every"}
-            if extra:
-                raise FluxError(
-                    f"interpolate.linear: unsupported args {sorted(extra)}"
-                )
-            transform = ("interpolate", _duration_seconds(ev))
         elif head in (
             "highestMax", "highestAverage", "highestCurrent",
             "lowestMin", "lowestAverage", "lowestCurrent",
@@ -4714,9 +4275,7 @@ def _compile_pipeline(
             # reproduces the upstream merge-first default exactly
             # (key-less extrema are allowed: a global partial agg).
             a = _args(stage, head)
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"{head} n: positive int required, got {n!r}")
+            n = _int_arg(a, "n", params, head)
             if "column" in a and _resolve(a["column"], params) != "_value":
                 raise FluxError(f'{head} ships column: "_value" only')
             if "groupColumns" in a:
@@ -4724,9 +4283,7 @@ def _compile_pipeline(
                     f"{head} groupColumns: (re-keyed selection) is outside "
                     "the shipped subset — group() first instead"
                 )
-            extra = set(a) - {"n", "column"}
-            if extra:
-                raise FluxError(f"{head}: unsupported args {sorted(extra)}")
+            _no_extra(a, {"n", "column"}, head)
             transform = ("extrema", head, n)
         elif head == "columns":
             # columns([column:]) — each table's record labels, one row
@@ -4742,9 +4299,7 @@ def _compile_pipeline(
                 raise FluxError(
                     f"columns column: expected an identifier, got {outcol!r}"
                 )
-            extra = set(a) - {"column"}
-            if extra:
-                raise FluxError(f"columns: unsupported args {sorted(extra)}")
+            _no_extra(a, {"column"}, "columns")
             transform = ("columns", outcol)
         elif head == "keyValues":
             # keyValues(keyColumns:) — the generic Grafana variable
@@ -4766,9 +4321,7 @@ def _compile_pipeline(
                 raise FluxError(
                     f"keyValues keyColumns: lists a column twice: {stage!r}"
                 )
-            extra = set(a) - {"keyColumns"}
-            if extra:
-                raise FluxError(f"keyValues: unsupported args {sorted(extra)}")
+            _no_extra(a, {"keyColumns"}, "keyValues")
             transform = ("key_values", kv_cols)
         elif head == "mode":
             # bare mode(): all most-frequent values per table (several
@@ -4805,11 +4358,7 @@ def _compile_pipeline(
                 raise FluxError(
                     'hourSelection ships timeColumn: "_time" only'
                 )
-            extra = set(a) - {"start", "stop", "timeColumn"}
-            if extra:
-                raise FluxError(
-                    f"hourSelection: unsupported args {sorted(extra)}"
-                )
+            _no_extra(a, {"start", "stop", "timeColumn"}, "hourSelection")
             h = F.hour("_time")
             cond = (
                 (h >= hs) & (h <= he) if hs <= he else (h >= hs) | (h <= he)
@@ -4828,11 +4377,7 @@ def _compile_pipeline(
             if isinstance(unit, str) and unit in ("1mo", "1y"):
                 # calendar truncation: month/year boundaries via
                 # date_trunc (not a fixed-seconds epoch floor)
-                extra = set(a) - {"unit"}
-                if extra:
-                    raise FluxError(
-                        f"truncateTimeColumn: unsupported args {sorted(extra)}"
-                    )
+                _no_extra(a, {"unit"}, "truncateTimeColumn")
                 row_ops.append(
                     (
                         "map_time",
@@ -4844,20 +4389,8 @@ def _compile_pipeline(
                 )
                 time_shifted = True
                 continue
-            if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                raise FluxError(
-                    f"truncateTimeColumn unit: bad duration {unit!r}"
-                )
-            unit_s = _duration_seconds(unit)
-            if unit_s <= 0:
-                raise FluxError(
-                    f"truncateTimeColumn unit must be > 0: {unit!r}"
-                )
-            extra = set(a) - {"unit"}
-            if extra:
-                raise FluxError(
-                    f"truncateTimeColumn: unsupported args {sorted(extra)}"
-                )
+            unit_s = _dur_arg(a, "unit", params, "truncateTimeColumn")
+            _no_extra(a, {"unit"}, "truncateTimeColumn")
             row_ops.append(("truncate", unit_s))
             time_shifted = True
         elif head == "unique":
@@ -4870,9 +4403,7 @@ def _compile_pipeline(
             col = _resolve(a["column"], params) if "column" in a else "_value"
             if not isinstance(col, str):
                 raise FluxError(f"unique column: expected a string, got {col!r}")
-            extra = set(a) - {"column"}
-            if extra:
-                raise FluxError(f"unique: unsupported args {sorted(extra)}")
+            _no_extra(a, {"column"}, "unique")
             transform = ("unique", col)
         elif head == "distinct":
             # distinct(column:) — the distinct values of the column per
@@ -4884,9 +4415,7 @@ def _compile_pipeline(
                 raise FluxError(
                     f"distinct column: expected a string, got {col!r}"
                 )
-            extra = set(a) - {"column"}
-            if extra:
-                raise FluxError(f"distinct: unsupported args {sorted(extra)}")
+            _no_extra(a, {"column"}, "distinct")
             transform = ("distinct", col)
         elif head == "window":
             # window(every:) NON-aggregated: assign each raw row its
@@ -4930,11 +4459,7 @@ def _compile_pipeline(
                     "subset (only the legacy un-window merge "
                     f"window(every: inf) follows it): {stage!r}"
                 )
-            if not (isinstance(every, str) and _DUR_RE.match(every)):
-                raise FluxError(f"window every: bad duration {every!r}")
-            every_w = _duration_seconds(every)
-            if every_w <= 0:
-                raise FluxError(f"window every must be > 0: {every!r}")
+            every_w = _dur_arg(a, "every", params, "window")
             extra = set(a) - {"every"}
             if extra:
                 raise FluxError(
@@ -4948,20 +4473,13 @@ def _compile_pipeline(
             # upstream definition), divided into `unit` spans. One lag
             # window + one map-side-combinable sum per table.
             a = _args(stage, "integral")
-            unit = _resolve(a["unit"], params) if "unit" in a else "1s"
-            if not (isinstance(unit, str) and _DUR_RE.match(unit)):
-                raise FluxError(f"integral unit: bad duration {unit!r}")
-            unit_s = _duration_seconds(unit)
-            if unit_s <= 0:
-                raise FluxError(f"integral unit must be > 0: {unit!r}")
+            unit_s = _dur_arg(a, "unit", params, "integral", default="1s")
             if "interpolate" in a:
                 raise FluxError(
                     "integral interpolate: (gap interpolation) is outside "
                     "the shipped subset"
                 )
-            extra = set(a) - {"unit"}
-            if extra:
-                raise FluxError(f"integral: unsupported args {sorted(extra)}")
+            _no_extra(a, {"unit"}, "integral")
             transform = ("integral", unit_s)
         elif head == "timeWeightedAvg":
             # timeWeightedAvg(unit:) (round 12d) — the time-weighted
@@ -4977,58 +4495,9 @@ def _compile_pipeline(
             # subset's order-insensitive frame contract cannot
             # replicate without resolved range context in the stage.
             a = _args(stage, "timeWeightedAvg")
-            if "unit" in a:
-                u = _resolve(a["unit"], params)
-                if not (isinstance(u, str) and _DUR_RE.match(u)):
-                    raise FluxError(
-                        f"timeWeightedAvg unit: bad duration {u!r}"
-                    )
-                if _duration_seconds(u) <= 0:
-                    raise FluxError(
-                        f"timeWeightedAvg unit must be > 0: {u!r}"
-                    )
-            extra = set(a) - {"unit"}
-            if extra:
-                raise FluxError(
-                    f"timeWeightedAvg: unsupported args {sorted(extra)}"
-                )
+            _dur_arg(a, "unit", params, "timeWeightedAvg", default="1s")
+            _no_extra(a, {"unit"}, "timeWeightedAvg")
             transform = ("twa",)
-        elif head == "exponentialMovingAverage":
-            # exponentialMovingAverage(n:) — upstream semantics: the
-            # first emitted point (at row n) is the algebraic mean of
-            # the first n values; each later point is
-            # y = (1−k)·y_prev + k·x with k = 2/(n+1); rows before the
-            # nth are dropped. Inherently sequential (each value
-            # depends on the full prefix) — compiled onto the
-            # sanctioned Arrow per-series kernel, like the engine's
-            # EWMA (operators/timeseries.py ewma).
-            a = _args(stage, "exponentialMovingAverage")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(
-                    f"exponentialMovingAverage n: positive int required, "
-                    f"got {n!r}"
-                )
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(
-                    f"exponentialMovingAverage: unsupported args "
-                    f"{sorted(extra)}"
-                )
-            transform = ("ema", n)
-        elif head == "exponentialTimeMovingAverage":
-            # exponentialTimeMovingAverage(n: <duration>) — the
-            # time-decayed EMA for irregular sampling (round 13; the
-            # last upstream movingAverage-family member). First point
-            # seeds y = v and is emitted (n is a duration, not a
-            # warm-up count); later points y = w·y_prev + (1−w)·v with
-            # the PINNED rational decay w = n/(n + Δt) in place of
-            # upstream's non-replayable exp(−Δt/n) (MIGRATION.md
-            # divergence list; operators/timeseries.py flux_etma).
-            # argument validation shared with the streaming compiler
-            # (_parse_etma_n, ONE definition — review r13)
-            a = _args(stage, "exponentialTimeMovingAverage")
-            transform = ("etma", _parse_etma_n(a, params))
         elif head in ("top", "bottom"):
             # Flux top(n:, [columns:]) / bottom: the Data-Explorer
             # per-series extrema buttons — exactly sort(desc/asc) |>
@@ -5036,15 +4505,11 @@ def _compile_pipeline(
             # machinery (WindowGroupLimit distributed top-N; a
             # one-table frame becomes TakeOrderedAndProject)
             a = _args(stage, head)
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"{head} n: positive int required, got {n!r}")
+            n = _int_arg(a, "n", params, head)
             cols = _str_list(a.get("columns", '["_value"]'), f"{head} columns")
             if not cols:
                 raise FluxError(f"{head}: columns list is empty")
-            extra = set(a) - {"n", "columns"}
-            if extra:
-                raise FluxError(f"{head}: unsupported args {sorted(extra)}")
+            _no_extra(a, {"n", "columns"}, head)
             post_ops.append(("sort", cols, head == "top"))
             post_ops.append(("limit", n))
         elif head == "sort":
@@ -5052,26 +4517,18 @@ def _compile_pipeline(
             cols = _str_list(a.get("columns", '["_value"]'), "sort columns")
             if not cols:
                 raise FluxError("sort: columns list is empty")
-            desc_raw = _resolve(a["desc"], params) if "desc" in a else False
-            if not isinstance(desc_raw, bool):
-                raise FluxError(f"sort desc: expected a boolean, got {desc_raw!r}")
-            extra = set(a) - {"columns", "desc"}
-            if extra:
-                raise FluxError(f"sort: unsupported args {sorted(extra)}")
-            post_ops.append(("sort", cols, desc_raw))
+            desc = _bool_arg(a, "desc", params, "sort")
+            _no_extra(a, {"columns", "desc"}, "sort")
+            post_ops.append(("sort", cols, desc))
         elif head == "limit":
             a = _args(stage, "limit")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"limit n: positive int required, got {n!r}")
+            n = _int_arg(a, "n", params, "limit")
             off = _resolve(a["offset"], params) if "offset" in a else 0
             if not isinstance(off, int) or isinstance(off, bool) or off < 0:
                 raise FluxError(
                     f"limit offset: non-negative int required, got {off!r}"
                 )
-            extra = set(a) - {"n", "offset"}
-            if extra:
-                raise FluxError(f"limit: unsupported args {sorted(extra)}")
+            _no_extra(a, {"n", "offset"}, "limit")
             post_ops.append(("limit", n, off))
         elif head == "tail":
             # tail(n:) — each table's LAST n rows in table order (the
@@ -5079,52 +4536,19 @@ def _compile_pipeline(
             # compiled to the same distributed per-table rank machinery
             # over the REVERSED order
             a = _args(stage, "tail")
-            n = _resolve(a["n"], params) if "n" in a else None
-            if not isinstance(n, int) or isinstance(n, bool) or n < 1:
-                raise FluxError(f"tail n: positive int required, got {n!r}")
+            n = _int_arg(a, "n", params, "tail")
             if "offset" in a:
                 raise FluxError(
                     "tail offset: is outside the shipped subset"
                 )
-            extra = set(a) - {"n"}
-            if extra:
-                raise FluxError(f"tail: unsupported args {sorted(extra)}")
+            _no_extra(a, {"n"}, "tail")
             post_ops.append(("tail", n))
         elif head in ("keep", "drop"):
-            a = _args(stage, head)
-            if "columns" not in a:
-                raise FluxError(f"{head} requires columns:")
-            cols = _str_list(a["columns"], f"{head} columns")
-            if not cols:
-                raise FluxError(f"{head}: columns list is empty")
-            extra = set(a) - {"columns"}
-            if extra:
-                raise FluxError(f"{head}: unsupported args {sorted(extra)}")
-            post_ops.append((head, cols))
+            post_ops.append((head, _parse_columns(head, stage), stage))
         elif head == "fill":
-            # fill(column:, value:) / fill(column:, usePrevious: true) —
-            # the Grafana panel option for gap-filled frames (null means
-            # "no data in this bucket"); exactly one fill mode
-            a = _args(stage, "fill")
-            col = _resolve(a["column"], params) if "column" in a else "_value"
-            if not isinstance(col, str):
-                raise FluxError(f"fill column: expected a string, got {col!r}")
-            extra = set(a) - {"column", "value", "usePrevious"}
-            if extra:
-                raise FluxError(f"fill: unsupported args {sorted(extra)}")
-            up = (
-                _resolve(a["usePrevious"], params) if "usePrevious" in a else False
-            )
-            if not isinstance(up, bool):
-                raise FluxError(f"fill usePrevious: expected a boolean, got {up!r}")
-            if ("value" in a) == up:
-                raise FluxError(
-                    "fill needs exactly one of value: or usePrevious: true"
-                )
-            if up:
-                post_ops.append(("fill", [col], "previous", None))
-            else:
-                post_ops.append(("fill", [col], "value", _resolve(a["value"], params)))
+            post_ops.append(("fill", _parse_fill(stage, params), stage))
+        elif head == "rename":
+            post_ops.append(("rename", _parse_rename(stage), stage))
         elif head == "duplicate":
             # duplicate(column:, as:) — copy a column under a new name
             # (upstream overwrites an existing `as` column)
@@ -5137,10 +4561,8 @@ def _compile_pipeline(
                 raise FluxError(
                     f"duplicate column:/as: expect strings; got {stage!r}"
                 )
-            extra = set(a) - {"column", "as"}
-            if extra:
-                raise FluxError(f"duplicate: unsupported args {sorted(extra)}")
-            post_ops.append(("duplicate", [col], new))
+            _no_extra(a, {"column", "as"}, "duplicate")
+            post_ops.append(("duplicate", (col, new), stage))
         elif head == "set":
             # set(key:, value:) — assign a string constant column
             # (Flux set values are always strings)
@@ -5151,57 +4573,16 @@ def _compile_pipeline(
             v = _resolve(a["value"], params)
             if not (isinstance(k, str) and isinstance(v, str)):
                 raise FluxError(f"set key:/value: expect strings; got {stage!r}")
-            extra = set(a) - {"key", "value"}
-            if extra:
-                raise FluxError(f"set: unsupported args {sorted(extra)}")
-            post_ops.append(("set", [k], v))
-        elif head == "rename":
-            a = _args(stage, "rename")
-            if "columns" not in a:
-                raise FluxError("rename requires columns: {old: \"new\"}")
-            extra = set(a) - {"columns"}
-            if extra:
-                raise FluxError(f"rename: unsupported args {sorted(extra)}")
-            mapping = _str_map(a["columns"], "rename columns")
-            if not mapping:
-                raise FluxError("rename: columns record is empty")
-            post_ops.append(("rename", mapping))
+            _no_extra(a, {"key", "value"}, "set")
+            post_ops.append(("set", (k, v), stage))
         elif head == "group":
-            # Flux regrouping: re-key the tables. The subset ships any
-            # subset of the store's table-key columns (_measurement,
-            # _field, promoted tags) — including the empty key
-            # (group(): merge all series into one table, the
-            # Data-Explorer "one value over everything" form) — and
-            # raises on anything else. Grafana's inserted
-            # group(columns: ["_field"]) re-keys on _field alone:
-            # same values as the natural key when the filter pins
+            # Flux regrouping: re-key the tables. Grafana's inserted
+            # group(columns: ["_field"]) re-keys on _field alone: same
+            # values as the natural key when the filter pins
             # _measurement, minus the _measurement output column.
-            a = _args(stage, "group")
-            cols = _str_list(a.get("columns", "[]"), "group columns")
-            extra = set(a) - {"columns", "mode"}
-            mode = _resolve(a["mode"], params) if "mode" in a else "by"
-            bad = [c for c in cols if c not in natural_key]
-            if (
-                extra
-                or mode not in ("by", "except")
-                or bad
-                or len(cols) != len(set(cols))
-            ):
-                raise FluxError(
-                    "group ships mode: \"by\"/\"except\" over a subset of "
-                    f"the store's table key columns {natural_key} "
-                    f"(incl. the empty list — merge all series); got {stage!r}"
-                )
-            if mode == "except":
-                # upstream's complement form: key on every table-key
-                # column EXCEPT the listed ones
-                cols = [c for c in natural_key if c not in cols]
-            # canonical key order keeps output column order deterministic
-            group_cols = [c for c in natural_key if c in cols]
+            group_cols = _parse_group(stage, params, natural_key)
         elif head == "yield":
-            a = _args(stage, "yield")
-            if "name" in a:
-                yield_name = _resolve(a["name"], params)
+            yield_name = _parse_yield(stage, params, yield_name)
         elif head == "to":
             # _strip_to detaches a TRAILING to(); reaching the loop
             # means it sits mid-pipeline — stages after the write
@@ -5227,6 +4608,55 @@ def _compile_pipeline(
             "(unbounded sort)"
         )
 
+    def _value_col(out: DataFrame, kind: str, arg: Any, stage: str) -> str:
+        # the column r._value resolves onto in a tail filter/map:
+        # _value itself, else the frame's named value column
+        # (aggregated frames name it after the fn — the attested shape)
+        if kind == "filter":
+            mentions = any(
+                _norm_ref(t) in ('r["_value"]', "r._value") for t in arg
+            )
+        else:
+            mentions = bool(re.search(r'r\[\s*"_value"\s*\]|r\._value\b', arg))
+        if mentions and transform is not None and transform[0] in (
+            "derivative", "tma", "ma",
+        ):
+            # these attested frames KEEP the original _value beside the
+            # named result column, while upstream REWRITES _value — a
+            # filter/map on r._value here would silently act on the
+            # wrong series; demand the named column instead (elapsed/
+            # stateDuration/stateCount keep _value upstream too, so
+            # they pass through unguarded)
+            raise FluxError(
+                f"{kind} on _value after {transform[0]} is ambiguous in "
+                "this subset (the frame keeps the original _value beside "
+                "the named result column — upstream rewrites _value): "
+                f"reference the result column explicitly: {stage!r}"
+            )
+        if "_value" in out.columns:
+            return "_value"
+        kind_t = transform[0] if transform is not None else None
+        cand = [
+            c
+            for c in (
+                yield_name,
+                agg[1] if agg is not None else None,
+                # transforms that rewrite _value upstream but emit a
+                # NAMED column here (and drop _value entirely — no
+                # ambiguity)
+                "integral" if kind_t == "integral" else None,
+                "time_weighted_avg" if kind_t == "twa" else None,
+                "last_value",
+            )
+            if c and c in out.columns
+        ]
+        if not cand:
+            raise FluxError(
+                f"{kind} after this stage needs a value column; frame "
+                f"has {out.columns}: {stage!r}"
+            )
+        return cand[0]
+
     def _finish(out: DataFrame) -> DataFrame:
         # Flux sort/limit are PER TABLE: tables key on
         # (_measurement, _field), so the rank filter partitions by
@@ -5249,10 +4679,7 @@ def _compile_pipeline(
             # post-agg-transform forms raised at parse.
             out = out.withColumn(
                 "window_start",
-                F.timestamp_micros(
-                    F.unix_micros("window_start")
-                    + F.lit(int(agg[4] or agg[0]) * 1_000_000)
-                ),
+                _shift_time("window_start", int(agg[4] or agg[0])),
             )
 
         pending_sort: tuple | None = None
@@ -5263,162 +4690,13 @@ def _compile_pipeline(
             return [F.col(c).desc() if desc else F.col(c).asc() for c in cols], cols
 
         for op in post_ops:
-            if op[0] in ("sort", "keep", "drop", "fill", "duplicate"):
+            if op[0] == "sort":
                 missing = [c for c in op[1] if c not in out.columns]
                 if missing:
                     raise FluxError(
-                        f"{op[0]}: unknown column(s) {missing}; frame has "
+                        f"sort: unknown column(s) {missing}; frame has "
                         f"{out.columns}"
                     )
-            elif op[0] == "rename":
-                missing = [c for c in op[1] if c not in out.columns]
-                if missing:
-                    raise FluxError(
-                        f"rename: unknown column(s) {missing}; frame has "
-                        f"{out.columns}"
-                    )
-                vals = list(op[1].values())
-                clash = sorted(
-                    {
-                        new
-                        for new in vals
-                        if new in out.columns or vals.count(new) > 1
-                    }
-                )
-                if clash:
-                    # chained withColumnRenamed on a swap/collision set
-                    # would silently rename twice — raise instead
-                    raise FluxError(
-                        f"rename: target column(s) {clash} already exist "
-                        "or collide"
-                    )
-            if op[0] == "postfilter":
-                # threshold filter over the output frame: map r._value
-                # onto the frame's value column (aggregated frames name
-                # it after the fn — the attested shape), validate every
-                # reference against the frame, then a plain row filter
-                toks, src_stage = op[1], op[2]
-                # normalize the bracketed reference layout FIRST:
-                # r[ "_value" ] tokenizes with the whitespace kept, and
-                # an exact-string match would let formatting bypass the
-                # ambiguity guard / remap / validation below (the
-                # formatting-invariance property: all legal layouts
-                # compile to one plan)
-                toks = [
-                    re.sub(r'^r\[\s*"(.*)"\s*\]$', r'r["\1"]', t)
-                    for t in toks
-                ]
-                if transform is not None and transform[0] in (
-                    # these frames KEEP the original _value beside the
-                    # named result column while upstream REWRITES it;
-                    # elapsed/stateDuration/stateCount keep _value
-                    # upstream too, so they pass through unguarded
-                    "derivative", "tma", "ma",
-                ) and any(
-                    t in ('r["_value"]', "r._value") for t in toks
-                ):
-                    # these attested frames KEEP the original _value
-                    # beside the named result column, while upstream
-                    # REWRITES _value — a filter on r._value here would
-                    # silently test the wrong series; demand the named
-                    # column instead of mis-compiling
-                    raise FluxError(
-                        f"filter on _value after {transform[0]} is "
-                        "ambiguous in this subset (the frame keeps the "
-                        "original _value beside the named result column "
-                        "— upstream rewrites _value): reference the "
-                        f"result column explicitly: {src_stage!r}"
-                    )
-                valcol = "_value"
-                if valcol not in out.columns:
-                    cand = [
-                        c
-                        for c in (
-                            yield_name,
-                            agg[1] if agg is not None else None,
-                            # transforms that rewrite _value upstream
-                            # but emit a NAMED column here (and drop
-                            # _value entirely — no ambiguity)
-                            "integral" if transform is not None
-                            and transform[0] == "integral" else None,
-                            "time_weighted_avg" if transform is not None
-                            and transform[0] == "twa" else None,
-                            "last_value",
-                        )
-                        if c and c in out.columns
-                    ]
-                    if not cand:
-                        raise FluxError(
-                            f"filter after this stage needs a value "
-                            f"column; frame has {out.columns}: {src_stage!r}"
-                        )
-                    valcol = cand[0]
-                new_toks = [
-                    f'r["{valcol}"]'
-                    if t in ('r["_value"]', "r._value")
-                    else t
-                    for t in toks
-                ]
-                refs = [
-                    t[3:-2] if t.startswith('r["') else t[2:]
-                    for t in new_toks
-                    if t.startswith('r["') or t.startswith("r.")
-                ]
-                missing = sorted({c for c in refs if c not in out.columns})
-                if missing:
-                    raise FluxError(
-                        f"filter: unknown column(s) {missing}; frame has "
-                        f"{out.columns}: {src_stage!r}"
-                    )
-                out = out.filter(_parse_pred(new_toks, params))
-            elif op[0] == "postmap":
-                # round 12d: the tail value rewrite — the same
-                # ambiguity guard + value-column resolution as the
-                # postfilter above, then the shared _post_value_map
-                src, src_stage = op[1], op[2]
-                mentions_value = (
-                    re.search(r'r\[\s*"_value"\s*\]|r\._value\b', src)
-                    is not None
-                )
-                if transform is not None and transform[0] in (
-                    "derivative", "tma", "ma",
-                ) and mentions_value:
-                    # these attested frames KEEP the original _value
-                    # beside the named result column — a map on
-                    # r._value would rewrite the wrong series
-                    raise FluxError(
-                        f"map on _value after {transform[0]} is "
-                        "ambiguous in this subset (the frame keeps the "
-                        "original _value beside the named result column "
-                        "— reference the result column explicitly): "
-                        f"{src_stage!r}"
-                    )
-                valcol = "_value"
-                if valcol not in out.columns:
-                    cand = [
-                        c
-                        for c in (
-                            yield_name,
-                            agg[1] if agg is not None else None,
-                            "integral" if transform is not None
-                            and transform[0] == "integral" else None,
-                            "time_weighted_avg" if transform is not None
-                            and transform[0] == "twa" else None,
-                            "last_value",
-                        )
-                        if c and c in out.columns
-                    ]
-                    if not cand:
-                        raise FluxError(
-                            f"map after this stage needs a value "
-                            f"column; frame has {out.columns}: "
-                            f"{src_stage!r}"
-                        )
-                    valcol = cand[0]
-                out = _post_value_map(
-                    out, valcol, src, params, list(out.columns), src_stage
-                )
-            elif op[0] == "sort":
                 pending_sort = op
             elif op[0] == "limit":
                 n = op[1]
@@ -5510,107 +4788,28 @@ def _compile_pipeline(
                     # one-table frame: TakeOrderedAndProject — a
                     # distributed top-N, never a single-partition sort
                     out = out.orderBy(*order).limit(n)
-            elif op[0] == "keep":
-                out = out.select(*op[1])
-            elif op[0] == "drop":
-                out = out.drop(*op[1])
-            elif op[0] == "fill":
-                col, mode, value = op[1][0], op[2], op[3]
-                if mode == "value":
-                    out = out.withColumn(
-                        col, F.coalesce(F.col(col), F.lit(value))
-                    )
-                else:
-                    # usePrevious: last non-null per table in table
-                    # order. The frame is an aggregated/gap-filled one
-                    # (or a raw scan), so the window runs over
-                    # bucket-spine-sized (or pruned) rows per series —
-                    # bounded by range/step, not raw volume.
-                    gk = [
-                        c for c in natural_key if c in out.columns
-                    ]
-                    ordc = next(
-                        (c for c in ("_time", "window_start") if c in out.columns),
-                        None,
-                    )
-                    if ordc is None:
-                        raise FluxError(
-                            "fill(usePrevious) needs a _time/window_start "
-                            "column to define the table order"
-                        )
-                    w = (
-                        Window.partitionBy(*gk)
-                        .orderBy(ordc)
-                        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                    )
-                    out = out.withColumn(
-                        col, F.last(col, ignorenulls=True).over(w)
-                    )
-            elif op[0] == "duplicate":
-                # in-plan column copy (upstream overwrites an existing
-                # `as` target — same here via withColumn)
-                out = out.withColumn(op[2], F.col(op[1][0]))
-            elif op[0] == "set":
-                out = out.withColumn(op[1][0], F.lit(op[2]))
-            elif op[0] == "timeshift":
-                # tail form: shift the output frame's time column(s) —
-                # the aggregated/windowed frame carries window_start,
-                # raw/transform frames carry _time, and a window()
-                # frame carries _start/_stop bounds that MUST move with
-                # _time (upstream's default timeShift columns) or the
-                # frame turns internally inconsistent
-                shift_us = op[1] * 1_000_000
-                tcols = [
-                    c
-                    for c in ("_start", "_stop", "_time", "window_start")
-                    if c in out.columns
-                ]
-                if not tcols:
-                    raise FluxError(
-                        "timeShift needs a _time/window_start column in "
-                        f"the frame; frame has {out.columns}"
-                    )
-                for c in tcols:
-                    out = out.withColumn(
-                        c,
-                        F.timestamp_micros(
-                            F.unix_micros(c) + F.lit(shift_us)
-                        ),
-                    )
-            else:  # rename
-                for old, new in op[1].items():
-                    out = out.withColumnRenamed(old, new)
+            else:
+                out = _tail_op(
+                    out,
+                    op,
+                    _value_col(out, *op) if op[0] in ("filter", "map") else None,
+                    params,
+                    natural_key,
+                )
         return out
 
-    df = bkt.scan_bucket(
-        spark,
-        path,
-        measurement=measurement,
-        field=field,
-        start=start,
-        stop=stop,
-        tags=tag_eqs or None,
+    df = _apply_row_ops(
+        bkt.scan_bucket(
+            spark,
+            path,
+            measurement=measurement,
+            field=field,
+            start=start,
+            stop=stop,
+            tags=tag_eqs or None,
+        ),
+        row_ops,
     )
-    for kind, c in row_ops:
-        if kind == "filter":
-            df = df.filter(c)
-        elif kind == "timeshift":
-            # integer-µs arithmetic: lossless for timestamps, and the
-            # shifted column feeds window bucketing exactly as Flux's
-            # shift-then-aggregate order demands
-            df = df.withColumn(
-                "_time",
-                F.timestamp_micros(F.unix_micros("_time") + F.lit(c * 1_000_000)),
-            )
-        elif kind == "truncate":
-            df = df.withColumn(
-                "_time", F.timestamp_micros(_epoch_floor_us("_time", c))
-            )
-        elif kind == "map_time":
-            # calendar truncation: an in-plan _time rewrite
-            df = df.withColumn("_time", c)
-        else:
-            df = df.withColumn("_value", c)
 
     # the Flux table key every aggregation/transform partitions on:
     # (_measurement, _field, tags...) unless a group() stage re-keyed
@@ -7089,13 +6288,6 @@ def _compile_pipeline(
     return _finish(df)
 
 
-_MAP_FN_RE = re.compile(
-    r"^\(\s*r\s*\)\s*=>\s*\(\s*\{\s*r\s+with\s+"
-    r"(\w+|\"[^\"]+\")\s*:\s*(.*?)\s*\}\s*\)\s*$",
-    re.DOTALL,
-)
-
-
 def _compile_combiner(
     spark: SparkSession,
     text: str,
@@ -7118,94 +6310,11 @@ def _compile_combiner(
     stages = _split_stages(text, require_from=False)
     head = stages[0].split("(", 1)[0].strip()
     if head == "join":
-        a = _args(stages[0], "join")
-        if "tables" not in a or "on" not in a:
-            raise FluxError(
-                "join requires tables: {a: <pipeline>, b: <pipeline>} "
-                "and an explicit on: [columns]"
-            )
-        # method: — Flux's universe join ships inner (the default);
-        # the `join` package adds left/right/full (missing side →
-        # null columns), which map 1:1 onto Spark's join types. Same
-        # scale shape for all four: one hash exchange per side on on:.
-        method = _resolve(a["method"], params) if "method" in a else "inner"
-        if method not in ("inner", "left", "right", "full"):
-            raise FluxError(
-                'join ships method: "inner" | "left" | "right" | '
-                f'"full"; got {method!r}'
-            )
-        extra = set(a) - {"tables", "on", "method"}
-        if extra:
-            raise FluxError(f"join: unsupported args {sorted(extra)}")
-        m = re.match(
-            r"^\{\s*(\w+)\s*:\s*(\w+)\s*,\s*(\w+)\s*:\s*(\w+)\s*\}$",
-            a["tables"].strip(),
-        )
-        if not m:
-            raise FluxError(
-                "join ships exactly two named tables "
-                f"{{a: <pipeline>, b: <pipeline>}}; got {a['tables']!r}"
-            )
-        la, ra, lb, rb = m.groups()
-        if la == lb:
-            raise FluxError(f"join table labels collide: {la!r}")
-        for ref in (ra, rb):
-            if ref not in env:
-                raise FluxError(
-                    f"join references unknown pipeline {ref!r} "
-                    f"(defined: {sorted(env)})"
-                )
-        on = _str_list(a["on"], "join on")
-        if not on:
-            raise FluxError("join on: column list is empty")
-        dfa, dfb = env[ra], env[rb]
-        for label, d in ((la, dfa), (lb, dfb)):
-            missing = [c for c in on if c not in d.columns]
-            if missing:
-                raise FluxError(
-                    f"join on column(s) {missing} missing from table "
-                    f"{label!r} (frame has {d.columns})"
-                )
-        # upstream join suffixes CONFLICTING non-key columns _<label>
-        for c in sorted((set(dfa.columns) & set(dfb.columns)) - set(on)):
-            dfa = dfa.withColumnRenamed(c, f"{c}_{la}")
-            dfb = dfb.withColumnRenamed(c, f"{c}_{lb}")
-        out = dfa.join(dfb, on=on, how=method)
+        la, ra, lb, rb, on, method = _parse_join(stages[0], params, env)
+        out = _join_frames(env[ra], env[rb], la, lb, on, method)
     elif head == "union":
-        a = _args(stages[0], "union")
-        if "tables" not in a:
-            raise FluxError("union requires tables: [a, b, ...]")
-        extra = set(a) - {"tables"}
-        if extra:
-            raise FluxError(f"union: unsupported args {sorted(extra)}")
-        toks = a["tables"].strip()
-        if not re.match(r"^\[\s*\w+(?:\s*,\s*\w+)*\s*\]$", toks):
-            raise FluxError(
-                f"union tables: expected [name, name, ...]; got {toks!r}"
-            )
-        refs = [t.strip() for t in toks[1:-1].split(",")]
-        if len(refs) < 2:
-            raise FluxError("union needs at least two tables")
-        frames = []
-        for ref in refs:
-            if ref not in env:
-                raise FluxError(
-                    f"union references unknown pipeline {ref!r} "
-                    f"(defined: {sorted(env)})"
-                )
-            frames.append(env[ref])
-        cols0 = set(frames[0].columns)
-        for ref, fr_ in zip(refs[1:], frames[1:]):
-            if set(fr_.columns) != cols0:
-                raise FluxError(
-                    f"union: pipeline {ref!r} columns "
-                    f"{sorted(fr_.columns)} differ from {refs[0]!r} "
-                    f"columns {sorted(cols0)} — the subset unions "
-                    "identical frames only"
-                )
-        out = frames[0]
-        for fr_ in frames[1:]:
-            out = out.unionByName(fr_)
+        refs = _parse_union(stages[0], env)
+        out = _union_frames(refs, [env[r] for r in refs])
     elif head in ("pearsonr", "cov"):
         # cov(x:, y:, on:, [pearsonr:]) and its alias pearsonr(x:, y:,
         # on:) ≡ cov(..., pearsonr: true): align the two pipelines on
@@ -7227,18 +6336,10 @@ def _compile_combiner(
                 f"{head} requires x: <pipeline>, y: <pipeline> and "
                 "on: [time column]"
             )
-        allowed = {"x", "y", "on"} | ({"pearsonr"} if head == "cov" else set())
-        extra = set(a) - allowed
-        if extra:
-            raise FluxError(f"{head}: unsupported args {sorted(extra)}")
-        as_corr = head == "pearsonr"
-        if head == "cov" and "pearsonr" in a:
-            flag = _resolve(a["pearsonr"], params)
-            if not isinstance(flag, bool):
-                raise FluxError(
-                    f"cov pearsonr: expected a boolean, got {flag!r}"
-                )
-            as_corr = flag
+        _no_extra(
+            a, {"x", "y", "on"} | ({"pearsonr"} if head == "cov" else set()), head
+        )
+        as_corr = head == "pearsonr" or _bool_arg(a, "pearsonr", params, "cov")
         on = _str_list(a["on"], f"{head} on")
         if on not in (["_time"], ["window_start"]):
             raise FluxError(
@@ -7316,23 +6417,7 @@ def _compile_combiner(
     for stage in stages[1:]:
         shead = stage.split("(", 1)[0].strip()
         if shead == "map":
-            a = _args(stage, "map")
-            if "fn" not in a or set(a) - {"fn"}:
-                raise FluxError(
-                    "map requires exactly fn: (r) => ({ r with ... })"
-                )
-            m = _MAP_FN_RE.match(a["fn"].strip())
-            if not m:
-                raise FluxError(
-                    "map ships only fn: (r) => ({ r with _value: <arith> })"
-                    f"; got {a['fn']!r}"
-                )
-            target = m.group(1).strip('"')
-            if target != "_value":
-                raise FluxError(
-                    f"map ships only the _value rewrite; got {target!r}"
-                )
-            expr_src = m.group(2)
+            expr_src = _parse_map(stage)
             for t1, t2 in re.findall(
                 r'r\.(\w+)|r\[\s*"([^"]+)"\s*\]', expr_src
             ):
